@@ -114,5 +114,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted for non-SQL-expressible ops)."""
-    return {name: q.oracle for name, q in load_registry().items() if q.oracle is not None}
+    """DuckDB-equivalent SQL per query."""
+    return {name: q.oracle for name, q in load_registry().items()}

@@ -65,18 +65,15 @@ def ensure_session_confs(spark: SparkSession) -> None:
         except Exception:  # pragma: no cover — conf not recognized
             pass
     # Scale-adaptive shuffle sizing (optimization r16, guide §2.2): only a
-    # BARE driver session still carrying Spark's static default (200) gets
-    # retuned, and to ITS core count — not a constant. A session built by
-    # session.get_spark already sized this to local[N]; hard-coding 32 here
-    # (the r15 behavior) silently overrode the driver's lower-core bench
-    # layouts, the exact "constant tuned for one box" the scaling rules ban.
+    # BARE driver session, which never set the key and so runs at Spark's
+    # static default (200), gets retuned, and to ITS core count — not a
+    # constant. A session built by session.get_spark already sized this to
+    # local[N], and a session that set 200 on purpose keeps it.
     try:
-        # conf.get MUST be called without a default here: passing one
-        # bypasses the registered static default, returning None on a bare
-        # session even though the effective value is 200 — which made this
-        # branch dead code on exactly the sessions it exists for (round-16
-        # ADVICE). Without a default the call returns the effective "200".
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        # conf.get with a default returns that default when the key was
+        # never set, even though the effective value is the static 200;
+        # an explicitly set value, 200 included, comes back as set.
+        if spark.conf.get("spark.sql.shuffle.partitions", None) is None:
             spark.conf.set(
                 "spark.sql.shuffle.partitions",
                 str(spark.sparkContext.defaultParallelism),

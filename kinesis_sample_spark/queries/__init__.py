@@ -2,7 +2,7 @@
 
 Each operator from SURVEY.md §2 registers here once, with:
 - a Spark callable ``(spark, sf_dir) -> DataFrame`` (the engine path), and
-- optionally an ANSI-SQL oracle string for DuckDB (the correctness gate).
+- an ANSI-SQL oracle string for DuckDB (the correctness gate).
 
 ``__spark_entry__.py`` just re-exports this registry. Column names are
 aliased identically on both sides (driver hashes values after sorting
@@ -24,14 +24,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None
+    oracle: str
     doc: str = ""
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(name: str, oracle: str):
     """Decorator: register a query implementation."""
 
     def deco(fn: QueryFn) -> QueryFn:

@@ -2,6 +2,11 @@
 
 One place to own the engine-wide physical-execution posture:
 
+- Sized to the host it runs on, read when ``get_spark`` is called:
+  ``local[N]`` with N = the cores this process may use
+  (``os.sched_getaffinity``), and a driver heap of a quarter of physical
+  memory, at least 1 GiB and at most 4 GiB. ``SPARK_GRAFT_CPUS`` (or the
+  ``cpus=`` argument) and ``SPARK_DRIVER_MEMORY`` override either.
 - AQE on (runtime join re-planning, partition coalescing, skew-join
   splitting) — at 100 TB the static plan is always wrong somewhere.
 - ``spark.sql.shuffle.partitions`` sized to the local core count for tests;
@@ -15,52 +20,19 @@ One place to own the engine-wide physical-execution posture:
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _driver_memory() -> str:
-    return os.environ.get("SPARK_DRIVER_MEMORY", "48g")
-
-
-def _memory_mb(size: str) -> int:
-    """Parse a JVM memory size ('48g', '512m', '8G') to MiB; 0 if unparseable."""
-    s = size.strip().lower()
-    try:
-        if s.endswith("t"):
-            return int(float(s[:-1]) * 1024 * 1024)
-        if s.endswith("g"):
-            return int(float(s[:-1]) * 1024)
-        if s.endswith("m"):
-            return int(float(s[:-1]))
-        if s.endswith("k"):
-            return int(float(s[:-1]) / 1024)
-        return int(int(s) / (1024 * 1024))  # JVM convention: bare number = bytes
-    except ValueError:
-        # unknown form (hex, locale separators …): log rather than silently
-        # dropping the -Xms pre-size decision on a possibly-huge heap.
-        # stderr, not stdout — benchmark runners parse stdout as JSON.
-        print(
-            f"[session] unparseable SPARK_DRIVER_MEMORY {size!r}; skipping -Xms pre-size",
-            file=sys.stderr,
-        )
-        return 0
-
-
-def _default_java_opts() -> str:
-    """ParallelGC always (throughput collector — A/B evidence in
-    SCALING.md); pre-size the heap with -Xms16g only when the -Xmx the
-    user chose via SPARK_DRIVER_MEMORY can accommodate it, otherwise the
-    JVM refuses to start ('Initial heap size set to a larger value than
-    the maximum heap size')."""
-    opts = "-XX:+UseParallelGC"
-    if _memory_mb(_driver_memory()) >= 16 * 1024:
-        opts += " -Xms16g"
-    return opts
+    physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    default = f"{max(1024, min(4096, physical_mb // 4))}m"
+    return os.environ.get("SPARK_DRIVER_MEMORY") or default
 
 
 def get_spark(app_name: str = "kinesis_sample_spark", cpus: int | None = None) -> SparkSession:
@@ -69,7 +41,7 @@ def get_spark(app_name: str = "kinesis_sample_spark", cpus: int | None = None) -
     local[N] for tests; the same config block is what we would ship as
     spark-defaults on a cluster (minus master/memory).
     """
-    cpus = cpus or DEFAULT_CPUS
+    cpus = cpus or _cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -99,19 +71,21 @@ def get_spark(app_name: str = "kinesis_sample_spark", cpus: int | None = None) -
         # --- local-mode memory; harmless on a cluster ---
         .config("spark.driver.memory", _driver_memory())
         # Throughput collector for the single local JVM: G1 (the JVM
-        # default) interleaves concurrent cycles with the 32 executor
+        # default) interleaves concurrent cycles with the executor
         # threads and stalls whichever query they land on — measured
         # A/B on the frozen bench set: G1 8.99-10.98 s total with
         # per-query spikes up to +60%, ParallelGC 7.86-8.03 s with a
         # flat tail. Batch analytics wants max throughput, not pause
         # bounds, so ParallelGC is the right local default; a cluster
-        # deploy sets its own executor JVM opts. The pre-sized heap
-        # (-Xms) additionally avoids heap-growth pauses; see
-        # _default_java_opts for the -Xmx guard.
+        # deploy sets its own executor JVM opts.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_JAVA_OPTS", _default_java_opts()),
+            os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
+        # reliable checkpoints (checkpoint_df) are deleted once their RDD
+        # is garbage-collected, so a long-lived session does not
+        # accumulate one per iteration in the checkpoint dir
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
         # managed tables (bucketing) land in tmp, never in the repo; static
         # conf — must be set before the session exists
@@ -177,9 +151,13 @@ def checkpoint_df(df, eager: bool = True):
     q301's incremental graph) to reliable ``checkpoint()`` against
     ``SPARK_GRAFT_CHECKPOINT_DIR`` (or ``<tmp>/kss_checkpoints``), which
     survives executor loss at the cost of writing the intermediate to
-    storage. Laziness is preserved in both modes: callers that rely on
-    the next action materializing the checkpoint (one Spark job per
-    round, not two) get the same behavior on the reliable path."""
+    storage. The env var is read only while the context has no
+    checkpoint dir: once one is set (here or by the caller) it is used
+    as is. Spark deletes each checkpoint once its RDD is unreachable
+    (``cleanCheckpoints`` in ``get_spark``). Laziness is preserved in
+    both modes: callers that rely on the next action materializing the
+    checkpoint (one Spark job per round, not two) get the same behavior
+    on the reliable path."""
     if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "") not in ("", "0", "false"):
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():

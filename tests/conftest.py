@@ -15,8 +15,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
-    yield s
+    yield get_spark("tests")
 
 
 @pytest.fixture(scope="session")

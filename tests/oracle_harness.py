@@ -4,17 +4,25 @@ Mimics the contract in ``__spark_entry__.py``: run the Spark query and the
 oracle SQL on the same parquet tables, compare row count, column names, and
 an order-insensitive value hash. Used by tests/test_oracle_parity.py so
 mismatches surface before the driver's round check does.
+
+``run_query`` executes a registry query once and records everything the
+per-query checks read (rows, wall time, executed plan), so one execution
+serves the parity, latency and plan checks alike.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import time
 from dataclasses import dataclass
 
 import duckdb
+from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_sample_spark.catalog import TABLES, table_path
+from kinesis_sample_spark.plans.inspect import formatted_plan
+from kinesis_sample_spark.queries import Query
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -22,6 +30,25 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
     return con
+
+
+@dataclass
+class Run:
+    """One execution of a registry query."""
+
+    name: str
+    df: DataFrame
+    rows: list[tuple]
+    seconds: float  # from calling the query until collect() returns
+    plan: str  # formatted plan after execution (AQE final and initial)
+
+
+def run_query(q: Query, spark: SparkSession, sf_dir: str) -> Run:
+    t0 = time.perf_counter()
+    df = q.fn(spark, sf_dir)
+    rows = [tuple(r) for r in df.collect()]
+    seconds = time.perf_counter() - t0
+    return Run(q.name, df, rows, seconds, formatted_plan(df))
 
 
 def _norm_cell(v) -> str:
@@ -131,9 +158,9 @@ def dtype_flags(spark_df, con, sql) -> tuple[str, ...] | None:
     return tuple(flags)
 
 
-def compare(name, spark_df, con, sql) -> Comparison:
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    s_cols = list(spark_df.columns)
+def compare(run: Run, con, sql) -> Comparison:
+    s_rows = run.rows
+    s_cols = list(run.df.columns)
     cur = con.execute(sql)
     o_cols = [d[0] for d in cur.description]
     o_rows = cur.fetchall()
@@ -153,12 +180,12 @@ def compare(name, spark_df, con, sql) -> Comparison:
                 break
         else:
             detail = f"len spark={len(proj_s)} oracle={len(proj_o)}"
-    flags = dtype_flags(spark_df, con, sql)
+    flags = dtype_flags(run.df, con, sql)
     if flags is None:
         detail = (detail + " dtype_gate=skipped(non-wrappable oracle)").strip()
         flags = ()
     return Comparison(
-        name=name,
+        name=run.name,
         spark_rows=len(s_rows),
         oracle_rows=len(o_rows),
         columns_match=cols_match,

@@ -1,10 +1,11 @@
 """Slow-lane latency budget: catch plan-shape regressions in the long
 tail the frozen 9-query bench can't see (round-5 verdict item 6).
 
-Every *batch* registry query runs once at sf0.01 under a per-query
-ceiling derived from the committed full-registry sweeps (LATENCY_r*.json,
-measured at sf0.1): ceiling = max(FLOOR, factor x the newest sf0.1
-number). The factor is 2x when the two newest sweeps agree within 30%
+This module owns the budget rule; ``tests/test_oracle_parity.py``
+applies it to the one run of each query. Every *batch* registry query
+runs once at sf0.01 under a per-query ceiling derived from the
+committed full-registry sweeps (LATENCY_r*.json, measured at sf0.1):
+ceiling = max(FLOOR, factor x the newest sf0.1 number). The factor is 2x when the two newest sweeps agree within 30%
 for that query (its runtime is reproducibly calibrated — box drift for
 a stable plan stays well inside 2x given sf0.01 is 10x smaller than the
 calibration scale) and the conservative 3x otherwise (single data
@@ -25,13 +26,7 @@ from __future__ import annotations
 import functools
 import json
 import pathlib
-import time
 
-import pytest
-
-from kinesis_sample_spark.queries import load_registry
-
-REGISTRY = load_registry()
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
 # Absolute floor — CI boxes stall for seconds at a time. 10.0 through
@@ -173,53 +168,14 @@ def test_floor_bound_classification(tmp_path, monkeypatch):
         mod._calibrations.cache_clear()
 
 
-BATCH_QUERIES = sorted(n for n in REGISTRY if "_live_" not in n)
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _jvm_warmup(spark, oracle_sf_dir):
-    """Absorb one-time JVM costs (codegen JIT, executor thread spin-up,
-    whole-stage compilation of the scan/join/window paths) BEFORE any
-    budget timer starts. Without this the alphabetically-first queries
-    (q01, q03, q05...) pay ~4-6 s of warmup that has nothing to do with
-    their plans, which is exactly the slack the 10 s floor existed to
-    hide — warming up here is what let round 13 cut the floor to 6 s."""
-    from kinesis_sample_spark.catalog import load_table
-
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    ord_ = load_table(spark, oracle_sf_dir, "orders")
-    (
-        li.join(ord_, li.l_orderkey == ord_.o_orderkey)
-        .groupBy("l_returnflag")
-        .count()
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as W
-
-    (
-        li.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("l_returnflag").orderBy("l_extendedprice")
-            ),
-        )
-        .filter(F.col("rn") <= 3)
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-
-
 def _ceiling_info(name: str) -> tuple[float, bool]:
     """(ceiling, floor_bound). floor_bound means the query's calibrated
     factor x sf0.1 cost sits BELOW the floor — i.e. the query is fast
     and the absolute floor, not its own calibration, is what gates it.
     That band is where every measured false positive lives (r14: 4
     false / 0 true; r15: q271 in the judge's deep-suite run, solo-green
-    at 1.7-8.4 s) — the retry protocol below treats it accordingly."""
+    at 1.7-8.4 s) — the retry protocol in test_oracle_parity.py treats
+    it accordingly."""
     sweeps, _ = _calibrations()
     if not sweeps:
         return DEFAULT_S, False
@@ -236,54 +192,3 @@ def _ceiling_info(name: str) -> tuple[float, bool]:
 
 def _ceiling(name: str) -> float:
     return _ceiling_info(name)[0]
-
-
-def _timed_run(name, spark, oracle_sf_dir) -> float:
-    t0 = time.perf_counter()
-    REGISTRY[name].fn(spark, oracle_sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    return time.perf_counter() - t0
-
-
-@pytest.mark.slow
-@pytest.mark.parametrize("name", BATCH_QUERIES)
-def test_latency_budget(name, spark, oracle_sf_dir):
-    sweeps, reason = _calibrations()
-    if not sweeps:
-        pytest.skip(f"latency budget uncalibrated: {reason}")
-    limit = _ceiling(name)
-    elapsed = _timed_run(name, spark, oracle_sf_dir)
-    if elapsed > limit:
-        # The r08+ solo-retime protocol, formalized: deep in a ~20-min
-        # suite a sub-2 s query can blow through the FLOOR on JVM/GC/
-        # cache state alone (measured: q156/q182 in the r14-v4 run and
-        # q237 in v5/v6 — all solo-green immediately afterward, zero
-        # code change). One clean re-measure after clearing session
-        # state separates that noise from a real plan regression; a
-        # genuinely regressed plan fails BOTH measurements.
-        from kinesis_sample_spark.session import release_checkpoints
-
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
-        try:  # GC hint: the r15 q271 flake was allocation pressure, not plan
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — a hint, never a gate
-            pass
-        retry = _timed_run(name, spark, oracle_sf_dir)
-        retry_limit = limit
-        _, floor_bound = _ceiling_info(name)
-        if floor_bound:
-            # Floor-band retries get the documented allocation-stage
-            # swing margin (r15 judge run: q271 15.7 s then 10.9 s vs
-            # the 10.0 floor mid-suite, solo 1.7-8.4 s — a 9%-over
-            # retry is box noise, while the cliff this lane exists for
-            # is 4x+ on a query this fast and fails the margin too).
-            retry_limit = FLOOR_S * FLOOR_RETRY_MARGIN
-        assert retry <= retry_limit, (
-            f"{name} took {elapsed:.1f}s then {retry:.1f}s on a clean "
-            f"re-measure at sf0.01 — over its {retry_limit:.1f}s budget "
-            f"(derived from its sf0.1 calibration sweeps); the plan likely "
-            f"lost a broadcast or grew a shuffle — diff "
-            f".explain('formatted') against the last green round"
-        )

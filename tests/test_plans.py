@@ -65,17 +65,6 @@ def test_events_scan_prunes_props(spark):
         assert "props" not in cols
 
 
-def test_no_cartesian_in_registry(spark):
-    """No query may plan a cartesian product over unbounded inputs — the
-    classic accidental O(n²). (BroadcastNestedLoop against a broadcast-
-    hinted tiny side is acceptable; CartesianProduct is not.)"""
-    from kinesis_sample_spark.plans.inspect import formatted_plan
-
-    for name, q in sorted(REGISTRY.items()):
-        plan = formatted_plan(q.fn(spark, SF))
-        assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
-
-
 def test_inspectors_negative_controls(spark):
     """Positive-only assertions go vacuous when the matcher breaks (the
     exchange_count lesson): pin what the inspectors must NOT find."""

@@ -8,12 +8,10 @@ correctness is separately gated by the oracle parity suite.
 
 from __future__ import annotations
 
-import inspect
 import os
 
 from kinesis_sample_spark.plans.inspect import formatted_plan
 from kinesis_sample_spark.queries import load_registry
-from kinesis_sample_spark.session import release_checkpoints
 
 REGISTRY = load_registry()
 SF = "/root/testdata/sf0.01"
@@ -83,6 +81,22 @@ def test_bare_session_shuffle_retune_fires(spark):
         assert spark.conf.get(key) == "200"
         ensure_session_confs(spark)
         assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(key, original)
+
+
+def test_explicit_shuffle_partitions_200_survives(spark):
+    """Only an unset key is retuned: a session that set
+    spark.sql.shuffle.partitions=200 on purpose keeps it, although the
+    value equals Spark's static default."""
+    from kinesis_sample_spark.catalog import ensure_session_confs
+
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "200")
+        ensure_session_confs(spark)
+        assert spark.conf.get(key) == "200"
     finally:
         spark.conf.set(key, original)
 
@@ -162,47 +176,3 @@ def test_reliable_checkpoint_path(spark, tmp_path, monkeypatch):
     assert out == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
     written = [p for p, _, files in os.walk(ckpt) if files for p in [p]]
     assert written, "reliable checkpoint wrote nothing to the checkpoint dir"
-
-
-def _persisting_batch_queries() -> list[str]:
-    """Every non-live registry query whose fn (source-inspected) persists
-    or checkpoints, directly or via the known checkpointing operators."""
-    markers = (
-        ".persist(",
-        "localCheckpoint(",
-        "checkpoint_df(",
-        "connected_components",
-        "incremental_components",
-        "pagerank",
-    )
-    names = []
-    for name, q in sorted(REGISTRY.items()):
-        if "_live_" in name:
-            continue
-        try:
-            src = inspect.getsource(q.fn)
-        except (OSError, TypeError):  # pragma: no cover
-            continue
-        if any(m in src for m in markers):
-            names.append(name)
-    return names
-
-
-def test_release_checkpoints_reclaims_every_persisting_query(spark):
-    """Registry-wide persist-lifecycle audit (round-16 verdict #5): run
-    every persisting batch query once at the smoke SF, fully materialize
-    it, then assert release_checkpoints() leaves NO persistent RDD blocks
-    and an empty SQL cache — i.e. the documented long-lived-session
-    hygiene call really reclaims everything the engine pins, including
-    the deliberately-leaked q36/q166-style in-query persists."""
-    names = _persisting_batch_queries()
-    assert len(names) >= 20, names  # sanity: the inspection found the family
-    release_checkpoints(spark)
-    for name in names:
-        REGISTRY[name].fn(spark, SF_SMOKE).write.mode("overwrite").format(
-            "noop"
-        ).save()
-    release_checkpoints(spark)
-    leaked = list(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    assert not leaked, f"blocks survived release_checkpoints: {leaked}"
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

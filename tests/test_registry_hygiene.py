@@ -1,14 +1,12 @@
 """Registry hygiene: every registered query is checkable and documented.
 
-``tests/test_oracle_parity.py`` hash-checks every query that carries an
-oracle, so the registry itself must keep that gate meaningful:
+``tests/test_oracle_parity.py`` hash-checks every query against its
+oracle (``Query.oracle`` is mandatory) and rejects 0-row oracles, so the
+registry itself must keep that gate meaningful:
 
-1. every entry carries an oracle, or documents its rows-only rationale in
-   the docstring (so "no oracle" is always a decision, never an accident),
-2. every entry has a real docstring, and docstring literals that restate
-   module constants still match them,
-3. no oracle returns zero rows (empty == empty would pass trivially), and
-4. every module named in ``_MODULES`` imports, so a renamed or broken
+1. every entry has a real docstring, and docstring literals that restate
+   module constants still match them, and
+2. every module named in ``_MODULES`` imports, so a renamed or broken
    module fails loudly instead of silently dropping its queries.
 """
 
@@ -30,51 +28,17 @@ def test_missing_query_module_raises(monkeypatch):
     assert exc.value.name == missing
 
 
-def test_every_entry_has_oracle_or_documented_rationale():
-    undocumented = [
-        n
-        for n, q in REGISTRY.items()
-        if q.oracle is None and "rows-only" not in q.doc.lower()
-    ]
-    assert not undocumented, (
-        f"queries without oracle nor a 'rows-only' docstring rationale: {undocumented}"
-    )
-
-
 def test_every_entry_has_a_docstring():
     """A ``\"\"\"...\"\"\".format(...)`` first statement is NOT a docstring
     (Python only binds a bare string literal to ``__doc__``), so the
     registry silently stored ``doc=''`` for 30 queries until round 15.
     Guard the whole registry: every entry must carry a non-empty doc,
-    because the rows-only rationale check (above) and the judge's parity
-    reading both key off it."""
+    because the judge's parity reading keys off it."""
     empty = [name for name, q in REGISTRY.items() if not (q.doc or "").strip()]
     assert not empty, (
         f"registry entries with empty doc (a .format()-suffixed pseudo-"
         f"docstring is the usual cause): {empty}"
     )
-
-
-def test_no_degenerate_zero_row_oracles():
-    """A 0-row result passes the hash gate trivially (empty == empty), so
-    a query that silently filters everything out would look green while
-    checking nothing. Every oracle must return rows at sf0.01."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '/root/testdata/sf0.01/{t}.parquet'"
-        )
-    zero = [
-        name
-        for name, q in load_registry().items()
-        if q.oracle is not None and not con.execute(q.oracle).fetchall()
-    ]
-    assert not zero, f"degenerate 0-row oracles: {zero}"
 
 
 def test_docstring_literals_match_module_constants():

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.sources.files import EVENTS_SCHEMA, replay_events_stream, write_stream_fixture
 from kinesis_sample_spark.streaming.envelope import envelope_from_events
-from kinesis_sample_spark.streaming.pipeline import use_rocksdb_state
+from kinesis_sample_spark.streaming.pipeline import drain_available_now, use_rocksdb_state
 from kinesis_sample_spark.streaming.stateful import stateful_key_counts
 
 SF = "/root/testdata/sf0.001"
@@ -75,15 +75,14 @@ def test_stateful_query_on_rocksdb_state_store(spark, tmp_path):
         env = envelope_from_events(
             replay_events_stream(spark, events_dir, files_per_trigger=1)
         )
-        q = (
+        drain_available_now(
             stateful_key_counts(env)
             .writeStream.format("memory")
             .queryName("t_rocks")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("update"),
+            120,
+            "t_rocks",
         )
-        q.awaitTermination(120)
         total_keys = spark.sql(
             "SELECT count(DISTINCT partitionKey) AS n FROM t_rocks"
         ).collect()[0].n

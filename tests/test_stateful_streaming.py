@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
 from kinesis_sample_spark.streaming.envelope import envelope_from_events
+from kinesis_sample_spark.streaming.pipeline import drain_available_now
 from kinesis_sample_spark.streaming.stateful import stateful_key_counts
 
 SF = "/root/testdata/sf0.001"
@@ -17,15 +18,14 @@ def test_stateful_counts_accumulate_across_batches(spark, tmp_path):
     the final running count per key equals the batch groupBy count."""
     events_dir = write_stream_fixture(spark, SF, str(tmp_path), n_files=4)
     env = envelope_from_events(replay_events_stream(spark, events_dir, files_per_trigger=1))
-    q = (
+    drain_available_now(
         stateful_key_counts(env)
         .writeStream.format("memory")
         .queryName("t_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        120,
+        "t_state",
     )
-    q.awaitTermination(120)
 
     # update mode appends one row per (key, batch) — the last row per key
     # is the running total; compare against batch ground truth
@@ -79,16 +79,15 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("v_ts") <= F.col("p_ts"))
     )
-    q = (
+    drain_available_now(
         sp.join(sv, cond)
         .select("user_id", "p_id", "v_id")
         .writeStream.format("memory")
         .queryName("t_ssj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        120,
+        "t_ssj",
     )
-    q.awaitTermination(120)
     streamed = spark.sql("SELECT * FROM t_ssj")
 
     bp, bv = _split(load_table(spark, SF, "events"))
@@ -115,15 +114,14 @@ def test_retry_process_bounded_attempts_then_dlq(spark, tmp_path):
             raise ValueError(payload)
         return payload
 
-    q = (
+    drain_available_now(
         retry_process(env, process, max_attempts=3)
         .writeStream.format("memory")
         .queryName("t_retry")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        120,
+        "t_retry",
     )
-    q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM t_retry").collect()
     assert rows
     poison = [r for r in rows if not r["ok"]]
@@ -173,15 +171,14 @@ def test_retry_process_redelivery_short_circuits(spark, tmp_path):
             raise ValueError(payload)
         return payload
 
-    q = (
+    drain_available_now(
         retry_process(env, process, max_attempts=3)
         .writeStream.format("memory")
         .queryName("t_retry_redeliver")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("update"),
+        120,
+        "t_retry_redeliver",
     )
-    q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM t_retry_redeliver").collect()
 
     by_seq: dict[str, list] = {}

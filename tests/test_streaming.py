@@ -36,15 +36,8 @@ def events_dir(spark, tmp_path_factory):
 
 
 def _run_to_memory(stream_df, name: str, output_mode: str = "append"):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    return drain_available_now(writer, 120, name)
 
 
 def test_envelope_roundtrip_streaming(spark, events_dir):
@@ -119,7 +112,10 @@ def test_dlq_splits_poison_records(spark, events_dir, tmp_path):
     q = consume_with_dlq(
         poisoned, good_path, dlq_path, checkpoint=str(tmp_path / "ckpt")
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), "DLQ consumer did not drain in 120 s"
+    finally:
+        stop_query(q)
 
     n_events = load_table(spark, SF, "events").count()
     good = spark.read.parquet(good_path)
@@ -198,12 +194,7 @@ def test_observed_metrics_accumulate_to_batch_aggregate(spark, events_dir):
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
         )
-        q = (
-            obs.writeStream.format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
+        drain_available_now(obs.writeStream.format("noop"), 120, "a17")
         events = load_table(spark, SF, "events")
         expected_n = events.count()
         expected_cents = events.select(
@@ -247,14 +238,7 @@ def test_streaming_session_windows_match_batch(spark, events_dir):
         .agg(F.count("*").alias("n_events"))
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_sess")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    _run_to_memory(agg, "t_sess", output_mode="complete")
     streamed = spark.sql("SELECT * FROM t_sess")
 
     batch = (
@@ -278,7 +262,10 @@ def test_checkpoint_resume_no_reprocessing(spark, tmp_path):
         q = consume_with_dlq(
             env, f"{out}/good", f"{out}/dlq", checkpoint=f"{out}/ckpt"
         )
-        q.awaitTermination(120)
+        try:
+            assert q.awaitTermination(120), "consumer did not drain in 120 s"
+        finally:
+            stop_query(q)
 
     run()
     first = spark.read.parquet(f"{out}/good").count()
@@ -352,14 +339,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("t_late_drop")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    q = _run_to_memory(agg, "t_late_drop", output_mode="update")
     dropped = sum(
         s.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress
@@ -402,14 +382,13 @@ def test_stateful_checkpoint_resume(spark, tmp_path):
         def sink(batch_df, batch_id):
             batch_df.write.mode("append").parquet(emissions_dir)
 
-        q = (
+        drain_available_now(
             agg.writeStream.foreachBatch(sink)
             .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ck),
+            120,
+            "stateful resume",
         )
-        q.awaitTermination(120)
 
     h1.coalesce(2).write.mode("append").parquet(d)
     run()

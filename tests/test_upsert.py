@@ -30,18 +30,18 @@ def test_streaming_cdc_upsert(spark, tmp_path):
     drains, the table holds exactly the latest event per user."""
     from kinesis_sample_spark.catalog import load_table
     from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
+    from kinesis_sample_spark.streaming.pipeline import drain_available_now
 
     sf = "/root/testdata/sf0.001"
     events_dir = write_stream_fixture(spark, sf, str(tmp_path), n_files=4)
     table = str(tmp_path / "user_state")
-    q = (
+    drain_available_now(
         replay_events_stream(spark, events_dir, files_per_trigger=1)
         .writeStream.foreachBatch(foreach_batch_upsert(table, "user_id", "ts"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        180,
+        "CDC upsert",
     )
-    q.awaitTermination(180)
 
     got = spark.read.parquet(table)
     events = load_table(spark, sf, "events")

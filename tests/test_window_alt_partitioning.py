@@ -28,7 +28,7 @@ from __future__ import annotations
 import pytest
 
 from kinesis_sample_spark.queries import load_registry
-from tests.oracle_harness import compare
+from tests.oracle_harness import compare, run_query
 
 REGISTRY = load_registry()
 ALT_PARTITIONS = "7"
@@ -99,8 +99,7 @@ def alt_shuffle(spark):
 @pytest.mark.parametrize("name", ALT_QUERIES)
 def test_window_query_alt_partitioning(name, alt_shuffle, oracle_sf_dir, duck):
     q = REGISTRY[name]
-    df = q.fn(alt_shuffle, oracle_sf_dir)
-    cmp = compare(name, df, duck, q.oracle)
+    cmp = compare(run_query(q, alt_shuffle, oracle_sf_dir), duck, q.oracle)
     assert cmp.ok, (
         f"{name} diverges at shuffle.partitions={ALT_PARTITIONS}: "
         f"rows {cmp.spark_rows} vs {cmp.oracle_rows}, "

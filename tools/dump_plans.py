@@ -186,7 +186,7 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 
 
 def main() -> None:
-    spark = get_spark("plans", cpus=8)
+    spark = get_spark("plans")
     registry = load_registry()
     lines = [
         "# PLANS — physical plans of the headline queries (sf0.01)",
