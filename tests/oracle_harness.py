@@ -7,7 +7,9 @@ mismatches surface before the driver's round check does.
 
 ``run_query`` executes a registry query once and records everything the
 per-query checks read (rows, wall time, executed plan), so one execution
-serves the parity, latency and plan checks alike.
+serves the parity, latency and plan checks alike. ``check_query`` runs
+it, compares it with the oracle and releases what it persisted, keeping
+only the small ``Checked`` record those checks assert on.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from kinesis_sample_spark.catalog import TABLES, table_path
 from kinesis_sample_spark.plans.inspect import formatted_plan
 from kinesis_sample_spark.queries import Query
+from kinesis_sample_spark.session import release_checkpoints
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -195,3 +198,30 @@ def compare(run: Run, con, sql) -> Comparison:
         detail=detail,
         dtype_flags=flags,
     )
+
+
+@dataclass(frozen=True)
+class Checked:
+    """One execution of a registry query, reduced to what the per-query
+    gates assert on (no DataFrame, no rows), so a test session can keep
+    one for every query."""
+
+    name: str
+    seconds: float
+    plan: str
+    cmp: Comparison
+    leaked: tuple  # persistent RDD ids left after release_checkpoints
+    cache_empty: bool  # SQL cache manager empty after release_checkpoints
+
+
+def check_query(q: Query, spark: SparkSession, sf_dir: str, con) -> Checked:
+    """Run ``q`` once, compare it with its oracle, then release everything
+    it persisted or checkpointed and record what survived the release."""
+    try:
+        run = run_query(q, spark, sf_dir)
+        cmp = compare(run, con, q.oracle)
+    finally:
+        release_checkpoints(spark)
+    leaked = tuple(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return Checked(q.name, run.seconds, run.plan, cmp, leaked, cache_empty)

@@ -2,138 +2,43 @@
 
 This is a local replica of the driver's t2 correctness gate, plus the
 checks that need the same execution. One run of each query
-(``oracle_harness.run_query``) feeds, in order:
+(``oracle_harness.check_query``, shared through the ``registry_check``
+fixture) feeds, in order:
 
 1. the plan gate: no ``CartesianProduct`` — the classic accidental
    O(n²). (BroadcastNestedLoop against a broadcast-hinted tiny side is
    acceptable; CartesianProduct is not.)
-2. the latency budget of ``tests/test_latency_budget.py`` (batch queries
-   only), with its clean re-measure retry;
-3. the oracle hash compare against DuckDB;
-4. a non-degenerate oracle: a 0-row result passes the hash gate
+2. the oracle hash compare against DuckDB;
+3. a non-degenerate oracle: a 0-row result passes the hash gate
    trivially (empty == empty), so every oracle must return rows;
-5. the persist lifecycle: ``release_checkpoints`` leaves no persistent
+4. the persist lifecycle: ``release_checkpoints`` leaves no persistent
    RDD blocks and an empty SQL cache, whatever the query persisted or
    checkpointed — the long-lived-session hygiene call really reclaims
    everything the engine pins.
+
+``tests/test_latency_budget.py`` times the same run against its budget.
 """
 
 from __future__ import annotations
 
-import warnings
-
 import pytest
 
 from kinesis_sample_spark.queries import load_registry
-from kinesis_sample_spark.session import release_checkpoints
-from tests.oracle_harness import compare, run_query
-from tests.test_latency_budget import (
-    FLOOR_RETRY_MARGIN,
-    FLOOR_S,
-    _calibrations,
-    _ceiling,
-    _ceiling_info,
-)
 
 REGISTRY = load_registry()
 
 
-@pytest.fixture(scope="module", autouse=True)
-def _jvm_warmup(spark, oracle_sf_dir):
-    """Absorb one-time JVM costs (codegen JIT, executor thread spin-up,
-    whole-stage compilation of the scan/join/window paths) BEFORE any
-    budget timer starts. Without this the alphabetically-first queries
-    (q01, q03, q05...) pay ~4-6 s of warmup that has nothing to do with
-    their plans, which is exactly the slack the 10 s floor existed to
-    hide — warming up here is what let round 13 cut the floor to 6 s."""
-    from kinesis_sample_spark.catalog import load_table
-
-    li = load_table(spark, oracle_sf_dir, "lineitem")
-    ord_ = load_table(spark, oracle_sf_dir, "orders")
-    (
-        li.join(ord_, li.l_orderkey == ord_.o_orderkey)
-        .groupBy("l_returnflag")
-        .count()
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window as W
-
-    (
-        li.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("l_returnflag").orderBy("l_extendedprice")
-            ),
-        )
-        .filter(F.col("rn") <= 3)
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-
-
-def _check_latency(name, elapsed, spark, oracle_sf_dir):
-    sweeps, reason = _calibrations()
-    if not sweeps:
-        warnings.warn(f"latency budget uncalibrated: {reason}")
-        return
-    limit = _ceiling(name)
-    if elapsed > limit:
-        # The r08+ solo-retime protocol, formalized: deep in a ~20-min
-        # suite a sub-2 s query can blow through the FLOOR on JVM/GC/
-        # cache state alone (measured: q156/q182 in the r14-v4 run and
-        # q237 in v5/v6 — all solo-green immediately afterward, zero
-        # code change). One clean re-measure after clearing session
-        # state separates that noise from a real plan regression; a
-        # genuinely regressed plan fails BOTH measurements.
-        release_checkpoints(spark)
-        spark.catalog.clearCache()
-        try:  # GC hint: the r15 q271 flake was allocation pressure, not plan
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — a hint, never a gate
-            pass
-        retry = run_query(REGISTRY[name], spark, oracle_sf_dir).seconds
-        retry_limit = limit
-        _, floor_bound = _ceiling_info(name)
-        if floor_bound:
-            # Floor-band retries get the documented allocation-stage
-            # swing margin (r15 judge run: q271 15.7 s then 10.9 s vs
-            # the 10.0 floor mid-suite, solo 1.7-8.4 s — a 9%-over
-            # retry is box noise, while the cliff this lane exists for
-            # is 4x+ on a query this fast and fails the margin too).
-            retry_limit = FLOOR_S * FLOOR_RETRY_MARGIN
-        assert retry <= retry_limit, (
-            f"{name} took {elapsed:.1f}s then {retry:.1f}s on a clean "
-            f"re-measure at sf0.01 — over its {retry_limit:.1f}s budget "
-            f"(derived from its sf0.1 calibration sweeps); the plan likely "
-            f"lost a broadcast or grew a shuffle — diff "
-            f".explain('formatted') against the last green round"
-        )
-
-
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_oracle_parity(name, spark, oracle_sf_dir, duck):
-    q = REGISTRY[name]
-    try:
-        run = run_query(q, spark, oracle_sf_dir)
-        assert "CartesianProduct" not in run.plan, f"{name} plans a cartesian product"
-        # live streaming queries' time is fixed MicroBatchExecution
-        # startup per incarnation, not data volume: no data-scale budget
-        if "_live_" not in name:
-            _check_latency(name, run.seconds, spark, oracle_sf_dir)
-        cmp = compare(run, duck, q.oracle)
-        assert cmp.ok, (
-            f"{name}: rows {cmp.spark_rows} vs {cmp.oracle_rows}, "
-            f"cols_match={cmp.columns_match} ({cmp.spark_cols} vs {cmp.oracle_cols}), "
-            f"hash_match={cmp.hash_match} {cmp.detail} "
-            f"dtype_flags={list(cmp.dtype_flags)}"
-        )
-        assert cmp.oracle_rows > 0, f"{name}: degenerate 0-row oracle"
-    finally:
-        release_checkpoints(spark)
-    leaked = list(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    assert not leaked, f"blocks survived release_checkpoints: {leaked}"
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+def test_oracle_parity(name, registry_check):
+    c = registry_check(name)
+    assert "CartesianProduct" not in c.plan, f"{name} plans a cartesian product"
+    cmp = c.cmp
+    assert cmp.ok, (
+        f"{name}: rows {cmp.spark_rows} vs {cmp.oracle_rows}, "
+        f"cols_match={cmp.columns_match} ({cmp.spark_cols} vs {cmp.oracle_cols}), "
+        f"hash_match={cmp.hash_match} {cmp.detail} "
+        f"dtype_flags={list(cmp.dtype_flags)}"
+    )
+    assert cmp.oracle_rows > 0, f"{name}: degenerate 0-row oracle"
+    assert not c.leaked, f"blocks survived release_checkpoints: {list(c.leaked)}"
+    assert c.cache_empty
