@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json). ``tests/test_oracle_parity.py``
+value-hash). ``tests/test_oracle_parity.py``
 runs the same comparison over every registered query.
 
 Implementation lives in ``kinesis_sample_spark/``; this file only adapts

@@ -22,6 +22,40 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
+#: one node of the plan tree: optional ``:-``/``+-`` rails, the ``*``
+#: whole-stage-codegen mark, the node name, then its ``(id)``. Some nodes
+#: append more: AQE stages ``, Statistics(...)``, reused ones ``, Reuses
+#: ...``, cached scans `` (columnarIn=..., columnarOut=...)``.
+_TREE_NODE = re.compile(r"^[\s:|+-]*(?:\*\s+)?([A-Za-z].*?)\s+\(\d+\)(?:[\s,].*)?$")
+
+
+def operator_set(plan: str) -> frozenset[str]:
+    """Physical operator names in the tree(s) of a formatted plan string.
+
+    Reads the main tree (an AQE plan's Final and Initial sections alike)
+    and each subquery tree. Each tree ends at its first blank line, so the
+    ``(n) Name`` detail section below it never contributes. Join nodes
+    keep their join type (``BroadcastHashJoin LeftSemi``). Names are made
+    stable across runs, so that two runs of one query give one set: the
+    build side, which AQE picks from runtime statistics, is dropped, as
+    are expression ids (``ExistenceJoin(exists#12)``); scans keep only
+    ``Scan <format>`` or ``BatchScan <source>``, without table or path.
+    """
+    ops: set[str] = set()
+    in_tree = True
+    for line in plan.splitlines():
+        if not line.strip():
+            in_tree = False
+        elif line.startswith("Subquery:"):
+            in_tree = True
+        elif in_tree and (m := _TREE_NODE.match(line)):
+            name = re.sub(r"#\d+| Build(?:Left|Right)$", "", " ".join(m.group(1).split()))
+            if name.startswith(("Scan ", "BatchScan ")):
+                name = " ".join(name.split()[:2])
+            ops.add(name)
+    return frozenset(ops)
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
     """Filters the parquet scan applies row-group-level ("PushedFilters").
     Empty where you expected predicates ⇒ the scan reads everything and

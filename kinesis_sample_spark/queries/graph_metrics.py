@@ -1288,7 +1288,7 @@ def q329_bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph the weighted distance disagrees with the hop count at >99% of
     reached nodes (199/200 at sf0.001, 1859/1860 at sf0.01) with a 4-6x
     richer distance spectrum (18 vs 4 distinct values) — the gate
-    DESIGN_r15's qI1 note required before spending a slot.
+    round-15 design note required before spending a slot.
 
     Distances are exact integers end to end: the weight is the
     round-half-up of 1e9/sup computed by BIGINT floor division

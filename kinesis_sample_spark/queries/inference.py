@@ -1120,7 +1120,7 @@ def q330_cluster_ratio_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
       right-skewed, so the percentile CI is NOT symmetric around the
       plug-in ratio. The asymmetry is surfaced as (lo_margin,
       hi_margin): measured hi/lo = 1.82 at sf0.001 and 1.19 at sf0.01
-      — the diagnostic DESIGN_r15's qD2 bar required (a normal-theory
+      — the diagnostic the round-15 design required (a normal-theory
       +/- z*se interval would miss the skew entirely).
 
     Determinism is q312's md5 recipe verbatim (integer thresholds on

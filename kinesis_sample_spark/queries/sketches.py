@@ -685,7 +685,7 @@ def q297_sample_union_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q315 — Misra-Gries heavy hitters: the merge LAW, gated per true heavy
-# hitter (round 14, DESIGN_r15 family E landed early).
+# hitter (round 14).
 # ---------------------------------------------------------------------------
 _MG_K = 64  # counters per summary
 _MG_G = 32  # partition-groups (md5-assigned — layout-INdependent)

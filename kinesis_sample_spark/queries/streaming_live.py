@@ -1613,7 +1613,7 @@ def q313_live_dual_sink_consistency(spark: SparkSession, sf_dir: str) -> DataFra
 
 # ---------------------------------------------------------------------------
 # q316 — LIVE rate-limited backlog drain with a per-batch progression
-# audit (round 14; DESIGN_r15 family A qA2 landed early).
+# audit (round 14).
 # ---------------------------------------------------------------------------
 _BACKLOG_FILES = 8
 

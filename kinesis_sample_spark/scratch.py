@@ -33,8 +33,8 @@ def scratch_dir(prefix: str) -> str:
 
 def scratch_footprint() -> tuple[int, int]:
     """(live directory count, total bytes) across every scratch dir this
-    process has handed out. Diagnostic for long-lived sweeps (r14 VERDICT
-    item 5): live/producer-source queries drifted ~1.6-2.6× mid-sweep
+    process has handed out. Diagnostic for long-lived sweeps: in round
+    14, live/producer-source queries drifted ~1.6-2.6× mid-sweep
     with zero code changes, and the two candidate explanations — JVM
     state vs accumulated on-disk scratch (checkpoints, replay fixtures)
     — are distinguishable only if the sweep artifact records the scratch

@@ -54,8 +54,10 @@ def consume_with_dlq(
 ) -> StreamingQuery:
     """The full consumer loop (A10-A13) as ``foreachBatch``: decode, split
     poison records to a durable DLQ sink, write good records — both sinks
-    written per micro-batch, offsets committed after (at-least-once into
-    idempotent parquet ⇒ exactly-once end-to-end). This is the engine's
+    written per micro-batch, offsets committed after. Delivery is
+    at-least-once: both sinks append, so a batch replayed after a crash
+    between its sink write and its offset commit is written twice.
+    Making replay overwrite is ROADMAP item 2. This is the engine's
     replacement for processRecordsWithRetries (Proc:63-91)."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:

@@ -309,7 +309,7 @@ def test_q331_state_store_conservation(spark):
 
 
 def test_twsip_capability_probe():
-    """Environment probe for the DESIGN_r16 dead candidate: the
+    """Environment probe for a candidate rejected in round 16: the
     transformWithStateInPandas state protocol needs google.protobuf,
     absent from this container, so q171 runs its semantics through the
     applyInPandasWithState fallback. This test keeps that judgement
@@ -327,7 +327,7 @@ def test_twsip_capability_probe():
     if _twsip_available():
         raise AssertionError(
             "google.protobuf is now importable: transformWithStateInPandas "
-            "(timers, ListState/MapState — DESIGN_r16's rejected candidate) "
+            "(timers, ListState/MapState — rejected in round 16) "
             "is LIVE in this environment. Promote q171 to the native path "
             "and add the registerTimer/handleExpiredTimer query."
         )

@@ -58,13 +58,13 @@ def main() -> None:
         # pinned (r10's q152 47 s mid-sweep outlier). Rationale lives on
         # the shared helper, session.release_checkpoints.
         release_checkpoints(spark)
-        # r13 VERDICT item 8: q241 was the one query with a >3× mid-sweep
+        # In round 13, q241 was the one query with a >3× mid-sweep
         # vs solo gap. Record the persistent-RDD block count entering each
         # query so a recurrence is diagnosable from the artifact alone: a
         # nonzero count here means release_checkpoints missed something;
         # zero means the gap is JVM-state (GC/JIT/code-cache), not blocks.
         rdds_before = len(spark.sparkContext._jsc.getPersistentRDDs())
-        # r14 VERDICT item 5: the shared-283 drift concentrated in live/
+        # In round 14, the shared-283 drift concentrated in live/
         # producer-source queries (q160 2.6×, q82/q164/q184 ~1.6×, code
         # untouched). Record the two JVM/disk-state candidates entering
         # each query so the "state drift" diagnosis closes with data:
