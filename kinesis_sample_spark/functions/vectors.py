@@ -5,7 +5,9 @@ multiply then a strict left-to-right fold, all JVM-side. Elements are cast
 float→double *before* multiplying so the arithmetic is double throughout;
 DuckDB's ``list_dot_product`` over ``DOUBLE[]`` performs the identical
 sequential double accumulation (verified empirically), which makes cosine
-values bit-identical between engine and oracle.
+values bit-identical between engine and oracle. :func:`numpy_dot` is the
+third mirror of the same fold, for Arrow kernels that score many pairs
+at once.
 
 Scale: these are per-row expressions (no shuffle, no Python). For 100 TB
 corpora the brute-force path is one broadcast of the query set; the LSH
@@ -16,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,6 +42,23 @@ def sql_dot(a: str, b: str) -> str:
 
 def sql_cosine(a: str, b: str) -> str:
     return f"({sql_dot(a, b)} / (sqrt({sql_dot(a, a)}) * sqrt({sql_dot(b, b)})))"
+
+
+def numpy_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """numpy rendering of :func:`dot` for every pair of rows:
+    ``out[i, j] = dot(x[i], y[j])``, bit for bit.
+
+    The fold ``acc = 0.0; for k: acc += x[k] * y[k]`` runs once per
+    dimension, vectorised across all row pairs, as separate multiply and
+    add ufuncs. No BLAS: ``@``, ``np.dot``, ``einsum`` and
+    ``sum(axis=...)`` all reorder (or fuse) the sum. Memory is
+    ``len(x) * len(y)`` doubles."""
+    x = np.asarray(x, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    out = np.zeros((x.shape[0], y.shape[0]))
+    for k in range(x.shape[1]):
+        out += np.multiply.outer(x[:, k], y[:, k])
+    return out
 
 
 # ---------------------------------------------------------------------------

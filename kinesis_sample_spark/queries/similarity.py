@@ -6,9 +6,12 @@ Three operators:
   planes shared with the oracle as literals)
 - embedding near-duplicate pairs (banded hyperplane-LSH blocking)
 
-All dot products via functions.vectors (JVM-side fold, bit-identical to the
-DuckDB oracle). At 100 TB: the query set broadcasts; candidate generation
-for ANN is an equi-join on bucket id; nothing collects to the driver.
+All dot products via functions.vectors: the JVM-side ``dot`` fold, or its
+numpy mirror ``numpy_dot`` inside q36's Arrow kernels; both are
+bit-identical to the DuckDB oracle. At 100 TB: the query set broadcasts;
+candidate generation for ANN is an equi-join on bucket id, and q36 scores
+each LSH bucket as one local all-pairs block; nothing collects to the
+driver.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from kinesis_sample_spark.functions.vectors import (
     cosine,
     dot,
     hyperplanes,
+    numpy_dot,
     plane_lit,
     sql_cosine,
     sql_dot,
@@ -165,6 +169,7 @@ def q35_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q36 — embedding near-duplicate pairs (banded-LSH blocked).
 # ---------------------------------------------------------------------------
 _NEARDUP_BANDS = ((0, 4), (4, 8))  # two bands of 4 hyperplanes each
+_NEARDUP_MIN_COS = 0.35
 
 
 def _sql_band_bucket(vec: str, lo: int, hi: int) -> str:
@@ -176,15 +181,82 @@ def _sql_band_bucket(vec: str, lo: int, hi: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _band_bucket(vec, lo: int, hi: int):
-    bucket = None
-    for j in range(lo, hi):
-        term = F.when(
-            dot(vec, plane_lit(_PLANES[j])) > 0,
-            F.shiftleft(F.lit(1).cast("bigint"), j - lo),
-        ).otherwise(F.lit(0).cast("bigint"))
-        bucket = term if bucket is None else bucket + term
-    return bucket
+def _neardup_buckets(batches):
+    """mapInArrow stage of q36: each vector's two band buckets, and the
+    vector once per band as ``(vec_id, embedding, b1, band, bucket)``.
+
+    A null embedding, or one with a null element, is dropped: its dot
+    products are null, so it is never in an emitted pair. A set sign bit
+    is ``dot > 0`` in Spark's order, where NaN sorts above every value."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    planes = np.asarray(_PLANES)
+    for batch in batches:
+        batch = batch.filter(pc.is_valid(batch.column("embedding")))
+        emb = batch.column("embedding")
+        if len(emb) == 0:
+            continue
+        lengths = pc.list_value_length(emb).to_numpy(zero_copy_only=False)
+        if (lengths != DIM).any():
+            raise ValueError(f"q36: ragged embedding dims, expected {DIM}")
+        flat = emb.flatten()
+        whole = ~flat.is_null().to_numpy(zero_copy_only=False).reshape(-1, DIM).any(axis=1)
+        x = flat.to_numpy(zero_copy_only=False).reshape(-1, DIM)[whole]
+        emb = emb.filter(pa.array(whole))
+        ids = batch.column("vec_id").filter(pa.array(whole))
+        proj = numpy_dot(x, planes)
+        bits = (proj > 0) | np.isnan(proj)
+        b1, b2 = (
+            (bits[:, lo:hi].astype(np.int64) << np.arange(hi - lo)).sum(axis=1)
+            for lo, hi in _NEARDUP_BANDS
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.concat_arrays([ids, ids]),
+                pa.concat_arrays([emb, emb]),
+                pa.array(np.concatenate([b1, b1])),
+                pa.array(np.repeat(np.array([1, 2], np.int32), len(ids))),
+                pa.array(np.concatenate([b1, b2])),
+            ],
+            names=["vec_id", "embedding", "b1", "band", "bucket"],
+        )
+
+
+def _neardup_pairs(table):
+    """applyInArrow stage of q36: one (band, bucket) group's pairs with
+    ``vec_a < vec_b`` and cosine >= 0.35 (NaN kept, as Spark orders it
+    above every value). Band 2 keeps only pairs whose b1 differs, so a
+    pair that collides in both bands is emitted once.
+
+    The group's Gram matrix comes from :func:`numpy_dot`; the norms are
+    the square roots of its diagonal, so each cosine is
+    ``dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))`` exactly as the
+    oracle folds it. A zero-norm vector raises, as the former join plan's
+    ANSI divide did: that plan scored each vector against itself before
+    it checked ``vec_a < vec_b``."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids = table.column("vec_id").to_numpy()
+    flat = table.column("embedding").combine_chunks().flatten()
+    x = flat.to_numpy(zero_copy_only=False).reshape(-1, DIM)
+    gram = numpy_dot(x, x)
+    norm = np.sqrt(np.diagonal(gram))
+    if (norm == 0).any():
+        raise ZeroDivisionError("[DIVIDE_BY_ZERO] q36: zero-norm embedding")
+    a, b = np.nonzero(np.less.outer(ids, ids))
+    if table.column("band")[0].as_py() == 2:
+        b1 = table.column("b1").to_numpy()
+        differ = b1[a] != b1[b]
+        a, b = a[differ], b[differ]
+    cos = (gram / np.multiply.outer(norm, norm))[a, b]
+    keep = (cos >= _NEARDUP_MIN_COS) | np.isnan(cos)
+    return pa.table(
+        [pa.array(ids[a][keep], pa.int64()), pa.array(ids[b][keep], pa.int64()), pa.array(cos[keep])],
+        names=["vec_a", "vec_b", "cos_sim"],
+    )
 
 
 @query(
@@ -205,7 +277,7 @@ cand AS (
 )
 SELECT va AS vec_a, vb AS vec_b, {sql_cosine('ea', 'eb')} AS cos_sim
 FROM cand
-WHERE {sql_cosine('ea', 'eb')} >= 0.35
+WHERE {sql_cosine('ea', 'eb')} >= {_NEARDUP_MIN_COS}
 ORDER BY vec_a, vec_b
 """,
 )
@@ -215,55 +287,33 @@ def q36_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     collides in EITHER band (the classic MinHash-banding OR-construction,
     applied to hyperplane LSH), then exact cosine >= 0.35 verifies.
 
-    Scale: each band join is an equi-join on a data-scaling bucket id —
-    at 100x data you add planes per band so expected bucket occupancy
-    stays constant, keeping candidates linear-ish; the earlier draft
-    blocked on the fixed-cardinality ``label`` column, whose within-block
-    all-pairs grows quadratically (round-9 verdict weak mark). The band-2
-    join requires ``b1 <> b1`` so the two candidate sets are disjoint by
-    construction — no wide-row pair dedup shuffle."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "embedding",
-        _band_bucket(F.col("embedding"), *_NEARDUP_BANDS[0]).alias("b1"),
-        _band_bucket(F.col("embedding"), *_NEARDUP_BANDS[1]).alias("b2"),
-        # optimization r16 (guide §7.2 duplicated subtrees): e feeds FOUR
-        # plan references (a/b sides × two band joins) — without the
-        # persist the scan + 8 hyperplane dot products per row run 4×
-        # (measured: 4 embeddings scans in the plan; median 5.2→4.5 s
-        # at sf0.1 cold). Narrow relation (id + vector + two bigints),
-        # so the cache is one vector-width copy of the table.
-        # DELIBERATE LEAK (r17 adjudication): returns lazily, so the
-        # persist cannot be released in-query; reclaimed by
-        # session.release_checkpoints (registry-wide hygiene test in
-        # tests/test_r17_optimizations.py).
-    ).persist()
+    Two Arrow kernels, no join: a ``mapInArrow`` pass scans the vectors
+    once, computes both band buckets and emits each vector once per band;
+    a ``groupBy(band, bucket).applyInArrow`` pass scores each bucket as
+    one all-pairs Gram matrix. Scoring pair by pair through ``zip_with``
+    and ``aggregate`` cost some 20 µs per 64-dim dot, as Spark runs
+    those lambdas per element without codegen (9.3 s at sf0.1 on 4
+    cores, against 0.9 s for the kernels). Every dot product is
+    :func:`numpy_dot`'s sequential fold, never BLAS, so the cosines stay
+    bit-identical to the oracle's ``list_dot_product``.
 
-    def band_pairs(cond) -> DataFrame:
-        a, b = e.alias("a"), e.alias("b")
-        return (
-            a.join(b, cond(a, b) & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(
-                F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-                cosine(F.col("a.embedding"), F.col("b.embedding")).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= 0.35)
-        )
-
-    band1 = band_pairs(lambda a, b: F.col("a.b1") == F.col("b.b1"))
-    band2 = band_pairs(
-        lambda a, b: (F.col("a.b2") == F.col("b.b2")) & (F.col("a.b1") != F.col("b.b1"))
+    Scale: one shuffle on (band, bucket). Each group holds O(bucket²)
+    doubles, so at 100x data you add planes per band to keep expected
+    bucket occupancy, and so group memory, constant. The terminal sort
+    gathers the pairs into one partition; at 100 TB the pairs land
+    partitioned and the sort is dropped."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    banded = emb.mapInArrow(
+        _neardup_buckets,
+        "vec_id bigint, embedding array<float>, b1 bigint, band int, bucket bigint",
     )
-    return (
-        band1.unionByName(band2)
-        # persist the (tiny) qualifying pair set before the global sort:
-        # the range-partitioner's sampling pass otherwise re-runs the
-        # banded pairwise-cosine joins a second time
-        .persist()
-        .orderBy("vec_a", "vec_b")
+    pairs = banded.groupBy("band", "bucket").applyInArrow(
+        _neardup_pairs, "vec_a bigint, vec_b bigint, cos_sim double"
     )
+    # one sorted partition rather than orderBy: a range partitioner
+    # samples its input in a job of its own, which would run the grouped
+    # kernel twice (1.35 -> 0.87 s at sf0.1 on 4 cores)
+    return pairs.repartition(1).sortWithinPartitions("vec_a", "vec_b")
 
 
 # ---------------------------------------------------------------------------

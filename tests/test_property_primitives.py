@@ -6,9 +6,10 @@ hash-gated oracle rests on:
   ARBITRARY unicode input (minhash/simhash/fingerprints/splits all hash
   user text, not just fixture ASCII);
 - ``functions/vectors.py``: the sequential double dot-product fold must
-  be bit-identical between Spark's zip_with/aggregate and DuckDB's
-  list_dot_product for arbitrary float32 vectors (the docstring's
-  "verified empirically" claim, made adversarial).
+  be bit-identical between Spark's zip_with/aggregate, DuckDB's
+  list_dot_product and the numpy fold of the Arrow kernels for arbitrary
+  float32 vectors (the docstring's "verified empirically" claim, made
+  adversarial).
 
 ``derandomize=True`` keeps the example stream fixed — a future failure
 means a code change broke parity, never hypothesis drawing a fresh seed.
@@ -33,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kinesis_sample_spark.functions.hashing import md5_long, md5_long_sql
-from kinesis_sample_spark.functions.vectors import dot, sql_dot
+from kinesis_sample_spark.functions.vectors import dot, numpy_dot, sql_dot
 
 # no surrogates (not encodable to UTF-8); include plenty of non-ASCII
 texts_strategy = st.lists(
@@ -150,4 +151,7 @@ def test_dot_product_fold_parity(spark, pairs):
     got_duck = dict(
         con.execute(f"SELECT i, {sql_dot('a', 'b')} FROM v").fetchall()
     )
+    a, b = (np.array([p[side] for p in pairs], dtype=np.float32) for side in (0, 1))
+    got_numpy = dict(enumerate(np.diagonal(numpy_dot(a, b)).tolist()))
     assert got_spark == got_duck
+    assert got_numpy == got_duck

@@ -9,7 +9,7 @@ the oracle parity suite; these only guard the shape.
 
 from __future__ import annotations
 
-from kinesis_sample_spark.plans.inspect import formatted_plan
+from kinesis_sample_spark.plans.inspect import formatted_plan, operator_set
 from kinesis_sample_spark.queries import load_registry
 
 REGISTRY = load_registry()
@@ -49,19 +49,24 @@ def test_q122_no_second_corpus_pass(spark):
 
 
 def test_q36_band_relation_cached(spark):
-    """All four self-join references of the band-bucket relation read the
-    persisted copy: exactly one embeddings scan in the plan."""
+    """Both bands come from one scan of embeddings: one mapInArrow pass
+    buckets every vector, and one grouped Arrow kernel scores each
+    bucket, so no join ever reads the vectors twice."""
     df = REGISTRY["q36_embedding_neardup"].fn(spark, SF)
     plan = formatted_plan(df)
-    assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
     assert plan.count("embeddings.parquet") <= 1, plan.count("embeddings.parquet")
+    ops = operator_set(plan)
+    assert "FlatMapGroupsInArrow" in ops, sorted(ops)
+    assert not any("Join" in op for op in ops), sorted(ops)
+    # no range partitioner, whose sampling job would rerun the kernel
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_q341_unpersists_its_scratch(spark):
     """q341 persists its cents projection for the scripted bisection
     passes and must release it before returning — nothing may leak into
     the session's BlockManager across bench/oracle invocations."""
-    # snapshot rather than clear: other suite queries (q36/q166) persist
+    # snapshot rather than clear: other suite queries (q166) persist
     # by design and may legitimately be live in the shared session — the
     # assertion is that q341 adds NOTHING, not that the session is empty
     # (round-16 ADVICE: the clear-then-assert-empty form was order-fragile)
