@@ -217,44 +217,6 @@ def q49_unpivot_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q51 — BPE-ish token counting (regex word split + length-based subwords).
-# ---------------------------------------------------------------------------
-@query(
-    "q51_token_counts",
-    oracle="""
-WITH t AS (
-    SELECT doc_id, regexp_extract_all(text, '[a-zA-Z0-9]+') AS words FROM documents
-)
-SELECT doc_id,
-       len(words) AS n_words,
-       CAST(list_aggregate(list_transform(words, w -> (length(w) + 3) // 4), 'sum') AS BIGINT) AS n_subword_est,
-       length(text) // 4 AS n_char_est
-FROM t JOIN documents USING (doc_id)
-ORDER BY doc_id
-""",
-)
-def q51_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-free token estimation, the standard pipeline triage:
-    regex word extraction + ceil(len/4) subword estimate + chars/4. All
-    integer arithmetic — exact on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.regexp_extract_all("text", F.lit("[a-zA-Z0-9]+"), 0)
-    return (
-        docs.select(
-            "doc_id",
-            F.size(words).alias("n_words"),
-            F.aggregate(
-                F.transform(words, lambda w: (F.length(w) + 3).cast("long") / 4),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v.cast("long"),
-            ).alias("n_subword_est"),
-            (F.length("text") / 4).cast("long").alias("n_char_est"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q60 — grouped-map pandas UDF (applyInPandas) with exact-integer output.
 # ---------------------------------------------------------------------------
 def _order_seq(pdf: pd.DataFrame) -> pd.DataFrame:

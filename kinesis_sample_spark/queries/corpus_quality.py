@@ -251,90 +251,6 @@ def q188_unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q190 — per-source percentile-normalized quality blend.
-# ---------------------------------------------------------------------------
-_BLEND_KEEP = 0.4  # keep docs above the 40th blended percentile of their source
-
-
-@query(
-    "q190_quality_percentile_blend",
-    oracle=f"""
-WITH m AS (
-  SELECT doc_id, source,
-         len(string_split(text, ' ')) AS n_words,
-         len(list_distinct(string_split(text, ' '))) AS n_distinct,
-         length(text) AS n_chars_t
-  FROM documents
-),
-s AS (
-  SELECT doc_id, source,
-         (n_chars_t - n_words + 1) / n_words AS mean_wlen,
-         n_distinct / n_words AS ttr
-  FROM m
-),
-p AS (
-  SELECT doc_id, source, mean_wlen, ttr,
-         percent_rank() OVER (PARTITION BY source ORDER BY mean_wlen, doc_id) AS pr_wlen,
-         percent_rank() OVER (PARTITION BY source ORDER BY ttr, doc_id) AS pr_ttr
-  FROM s
-)
-SELECT doc_id, source, mean_wlen, ttr, pr_wlen, pr_ttr,
-       0.5 * pr_wlen + 0.5 * pr_ttr AS blend,
-       CAST(0.5 * pr_wlen + 0.5 * pr_ttr >= {_BLEND_KEEP} AS INT) AS keep
-FROM p ORDER BY doc_id
-""",
-)
-def q190_quality_percentile_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-score ensembling the way multi-signal pipelines actually
-    combine filters: raw signals live on incomparable scales (mean word
-    length in chars, type-token ratio in [0,1]), so each is normalized to
-    its percentile WITHIN its source before blending — per-source
-    normalization stops one crawl's length distribution from dominating
-    another's, the standard calibration step before a blended keep
-    threshold. Signals and ranks are exact: both signals are ratios of
-    integers (bit-equal across engines), percent_rank is
-    (rank-1)/(n_partition-1) over a (signal, doc_id) total order (ties
-    impossible ⇒ identical ranks), and the blend is one fused multiply-
-    add shape evaluated identically on both engines.
-
-    Scale: two window functions over the same source partitioning — one
-    shuffle keyed on source; at 100 TB per-source partitions are the
-    natural unit (sources are crawls/dumps), with AQE splitting any
-    mega-source."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    s = docs.select(
-        "doc_id",
-        "source",
-        ((F.length("text") - F.size(toks) + F.lit(1)) / F.size(toks)).alias(
-            "mean_wlen"
-        ),
-        (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
-    )
-    w_wlen = W.partitionBy("source").orderBy("mean_wlen", "doc_id")
-    w_ttr = W.partitionBy("source").orderBy("ttr", "doc_id")
-    p = s.select(
-        "doc_id",
-        "source",
-        "mean_wlen",
-        "ttr",
-        F.percent_rank().over(w_wlen).alias("pr_wlen"),
-        F.percent_rank().over(w_ttr).alias("pr_ttr"),
-    )
-    blend = F.lit(0.5) * F.col("pr_wlen") + F.lit(0.5) * F.col("pr_ttr")
-    return p.select(
-        "doc_id",
-        "source",
-        "mean_wlen",
-        "ttr",
-        "pr_wlen",
-        "pr_ttr",
-        blend.alias("blend"),
-        (blend >= _BLEND_KEEP).cast("int").alias("keep"),
-    ).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
 # q193 — cross-document n-gram novelty score.
 # ---------------------------------------------------------------------------
 @query(

@@ -223,52 +223,3 @@ def q56_edit_distance_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
         .orderBy("doc_a", "doc_b")
     )
-
-
-# ---------------------------------------------------------------------------
-# q165 — regex operator gallery.
-# ---------------------------------------------------------------------------
-@query(
-    "q165_regex_gallery",
-    oracle=r"""
-SELECT doc_id,
-       len(regexp_extract_all(text, '[aeiou]')) AS n_vowels,
-       regexp_replace(substring(text, 1, 20), '[aeiou]', '*', 'g') AS starred20,
-       coalesce(array_to_string(regexp_extract_all(text, '\b(s\w+)'), ','), '')
-         AS s_words,
-       regexp_matches(text, 'join.*scan') AS join_then_scan,
-       regexp_replace(lang || '_' || source, '(\w+)_(\w+)', '\2-\1') AS swapped,
-       regexp_extract(text, '(\w+) (\w+)', 2) AS second_word
-FROM documents
-ORDER BY doc_id
-""",
-)
-def q165_regex_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r"""The regex function family as gated outputs: regexp_count,
-    global regexp_replace (DuckDB needs the explicit 'g' flag to match
-    Spark's replace-all semantics), regexp_extract_all (joined to a
-    scalar for the driver canonicalizer), rlike, group backreferences
-    ($n in Spark, \n in DuckDB — same engine semantics, different
-    spelling), and indexed-group regexp_extract. All codegen'd JVM
-    expressions, map-only at any scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "doc_id",
-            F.regexp_count("text", F.lit(r"[aeiou]")).alias("n_vowels"),
-            F.regexp_replace(
-                F.substring("text", 1, 20), r"[aeiou]", "*"
-            ).alias("starred20"),
-            F.array_join(
-                F.expr(r"regexp_extract_all(text, '\\b(s\\w+)', 1)"), ","
-            ).alias("s_words"),
-            F.col("text").rlike("join.*scan").alias("join_then_scan"),
-            F.regexp_replace(
-                F.concat("lang", F.lit("_"), "source"),
-                r"(\w+)_(\w+)",
-                r"$2-$1",
-            ).alias("swapped"),
-            F.regexp_extract("text", r"(\w+) (\w+)", 2).alias("second_word"),
-        )
-        .orderBy("doc_id")
-    )

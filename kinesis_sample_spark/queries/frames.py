@@ -1,13 +1,11 @@
-"""Window-frame and higher-order-function galleries.
+"""Window-frame gallery.
 
-Two surface-completeness queries: q155 exercises every window function and
+One surface-completeness query: q155 exercises every window function and
 frame clause not already load-bearing elsewhere in the registry
 (nth_value, percent_rank, cume_dist, ntile, lead-with-default, lag offset,
-IGNORE NULLS first_value, a CURRENT ROW → UNBOUNDED FOLLOWING frame);
-q156 exercises the array higher-order functions (transform / exists /
-forall / aggregate / zip_with / slice) as *outputs* rather than internal
-plumbing. Both are map-only plus one window exchange — nothing here
-shuffles more than the window partitioning itself, at any scale.
+IGNORE NULLS first_value, a CURRENT ROW → UNBOUNDED FOLLOWING frame). It
+is map-only plus one window exchange — nothing here shuffles more than
+the window partitioning itself, at any scale.
 """
 
 from __future__ import annotations
@@ -85,66 +83,4 @@ def q155_window_frame_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.last("o_totalprice").over(w_fwd).alias("final_price"),
         )
         .orderBy("o_custkey", "o_orderkey")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q156 — higher-order-function gallery over documents.
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "q156_hof_gallery",
-    oracle="""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-)
-SELECT doc_id,
-       coalesce(array_to_string(list_transform(list_slice(toks, 1, 5),
-                                               tk -> upper(tk)), ' '), '')
-         AS head5_upper,
-       len(list_filter(toks, tk -> tk = 'join')) > 0 AS has_join,
-       len(list_filter(toks, tk -> NOT len(tk) > 2)) = 0 AS all_longer2,
-       CAST(list_aggregate(list_transform(toks, tk -> len(tk)), 'sum') AS BIGINT)
-         AS tok_len_sum,
-       coalesce(array_to_string(
-           list_transform(range(1, len(toks) + 1),
-                          i -> toks[i] || '_' || list_reverse(toks)[i]), ' '), '')
-         AS zipped,
-       coalesce(array_to_string(list_slice(toks, 2, 4), ' '), '') AS mid3
-FROM t
-ORDER BY doc_id
-""",
-)
-def q156_hof_gallery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array higher-order functions as gated outputs: transform (+ slice),
-    exists, forall, aggregate (integer fold — exact), zip_with against the
-    reversed array (equal lengths, so Spark's null-extension never fires),
-    and slice. All JVM-side codegen'd lambdas — the 100 TB story is
-    'per-row, no shuffle, no Python'. Collections ship as joined strings
-    (driver canonicalizer contract)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    return (
-        docs.select(
-            "doc_id",
-            F.array_join(
-                F.transform(F.slice(toks, 1, 5), lambda t: F.upper(t)), " "
-            ).alias("head5_upper"),
-            F.exists(toks, lambda t: t == F.lit("join")).alias("has_join"),
-            F.forall(toks, lambda t: F.length(t) > 2).alias("all_longer2"),
-            F.aggregate(
-                toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t)
-            ).alias("tok_len_sum"),
-            F.array_join(
-                F.zip_with(
-                    toks,
-                    F.reverse(toks),
-                    lambda x, y: F.concat(x, F.lit("_"), y),
-                ),
-                " ",
-            ).alias("zipped"),
-            F.array_join(F.slice(toks, 2, 3), " ").alias("mid3"),
-        )
-        .orderBy("doc_id")
     )

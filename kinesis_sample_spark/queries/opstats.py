@@ -381,8 +381,8 @@ def q276_bowley_moors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-based distribution shape per segment: Bowley skewness
     ((Q3+Q1-2·Q2)/(Q3-Q1), bounded [-1, 1]) and Moors kurtosis on
     octiles — the robust shape panel that moment skewness/kurtosis
-    can't deliver under heavy tails (q128 winsorizes, q197 finds
-    outliers; this characterizes the shape itself). Both statistics are
+    can't deliver under heavy tails (q128 winsorizes; this
+    characterizes the shape itself). Both statistics are
     ratios of exact interpolated percentiles over identical doubles,
     quantized round(.,6).
 

@@ -1,7 +1,7 @@
 """Robust / nonparametric statistics — round-12 additions.
 
 The registry's earlier statistics family is mostly parametric moments
-(q99 OLS, q145 covariance, q197 MAD, q199 KS, q222 chi-square). This
+(q99 OLS, q145 covariance, q199 KS, q222 chi-square). This
 module adds the rank- and resistance-based estimators a data-quality
 pipeline reaches for when the parametric assumptions fail, plus two
 distributed-sketch laws:

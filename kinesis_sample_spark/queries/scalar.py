@@ -105,49 +105,6 @@ def q20_event_time_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q21 — math function family.
-# ---------------------------------------------------------------------------
-@query(
-    "q21_math_scalars",
-    oracle="""
-SELECT event_id,
-       ROUND(value, 1) AS v_round,
-       ABS(value - 100.0) AS v_centered,
-       CAST(FLOOR(value) AS BIGINT) AS v_floor,
-       CAST(CEIL(value)  AS BIGINT) AS v_ceil,
-       SQRT(ABS(value)) AS v_sqrt,
-       value * value AS v_sq,
-       CAST(FLOOR(value) AS BIGINT) % 7 AS v_mod,
-       GREATEST(value, 50.0) AS v_hi,
-       LEAST(value, 50.0) AS v_lo
-FROM events
-ORDER BY event_id
-""",
-)
-def q21_math_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact/correctly-rounded math only (see module docstring). The %7
-    input is floored explicitly — Spark's double→bigint cast truncates
-    while DuckDB's rounds, so a bare cast would diverge."""
-    ev = load_table(spark, sf_dir, "events")
-    v = F.col("value")
-    return (
-        ev.select(
-            "event_id",
-            F.round(v, 1).alias("v_round"),
-            F.abs(v - 100.0).alias("v_centered"),
-            F.floor(v).alias("v_floor"),
-            F.ceil(v).alias("v_ceil"),
-            F.sqrt(F.abs(v)).alias("v_sqrt"),
-            (v * v).alias("v_sq"),
-            (F.floor(v).cast("bigint") % 7).alias("v_mod"),
-            F.greatest(v, F.lit(50.0)).alias("v_hi"),
-            F.least(v, F.lit(50.0)).alias("v_lo"),
-        )
-        .orderBy("event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q166 — try_* error-tolerant functions (A11/A12's skip-malformed semantics).
 # ---------------------------------------------------------------------------
 @query(

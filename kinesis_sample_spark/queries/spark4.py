@@ -1,17 +1,9 @@
-"""Spark 4 SQL-surface additions: VARIANT and pipe syntax.
+"""Spark 4 SQL-surface addition: pipe syntax.
 
-Two capabilities the Spark 4 line added to the engine's declarative
-surface, each gated against the oracle's classical spelling:
-
-- VARIANT (q169): schemaless semi-structured values with typed extraction
-  — the engine-native home for the reference's JSON-ish opaque payloads
-  (the jackson-core dependency the reference declares but never uses,
-  pom.xml:24-27). Parsing keeps binary-encoded variants JVM-side;
-  extraction is codegen'd, so the 100 TB cost is one parse per row, no
-  Python, no schema inference pass.
-- SQL pipe syntax (q170): the |> operator-chain spelling; compiles to the
-  same logical plan as the classical query, which the identical-result
-  hash proves.
+SQL pipe syntax (q170), which the Spark 4 line added to the engine's
+declarative surface: the |> operator-chain spelling compiles to the same
+logical plan as the classical query, which the identical-result hash
+proves.
 """
 
 from __future__ import annotations
@@ -19,49 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_sample_spark.catalog import load_table, register_views
+from kinesis_sample_spark.catalog import register_views
 from kinesis_sample_spark.queries import query
-
-
-# ---------------------------------------------------------------------------
-# q169 — VARIANT parse + typed extraction over the event payload.
-# ---------------------------------------------------------------------------
-@query(
-    "q169_variant_payload",
-    oracle="""
-SELECT event_id,
-       CAST(props->>'k' AS INTEGER) AS k_int,
-       CAST(props->>'k' AS VARCHAR) AS k_str,
-       CAST(props->>'k' AS INTEGER) IS NOT NULL AS has_k,
-       CASE WHEN CAST(props->>'k' AS INTEGER) IS NULL THEN NULL
-            WHEN CAST(props->>'k' AS INTEGER) % 2 = 0 THEN 'even' ELSE 'odd' END
-         AS parity
-FROM events
-ORDER BY event_id
-""",
-)
-def q169_variant_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """parse_json → VARIANT → variant_get typed extraction (int and
-    string views of the same path), plus null-safe derived logic. The
-    oracle reads the same payloads with DuckDB's JSON operators — same
-    values, different engine machinery, so the hash gates Spark's variant
-    binary encoding round trip."""
-    ev = load_table(spark, sf_dir, "events")
-    v = F.parse_json("props")
-    k_int = F.try_variant_get(v, "$.k", "int")
-    return (
-        ev.select(
-            "event_id",
-            k_int.alias("k_int"),
-            F.try_variant_get(v, "$.k", "string").alias("k_str"),
-            k_int.isNotNull().alias("has_k"),
-            F.when(k_int.isNull(), None)
-            .when(k_int % 2 == 0, "even")
-            .otherwise("odd")
-            .alias("parity"),
-        )
-        .orderBy("event_id")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -480,61 +480,6 @@ def q105_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q107 — IQR (Tukey-fence) outlier detection per group.
-# ---------------------------------------------------------------------------
-_LO_FENCE = "(p25 - 1.5 * (p75 - p25))"
-_HI_FENCE = "(p75 + 1.5 * (p75 - p25))"
-
-
-@query(
-    "q107_iqr_outliers",
-    oracle=f"""
-WITH fences AS (
-    SELECT event_type,
-           quantile_cont(value, 0.25) AS p25,
-           quantile_cont(value, 0.75) AS p75
-    FROM events GROUP BY event_type
-)
-SELECT event_id, event_type, user_id, value,
-       {_LO_FENCE} AS lo_fence, {_HI_FENCE} AS hi_fence
-FROM events JOIN fences USING (event_type)
-WHERE value < {_LO_FENCE} OR value > {_HI_FENCE}
-ORDER BY event_id
-""",
-)
-def q107_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey-fence outlier scan: exact per-type quartiles (Spark
-    ``percentile`` ≡ DuckDB ``quantile_cont``, both linear-interpolating),
-    fences at 1.5×IQR, then a broadcast join back onto the fact —
-    the population-relative complement of q104's per-entity rolling
-    z-score. Scale: the fence table is O(groups) so the join back is a
-    broadcast; only the quartile aggregate shuffles (per-group exact
-    percentiles sort within groups — for a single global percentile at
-    100 TB use q61's sketch instead)."""
-    ev = load_table(spark, sf_dir, "events")
-    fences = ev.groupBy("event_type").agg(
-        F.percentile("value", 0.25).alias("p25"),
-        F.percentile("value", 0.75).alias("p75"),
-    )
-    return (
-        ev.join(F.broadcast(fences), "event_type")
-        .where(
-            (F.col("value") < F.expr(_LO_FENCE))
-            | (F.col("value") > F.expr(_HI_FENCE))
-        )
-        .select(
-            "event_id",
-            "event_type",
-            "user_id",
-            "value",
-            F.expr(_LO_FENCE).alias("lo_fence"),
-            F.expr(_HI_FENCE).alias("hi_fence"),
-        )
-        .orderBy("event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q108 — partition fingerprints (order-insensitive table checksums).
 # ---------------------------------------------------------------------------
 @query(
@@ -950,66 +895,6 @@ def q191_revenue_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("decile_rev").cast("double") / F.col("total_rev").cast("double")).alias("rev_share"),
         (F.col("cum_rev").cast("double") / F.col("total_rev").cast("double")).alias("cum_rev_share"),
     ).orderBy("decile")
-
-
-# ---------------------------------------------------------------------------
-# q197 — MAD-based robust outlier audit per event type.
-# ---------------------------------------------------------------------------
-_MAD_K = 4.4478  # 3 sigma-equivalents: 3 x 1.4826 (consistency constant)
-
-
-@query(
-    "q197_mad_outliers",
-    oracle=f"""
-WITH med AS (
-    SELECT event_type, quantile_cont(value, 0.5) AS med
-    FROM events GROUP BY event_type
-),
-dev AS (
-    SELECT e.event_type, e.value, m.med, abs(e.value - m.med) AS absdev
-    FROM events e JOIN med m ON m.event_type = e.event_type
-),
-mad AS (
-    SELECT event_type, quantile_cont(absdev, 0.5) AS mad
-    FROM dev GROUP BY event_type
-)
-SELECT d.event_type, COUNT(*) AS n,
-       MIN(d.med) AS med, MIN(m.mad) AS mad,
-       CAST(SUM(CAST(d.absdev > {_MAD_K} * m.mad AS BIGINT)) AS BIGINT) AS n_outliers
-FROM dev d JOIN mad m ON m.event_type = d.event_type
-GROUP BY d.event_type ORDER BY d.event_type
-""",
-)
-def q197_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection via median absolute deviation — the
-    dispersion measure that, unlike stddev (q104's z-scores), is not
-    itself dragged by the outliers it is hunting. Two exact-median
-    passes: per-group median, then the median of absolute deviations;
-    a point is flagged beyond 3 sigma-equivalents (3 x 1.4826 x MAD).
-    Both medians interpolate identically (``percentile`` ≡
-    ``quantile_cont``, q162's gate) and every comparison runs over
-    identically-derived doubles, so counts hash-match exactly.
-
-    Scale: two (group, value) shuffles + two broadcast joins of the
-    5-row group-stats tables back onto events; for heavy groups swap
-    exact percentile for approx_percentile as in q48."""
-    ev = load_table(spark, sf_dir, "events")
-    med = ev.groupBy("event_type").agg(F.expr("percentile(value, 0.5D)").alias("med"))
-    dev = ev.join(F.broadcast(med), "event_type").select(
-        "event_type", "value", "med", F.abs(F.col("value") - F.col("med")).alias("absdev")
-    )
-    mad = dev.groupBy("event_type").agg(F.expr("percentile(absdev, 0.5D)").alias("mad"))
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("med").alias("med"),
-            F.min("mad").alias("mad"),
-            F.sum((F.col("absdev") > _MAD_K * F.col("mad")).cast("bigint")).alias("n_outliers"),
-        )
-        .orderBy("event_type")
-    )
 
 
 # ---------------------------------------------------------------------------

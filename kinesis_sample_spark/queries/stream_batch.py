@@ -429,73 +429,6 @@ def q146_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q175 — time-weighted average (TWAP) per user.
-# ---------------------------------------------------------------------------
-@query(
-    "q175_time_weighted_avg",
-    oracle="""
-WITH seg AS (
-  SELECT user_id, value, ts,
-         epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-           - epoch_us(ts) AS dt_us
-  FROM events
-),
-agg AS (
-  SELECT user_id,
-         count(*) AS n_segments,
-         CAST(SUM(dt_us) AS BIGINT) AS total_us,
-         SUM(CAST(value AS DECIMAL(12,4)) * dt_us) AS wsum
-  FROM seg WHERE dt_us IS NOT NULL
-  GROUP BY user_id
-)
-SELECT user_id, n_segments, total_us,
-       CAST(CAST(wsum AS VARCHAR) AS DOUBLE) / total_us AS twap
-FROM agg
-ORDER BY user_id
-""",
-)
-def q175_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average of the event value per user — the
-    time-series aggregate plain AVG gets wrong whenever observations are
-    irregularly spaced (a value held for an hour must weigh 3600× one
-    held for a second). Each observation is weighted by its holding
-    interval Δt = next event time − event time (lead over the per-user
-    ordering; the last open-ended segment drops on both engines).
-    Exactness: Δt is integer microseconds, values quantize to
-    DECIMAL(12,4), so the weighted sum is exact-decimal and associative —
-    same hash at any parallelism — and the final division is one double
-    op via the correctly-rounded VARCHAR cast. Shape: one window + one
-    aggregation, both on the user_id exchange; Catalyst reuses the
-    partitioning."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = ev.select(
-        "user_id",
-        "value",
-        (
-            F.unix_micros(F.lead("ts").over(w)) - F.unix_micros("ts")
-        ).alias("dt_us"),
-    ).filter(F.col("dt_us").isNotNull())
-    return (
-        seg.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_segments"),
-            F.sum("dt_us").alias("total_us"),
-            F.sum(F.col("value").cast("decimal(12,4)") * F.col("dt_us")).alias(
-                "wsum"
-            ),
-        )
-        .select(
-            "user_id",
-            "n_segments",
-            "total_us",
-            (F.col("wsum").cast("double") / F.col("total_us")).alias("twap"),
-        )
-        .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q176 — shard sequence-continuity audit (gaps, duplicates, inversions).
 # ---------------------------------------------------------------------------
 @query(

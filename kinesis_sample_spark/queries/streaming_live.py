@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
+from kinesis_sample_spark.operators.upsert import write_epoch
 from kinesis_sample_spark.queries import query
 from kinesis_sample_spark.scratch import scratch_dir
 from kinesis_sample_spark.sources.files import (
@@ -869,11 +870,12 @@ def q185_live_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming query *incarnations* share one checkpointLocation: phase 1
     drains the even-event_id half of the fixture and stops (A16's
     graceful-stop path); the odd half then lands in the source directory;
-    phase 2 starts a NEW query from the same checkpoint. The sink is an
-    append-only parquet emission log (update-mode foreachBatch), and the
-    returned table keeps each user's LAST emission (max running count —
-    update mode only re-emits a key when new events arrived, so ``n``
-    strictly increases per user).
+    phase 2 starts a NEW query from the same checkpoint. The sink is a
+    parquet emission log with one directory per epoch (update-mode
+    foreachBatch through ``write_epoch``, so a replayed epoch overwrites
+    its first write), and the returned table keeps each user's LAST
+    emission (max running count — update mode only re-emits a key when
+    new events arrived, so ``n`` strictly increases per user).
 
     Both failure directions break the value hash: if phase 2 re-read
     phase-1 files (offset resume broken), running counts overshoot the
@@ -915,15 +917,14 @@ def q185_live_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-        def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(emissions)
-
         # a still-running incarnation would contend with the next phase's
         # start() on the same checkpoint (or let the final read observe a
         # half-written sink) — the drain raises instead of surfacing as an
         # inexplicable hash mismatch
         drain_available_now(
-            agg.writeStream.foreachBatch(sink)
+            agg.writeStream.foreachBatch(
+                lambda batch_df, epoch_id: write_epoch(batch_df, emissions, epoch_id)
+            )
             .outputMode("update")
             .option("checkpointLocation", ck),
             what="q185 incarnation",
@@ -1143,9 +1144,9 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, write commit log); no per-record coordination — on a
     1000-executor cluster the restart re-plans from the offset log the
     same way the KCL reassigns leases from DynamoDB (SURVEY §1.2).
-    Update-mode emission keeps re-emitted keys idempotent under the
-    at-least-once foreachBatch replay, so the boundary batch is safe to
-    re-run."""
+    The emission log writes each epoch to its own directory
+    (``write_epoch``), so a replayed boundary batch overwrites its first
+    write instead of appending a second copy."""
     import shutil
     import time
 
@@ -1173,8 +1174,8 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(emissions)
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        write_epoch(batch_df, emissions, epoch_id)
 
     try:
         events_dir = write_stream_fixture(spark, sf_dir, base, n_files=n_files)
@@ -1565,11 +1566,14 @@ def q313_live_dual_sink_consistency(spark: SparkSession, sf_dir: str) -> DataFra
     This is the contract that makes one-stream/N-tables topologies
     (raw + serving rollup is the standard pair) safe under replay:
     both sinks ride the same epoch id, raw partitions are overwritten
-    whole, and the aggregate merge is re-derived per epoch — at-least-
-    once delivery converges to exactly-once TABLE STATE (A13/A14 for
-    N sinks; q112/q293 gate the one-sink and two-producer corners).
+    whole, and the aggregate table records the last epoch it folded in,
+    so a replayed epoch is not merged twice — at-least-once delivery
+    converges to exactly-once TABLE STATE (A13/A14 for N sinks;
+    q112/q293 gate the one-sink and two-producer corners;
+    tests/test_upsert.py replays an epoch directly).
 
-    Scale: the raw sink is a partitioned append (no read-modify-write);
+    Scale: the raw sink writes one directory per epoch (no
+    read-modify-write);
     the aggregate table is bounded by |event_type| so its per-epoch
     merge reads KBs regardless of stream volume."""
     import os

@@ -94,39 +94,6 @@ def q15_running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q16 — sliding ROWS frame: 5-row moving average of event values per user.
-# ---------------------------------------------------------------------------
-@query(
-    "q16_moving_avg_events",
-    oracle="""
-SELECT user_id, event_id,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER w AS VARCHAR) AS DOUBLE)
-           / COUNT(value) OVER w AS moving_avg,
-       COUNT(*) OVER w AS frame_rows
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-ORDER BY user_id, event_id
-""",
-)
-def q16_moving_avg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded sliding frame — constant state per row regardless of scale.
-    Average built as exact-decimal sum / count (see functions.numeric)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-4, W.currentRow)
-    return (
-        ev.select(
-            "user_id",
-            "event_id",
-            (F.sum(dec("value")).over(w).cast("double") / F.count("value").over(w)).alias(
-                "moving_avg"
-            ),
-            F.count("*").over(w).alias("frame_rows"),
-        )
-        .orderBy("user_id", "event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q17 — time-range frame: events in the trailing hour per user.
 # ---------------------------------------------------------------------------
 @query(

@@ -6,9 +6,10 @@ That is the one reference behavior with no Spark built-in (SURVEY.md §2
 A11, §7). The engine's stance:
 
 - **transient** failures are Spark's job: task retry + micro-batch replay
-  from the checkpoint already give at-least-once (and exactly-once with
-  idempotent sinks) — re-implementing backoff loops per record would fight
-  the scheduler.
+  from the checkpoint give at-least-once delivery, and the engine's
+  replay-safe sinks (``operators/upsert.py``: epoch-addressed writes, a
+  crash-safe publish) turn it into exactly-once output — re-implementing
+  backoff loops per record would fight the scheduler.
 - **poison** records (undecodable/unparseable) must not be dropped
   silently: they are split into an explicit DLQ DataFrame the caller sinks
   somewhere durable.

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from kinesis_sample_spark.operators.upsert import write_epoch
 from kinesis_sample_spark.streaming.dlq import split_dlq
 from kinesis_sample_spark.streaming.envelope import decode_envelope
 
@@ -54,17 +55,18 @@ def consume_with_dlq(
 ) -> StreamingQuery:
     """The full consumer loop (A10-A13) as ``foreachBatch``: decode, split
     poison records to a durable DLQ sink, write good records — both sinks
-    written per micro-batch, offsets committed after. Delivery is
-    at-least-once: both sinks append, so a batch replayed after a crash
-    between its sink write and its offset commit is written twice.
-    Making replay overwrite is ROADMAP item 2. This is the engine's
-    replacement for processRecordsWithRetries (Proc:63-91)."""
+    written per micro-batch, offsets committed after. Each sink writes the
+    batch to its own ``epoch=<id>`` directory (``write_epoch``), so a
+    batch replayed after a crash between its sink write and its offset
+    commit overwrites its first write: at-least-once delivery, no
+    duplicate output. This is the engine's replacement for
+    processRecordsWithRetries (Proc:63-91)."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         decoded = decode_envelope(batch_df)
         good, dlq = split_dlq(decoded, "event_ts")
-        good.drop("data").write.mode("append").parquet(good_path)
-        dlq.drop("data").write.mode("append").parquet(dlq_path)
+        write_epoch(good.drop("data"), good_path, epoch_id)
+        write_epoch(dlq.drop("data"), dlq_path, epoch_id)
 
     return (
         env.writeStream.foreachBatch(_process)

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
+from kinesis_sample_spark.operators.upsert import write_epoch
 from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
 from kinesis_sample_spark.streaming.envelope import (
     decode_envelope,
@@ -379,11 +380,10 @@ def test_stateful_checkpoint_resume(spark, tmp_path):
             .agg(F.count("*").alias("n"))
         )
 
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(emissions_dir)
-
         drain_available_now(
-            agg.writeStream.foreachBatch(sink)
+            agg.writeStream.foreachBatch(
+                lambda batch_df, epoch_id: write_epoch(batch_df, emissions_dir, epoch_id)
+            )
             .outputMode("update")
             .option("checkpointLocation", ck),
             120,

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.operators.upsert import foreach_batch_upsert, merge_upsert
@@ -83,3 +84,57 @@ def test_upsert_recovers_from_backup(spark, tmp_path):
     apply_fn(b2, 1)
     out = {r["k"]: r["v"] for r in spark.read.parquet(table).collect()}
     assert out == {1: "a", 2: "b2"}, "history from the backup must survive"
+
+
+def _dual_sink_state(spark, raw, agg):
+    agg_rows = sorted(
+        (r.event_type, r.n_events, float(r.sum_value))
+        for r in spark.read.parquet(agg).collect()
+    )
+    raw_rows = sorted(
+        (r.epoch, r.event_type, r.value) for r in spark.read.parquet(raw).collect()
+    )
+    return agg_rows, raw_rows
+
+
+_DUAL_SCHEMA = "event_type string, value double"
+
+
+def test_dual_sink_replayed_epoch_is_not_merged_twice(spark, tmp_path):
+    """A replay of an epoch that was already published (a crash after
+    the sink, before the offset commit) leaves both sinks unchanged."""
+    from kinesis_sample_spark.operators.upsert import foreach_batch_dual_sink
+
+    raw, agg = str(tmp_path / "raw"), str(tmp_path / "agg")
+    apply_fn = foreach_batch_dual_sink(raw, agg)
+    b0 = spark.createDataFrame([("a", 1.25), ("a", 2.25), ("b", 4.0)], _DUAL_SCHEMA)
+    apply_fn(b0, 0)
+    published = _dual_sink_state(spark, raw, agg)
+    assert published[0] == [("a", 2, 3.5), ("b", 1, 4.0)]
+
+    apply_fn(b0, 0)
+    assert _dual_sink_state(spark, raw, agg) == published
+
+
+def test_dual_sink_merges_epoch_whose_publish_failed(spark, tmp_path, monkeypatch):
+    """An epoch that died after its raw write but before the aggregate's
+    publish is merged when it is replayed."""
+    from kinesis_sample_spark.operators import upsert
+
+    raw, agg = str(tmp_path / "raw"), str(tmp_path / "agg")
+    apply_fn = upsert.foreach_batch_dual_sink(raw, agg)
+    apply_fn(spark.createDataFrame([("a", 1.25), ("b", 4.0)], _DUAL_SCHEMA), 0)
+
+    b1 = spark.createDataFrame([("a", 0.5), ("c", 3.0)], _DUAL_SCHEMA)
+
+    def crash(*_):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(upsert, "_publish", crash)
+    with pytest.raises(RuntimeError):
+        apply_fn(b1, 1)
+    monkeypatch.undo()
+    apply_fn(b1, 1)
+    agg_rows, raw_rows = _dual_sink_state(spark, raw, agg)
+    assert agg_rows == [("a", 2, 1.75), ("b", 1, 4.0), ("c", 1, 3.0)]
+    assert [r[0] for r in raw_rows] == [0, 0, 1, 1]

@@ -8,7 +8,10 @@ A query's fingerprint is two sets:
 - the engine functions it calls: every function in ``operators/``,
   ``functions/``, ``sources/`` or ``streaming/`` that runs in this
   process while ``q.fn`` builds the DataFrame, recorded with
-  ``sys.setprofile``.
+  ``sys.setprofile``, plus every engine function ``q.fn`` names, walked
+  statically through the package functions it names in turn. The walk
+  finds what only Python workers call, such as the kernels a query
+  passes to ``mapInArrow`` or ``applyInArrow``.
 
 Each query runs once at sf0.01 through ``oracle_harness.run_query``.
 Queries with equal fingerprints form one group; groups are numbered in
@@ -23,8 +26,12 @@ python tools/dump_plans.py
 from __future__ import annotations
 
 import dataclasses
+import dis
+import importlib
+import inspect
 import os
 import sys
+import types
 from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,6 +55,47 @@ ENGINE_DIRS = tuple(
 class Fingerprint:
     operators: frozenset[str]
     engine_calls: frozenset[str]
+
+
+def _named_functions(fn: types.FunctionType):
+    """Package functions that ``fn``'s code (nested lambdas and functions
+    included) loads as a global or imports by name."""
+    codes = [fn.__code__]
+    while codes:
+        code = codes.pop()
+        codes.extend(c for c in code.co_consts if isinstance(c, types.CodeType))
+        module = None
+        for ins in dis.get_instructions(code):
+            if ins.opname == "IMPORT_NAME":
+                module = ins.argval
+                continue
+            if ins.opname == "LOAD_GLOBAL":
+                obj = fn.__globals__.get(ins.argval)
+            elif ins.opname == "IMPORT_FROM" and module.startswith("kinesis_sample_spark."):
+                obj = getattr(importlib.import_module(module), ins.argval, None)
+            else:
+                continue
+            obj = inspect.unwrap(obj) if callable(obj) else obj  # udf wrappers
+            if isinstance(obj, types.FunctionType) and obj.__module__.startswith(
+                "kinesis_sample_spark."
+            ):
+                yield obj
+
+
+def static_engine_calls(fn: types.FunctionType) -> set[str]:
+    """The engine functions reachable from ``fn`` through the package
+    functions each one names."""
+    seen, todo = set(), [fn]
+    while todo:
+        f = todo.pop()
+        if f not in seen:
+            seen.add(f)
+            todo.extend(_named_functions(f))
+    return {
+        f"{f.__module__.removeprefix('kinesis_sample_spark.')}.{f.__qualname__}"
+        for f in seen
+        if f.__code__.co_filename.startswith(ENGINE_DIRS)
+    }
 
 
 def fingerprint(q: Query, spark) -> tuple[Fingerprint, str]:
@@ -75,6 +123,7 @@ def fingerprint(q: Query, spark) -> tuple[Fingerprint, str]:
         run = run_query(dataclasses.replace(q, fn=traced), spark, SF)
     finally:
         release_checkpoints(spark)
+    calls |= static_engine_calls(q.fn)
     return Fingerprint(operator_set(run.plan), frozenset(calls)), run.plan
 
 
@@ -106,8 +155,9 @@ def main() -> None:
         "Generated by `tools/dump_plans.py`. A fingerprint is the operator set",
         "of the executed plan (AQE final and initial) plus the engine functions",
         "(`operators/`, `functions/`, `sources/`, `streaming/`) the query calls",
-        "while it builds its DataFrame. Equal fingerprints share a group,",
-        "numbered in registration order.",
+        "while it builds its DataFrame or names, directly or through the",
+        "package functions it names (kernels run by Python workers). Equal",
+        "fingerprints share a group, numbered in registration order.",
         "",
         summary + ".",
         "",
