@@ -31,7 +31,6 @@ STAGES = (
     ("quality: token entropy", "q194_token_entropy"),
     ("quality: bigram-LM cross-entropy", "q195_bigram_cross_entropy"),
     ("novelty: cross-doc 3-gram df=1 share", "q193_ngram_novelty"),
-    ("drift gate: two-sample KS", "q199_ks_drift"),
     ("drift: per-key exact Wasserstein-1", "q336_wasserstein_drift"),
     ("chunking (content-defined)", "q148_content_defined_chunks"),
     ("sequence packing (2048-token context)", "q111_sequence_packing"),

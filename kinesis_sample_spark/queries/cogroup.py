@@ -198,7 +198,7 @@ ORDER BY custkey
 def q336_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer EXACT Wasserstein-1 (earth-mover) distance between the
     early-period and late-period order-value distributions — the per-key
-    sibling the drift shelf lacked (q199 is one GLOBAL two-sample KS;
+    sibling the drift shelf lacked (a two-sample KS is one GLOBAL statistic;
     q240/q286 are categorical/quantile mixes). W1 is the curation-grade
     drift statistic: unlike KS's sup-norm it weighs HOW FAR mass moved,
     which is what decides whether a source's distribution shift matters

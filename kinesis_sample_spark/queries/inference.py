@@ -359,7 +359,7 @@ ORDER BY c.y
 )
 def q286_quantile_drift_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year drift of the order-value distribution's p10/p50/
-    p90 bands: WHERE the distribution moves, not just whether (q199's
+    p90 bands: WHERE the distribution moves, not just whether (a two-sample
     KS says "different", q240's L1 tracks categories — this tracks the
     numeric quantile skeleton over time, the monitor that separates
     "the tail grew" from "everything shifted"). Years pair against
@@ -993,7 +993,7 @@ FROM mm m, d
 def q324_ks_exponential_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sample Kolmogorov-Smirnov test of the event inter-arrival
     gaps against a FITTED exponential (lambda = n/sum(dt)): is the
-    arrival process Poisson? q199 compares two empirical samples; q289
+    arrival process Poisson? a two-sample KS compares two empirical samples; q289
     tests the count dispersion; this is the third arrival diagnostic —
     the distribution-shape test against the model queueing theory
     assumes. Outputs D+, D-, D, sqrt(n)*D and a 5%-level flag at the
@@ -1004,7 +1004,7 @@ def q324_ks_exponential_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: gaps are exact integer microseconds from a
     (ts, event_id)-ordered lag; ties collapse through a distinct-value
-    pre-aggregate + cumulative window (the q199 recipe), so the ECDF is
+    pre-aggregate + cumulative window (the two-sample KS recipe), so the ECDF is
     exact integers over n; each per-value KS term quantizes
     round(.,6)->DECIMAL BEFORE the max (exp() is the one transcendental
     — Java Math.exp vs libm can diverge 1 ulp, the q194 ln lesson), so

@@ -252,74 +252,3 @@ def q133_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_sample_frames_batches, FRAME_SCHEMA).orderBy(
         "doc_id", "frame_idx"
     )
-
-
-# ---------------------------------------------------------------------------
-# q178 — media resize: fixed-target downsampling over binary payloads.
-# ---------------------------------------------------------------------------
-_RESIZE_TARGET = 16  # output "pixels" per payload
-
-
-def resize_media(data: bytes, target: int = _RESIZE_TARGET) -> list[int]:
-    """Stub resampler: partition the byte payload into ``target`` nearly
-    equal block ranges (floor(i·L/target) boundaries — the integer analog
-    of nearest-neighbor image downsampling) and emit each block's byte-sum
-    checksum. A real imaging build would swap in PIL's resize; the
-    boundary arithmetic, 1:1 row mapping, and fixed-width output schema —
-    the Spark-side contract — stay identical."""
-    L = len(data)
-    out = []
-    for i in range(target):
-        lo = (i * L) // target
-        hi = ((i + 1) * L) // target
-        out.append(sum(data[lo:hi]) % 997)
-    return out
-
-
-def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cells = [resize_media(d) for d in pdf["media"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].values,
-                "src_len": [len(d) for d in pdf["media"]],
-                "resized": [" ".join(str(c) for c in cs) for cs in cells],
-            }
-        )
-
-
-@query(
-    "q178_media_resize",
-    oracle=f"""
-WITH cells AS (
-  SELECT doc_id, length(text) AS L,
-         list_transform(range(0, {_RESIZE_TARGET}), i ->
-           CAST(list_aggregate(
-                  list_transform(range((i * length(text)) // {_RESIZE_TARGET} + 1,
-                                       ((i + 1) * length(text)) // {_RESIZE_TARGET} + 1),
-                                 j -> ascii(substring(text, j, 1))),
-                  'sum') % 997 AS BIGINT)) AS cs
-  FROM documents
-)
-SELECT doc_id, L AS src_len,
-       array_to_string(list_transform(cs, c -> coalesce(CAST(c AS VARCHAR), '0')), ' ')
-         AS resized
-FROM cells
-ORDER BY doc_id
-""",
-)
-def q178_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The resize step of the multimodal pipeline (decode → features q50,
-    frame-sample q133, RESIZE here): every payload downsampled to a fixed
-    {_RESIZE_TARGET}-cell representation through Arrow-batched
-    mapInPandas, 1:1 row mapping, output shipped as a joined string. The
-    oracle recomputes the nearest-neighbor block boundaries and per-block
-    checksums over the UTF-8 stand-in bytes in SQL, so the resampling
-    geometry itself is value-gated. Map-only until the final sort; at
-    100 TB the binary column streams through Python once per row and
-    never shuffles."""
-    docs = load_table(spark, sf_dir, "documents")
-    media = docs.select("doc_id", F.encode("text", "UTF-8").alias("media"))
-    return media.mapInPandas(
-        _resize_batches, "doc_id bigint, src_len int, resized string"
-    ).orderBy("doc_id")

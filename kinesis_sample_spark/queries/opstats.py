@@ -455,7 +455,7 @@ def q277_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pooled two-proportion z-test: does the purchase share of weekend
     events (epoch-day % 7 in (2, 3) = Sat/Sun, day 0 = Thursday)
     differ from weekdays? The A/B-testing primitive the registry's test
-    family lacked (q199 KS compares continuous shapes, q262 ranks, q222
+    family lacked (KS compares continuous shapes, q262 ranks, q222
     is an independence table — this is the proportion comparison every
     experiment readout runs first).
 
@@ -703,7 +703,7 @@ def q280_source_lang_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence between each source's language mix and
     the corpus-wide mix: JSD = H(m) − (H(p)+H(q))/2 with m the even
     mixture — the bounded, symmetric atypicality score for source
-    vetting (q199/q240 compare numeric/categorical drift over TIME;
+    vetting (q240 compares categorical drift over TIME;
     this ranks sources against the corpus). Languages absent from a
     source contribute only their mixture/global terms (p·ln p → 0).
 

@@ -1,7 +1,7 @@
 """Robust / nonparametric statistics — round-12 additions.
 
 The registry's earlier statistics family is mostly parametric moments
-(q99 OLS, q145 covariance, q199 KS, q222 chi-square). This
+(q99 OLS, q145 covariance, q222 chi-square). This
 module adds the rank- and resistance-based estimators a data-quality
 pipeline reaches for when the parametric assumptions fail, plus two
 distributed-sketch laws:
@@ -450,7 +450,7 @@ FROM agg
 def q262_rank_sum_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) between the 'purchase' and 'click'
     value samples — the nonparametric two-sample location test the
-    registry lacked (q199 KS tests shape, q222 chi-square tests
+    registry lacked (KS tests shape, q222 chi-square tests
     categorical independence; this tests stochastic dominance). Ties get
     average ranks, carried as exact 2*rank BIGINTs (2*RANK() + ties - 1)
     and summed as DECIMAL (s2a ~ 2n^2 outgrows int64 near n~2e9 rows,

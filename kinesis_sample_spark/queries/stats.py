@@ -898,70 +898,6 @@ def q191_revenue_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q199 — two-sample Kolmogorov–Smirnov drift statistic.
-# ---------------------------------------------------------------------------
-_KS_A, _KS_B = "click", "purchase"
-
-
-@query(
-    "q199_ks_drift",
-    oracle=f"""
-WITH pts AS (
-    SELECT value,
-           SUM(CAST(event_type = '{_KS_A}' AS BIGINT)) AS a,
-           SUM(CAST(event_type = '{_KS_B}' AS BIGINT)) AS b
-    FROM events WHERE event_type IN ('{_KS_A}', '{_KS_B}')
-    GROUP BY value
-),
-cum AS (
-    SELECT SUM(a) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-           SUM(b) OVER (ORDER BY value ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb,
-           SUM(a) OVER () AS na, SUM(b) OVER () AS nb
-    FROM pts
-)
-SELECT CAST(MIN(na) AS BIGINT) AS n_a, CAST(MIN(nb) AS BIGINT) AS n_b,
-       MAX(abs(ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))) AS ks_d
-FROM cum
-""",
-)
-def q199_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov statistic between the 'click' and
-    'purchase' value distributions — the standard distribution-drift gate
-    a training pipeline runs between data snapshots or sources. D =
-    max |F_a(t) - F_b(t)| evaluated exactly: group both samples by value
-    (ties collapse, so a ROWS cumsum over the distinct-value order is the
-    correct right-continuous CDF), cumulative counts via window, ratios
-    of exact integers in identical doubles on both engines.
-
-    Scale: the value pre-aggregation is the only data-sized shuffle; the
-    CDF window then runs over distinct values. For 100 TB, bucket values
-    into ~1e4 quantile bins first (D error <= bin width) — the exact form
-    here is the oracle-checkable calibration baseline."""
-    ev = load_table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(_KS_A, _KS_B)
-    )
-    pts = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == _KS_A).cast("bigint")).alias("a"),
-        F.sum((F.col("event_type") == _KS_B).cast("bigint")).alias("b"),
-    )
-    wc = W.orderBy("value").rowsBetween(W.unboundedPreceding, W.currentRow)
-    wall = W.orderBy("value").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    cum = pts.select(
-        F.sum("a").over(wc).alias("ca"),
-        F.sum("b").over(wc).alias("cb"),
-        F.sum("a").over(wall).alias("na"),
-        F.sum("b").over(wall).alias("nb"),
-    )
-    return cum.agg(
-        F.min("na").alias("n_a"),
-        F.min("nb").alias("n_b"),
-        F.max(
-            F.abs(F.col("ca") / F.col("na").cast("double") - F.col("cb") / F.col("nb").cast("double"))
-        ).alias("ks_d"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # q212 — mergeable-histogram percentile bridge (estimate vs exact audit).
 # ---------------------------------------------------------------------------
 _BRIDGE_BINS = 20
@@ -1339,7 +1275,7 @@ ORDER BY o_orderpriority
 def q216_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection per order priority: the day where the
     cumulative deviation of daily revenue from its flat-mean expectation
-    peaks — the classic level-shift detector, complementing q199's KS
+    peaks — the classic level-shift detector, complementing a KS
     distribution drift with a *location in time*. cusum_k = prefix_k -
     k * total / n, where prefix and total are exact decimal window sums
     (order-independent) and only the final three ops (multiply, divide,
@@ -1550,7 +1486,7 @@ FROM terms
 def q222_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square independence audit between event type and
     day-of-week — the contingency drift check (a seasonality-dependent
-    event mix fails it; complements q199's 1-D KS with a 2-D categorical
+    event mix fails it; complements a 1-D KS with a 2-D categorical
     test). Day index = days-since-epoch mod 7 (identical integer on both
     engines; avoids the engines' different dayofweek() origins). Each
     cell's (o-e)^2/e runs in fixed-order double arithmetic and is
@@ -1758,8 +1694,8 @@ GROUP BY y ORDER BY y
 def q240_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year categorical mix shift: the L1 (total-variation x2)
     distance between consecutive years' order-priority share vectors —
-    the composition-drift monitor that complements q199 (numeric KS,
-    two fixed samples) and q222 (categorical chi-square, static) with a
+    the composition-drift monitor that complements a two-sample KS
+    (numeric, two fixed samples) and q222 (categorical chi-square, static) with a
     *time series* of drift. Shares are single divisions of exact counts;
     each |delta| is quantized round(.,6) -> DECIMAL so the per-year sum
     is order-independent (the q222 rule).

@@ -1,8 +1,10 @@
 """Live Structured Streaming queries, driver-gated.
 
-Everything else in the registry is batch; these two callables actually
-*run a streaming query* (file-source replay of events → envelope →
-transformation → memory sink, availableNow) and return the final table —
+Everything else in the registry is batch; these callables actually *run
+a streaming query* (file-source replay of events written by
+``sources.files.replay_frame`` → envelope → transformation → sink,
+drained by ``streaming.pipeline.drain_available_now`` or its memory-sink
+form ``drain_to_memory``) and return the final table —
 so the driver's DuckDB oracle hash-checks real streaming execution, not a
 batch mirror. Complete-mode + a watermark wider than the fixture's
 event-time span make the bounded run deterministic (production trades
@@ -12,42 +14,67 @@ that for bounded state; see tests/test_streaming.py).
 from __future__ import annotations
 
 import os
+import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
-from kinesis_sample_spark.operators.upsert import write_epoch
+from kinesis_sample_spark.operators.upsert import (
+    foreach_batch_dual_sink,
+    foreach_batch_upsert,
+    write_epoch,
+)
 from kinesis_sample_spark.queries import query
 from kinesis_sample_spark.scratch import scratch_dir
 from kinesis_sample_spark.sources.files import (
-    EVENTS_SCHEMA,
     replay_events_stream,
+    replay_frame,
     write_stream_fixture,
 )
-from kinesis_sample_spark.streaming.envelope import envelope_from_events
+from kinesis_sample_spark.streaming.dlq import split_dlq
+from kinesis_sample_spark.streaming.envelope import decode_envelope, envelope_from_events
+from kinesis_sample_spark.streaming.observe import (
+    CollectingListener,
+    ObservedMetricsListener,
+)
 from kinesis_sample_spark.streaming.pipeline import (
     drain_available_now,
+    drain_to_memory,
+    last_emission,
+    stop_query,
+    streaming_dedup,
     streaming_window_counts,
+)
+from kinesis_sample_spark.streaming.stateful import (
+    retry_process,
+    stateful_key_counts,
+    timeout_sessions,
 )
 
 
 def _replay(
-    spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
+    spark: SparkSession,
+    sf_dir: str,
+    files_per_trigger: int = 1,
+    time_ordered: bool = False,
 ) -> DataFrame:
-    out = scratch_dir(prefix="kss_live_")
-    events_dir = write_stream_fixture(spark, sf_dir, out, n_files=4)
-    return replay_events_stream(spark, events_dir, files_per_trigger=files_per_trigger)
-
-
-def _run(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    name = f"live_{uuid.uuid4().hex[:12]}"
-    drain_available_now(
-        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
-        what=f"live query {name}",
-    )
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
+    """The events fixture replayed as 4 files, one per trigger by default:
+    round-robin files, or with ``time_ordered`` files range-partitioned on
+    ts, so file k's span precedes file k+1's and a *finite* watermark
+    delay never drops rows (the round-robin files interleave old rows
+    into every batch and force the 3650-day delay). A finite delay is
+    what lets the final watermark pass event times — the precondition for
+    outer-join state expiry and event-time timeouts. ``replay_frame``
+    stamps mtimes in file order, so the time-ordered files are also read
+    in ts order: a late-range file read first would jump the watermark
+    and drop every earlier file's rows as late."""
+    events = load_table(spark, sf_dir, "events")
+    frame = events.repartitionByRange(4, "ts") if time_ordered else events.repartition(4)
+    out = os.path.join(scratch_dir(prefix="kss_live_"), "events_stream")
+    return replay_frame(frame, out, 4, files_per_trigger)
 
 
 # ---------------------------------------------------------------------------
@@ -73,7 +100,8 @@ def q80_live_streaming_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour boundary, so the SQL needs no truncation gymnastics."""
     env = envelope_from_events(_replay(spark, sf_dir))
     agg = streaming_window_counts(env, window="1 hour", watermark="3650 days")
-    return _run(agg, "complete").orderBy("w_start", "partitionKey")
+    q = drain_to_memory(agg, "complete")
+    return spark.table(q.name).orderBy("w_start", "partitionKey")
 
 
 # ---------------------------------------------------------------------------
@@ -93,19 +121,11 @@ def q81_live_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (simulating post-failover replay), dropDuplicatesWithinWatermark
     collapses it, and the oracle is the distinct key set — if streaming
     dedup ever under- or over-collapses, the hash breaks."""
-    from kinesis_sample_spark.streaming.dlq import split_dlq
-    from kinesis_sample_spark.streaming.envelope import decode_envelope
-
     stream = _replay(spark, sf_dir)
-    doubled = stream.unionByName(stream)
-    decoded = decode_envelope(envelope_from_events(doubled))
-    good, _ = split_dlq(decoded, "event_ts")
-    dedup = (
-        good.withWatermark("event_ts", "3650 days")
-        .dropDuplicatesWithinWatermark(["partitionKey", "sequenceNumber"])
-        .select("partitionKey", "sequenceNumber")
-    )
-    return _run(dedup, "append").orderBy("partitionKey", "sequenceNumber")
+    doubled = envelope_from_events(stream.unionByName(stream))
+    dedup = streaming_dedup(doubled, watermark="3650 days")
+    q = drain_to_memory(dedup.select("partitionKey", "sequenceNumber"))
+    return spark.table(q.name).orderBy("partitionKey", "sequenceNumber")
 
 
 # ---------------------------------------------------------------------------
@@ -127,20 +147,10 @@ def q82_live_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger forces multiple batches); the last emission per key must equal
     the batch group count — checking both the pandas-state plumbing and
     the cross-batch state carry."""
-    from pyspark.sql import Window as W
-
-    from kinesis_sample_spark.streaming.stateful import stateful_key_counts
-
-    out = scratch_dir(prefix="kss_live_")
-    events_dir = write_stream_fixture(spark, sf_dir, out, n_files=4)
-    env = envelope_from_events(
-        replay_events_stream(spark, events_dir, files_per_trigger=1)
-    )
-    emissions = _run(stateful_key_counts(env), "update")
-    w = W.partitionBy("partitionKey").orderBy(F.col("n_records").desc())
+    env = envelope_from_events(_replay(spark, sf_dir))
+    q = drain_to_memory(stateful_key_counts(env), "update")
     return (
-        emissions.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        last_emission(spark.table(q.name), "partitionKey", "n_records")
         .select("partitionKey", "n_records")
         .orderBy("partitionKey")
     )
@@ -184,9 +194,8 @@ def q106_live_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     then globally sorted). Pinned empirically by the emission-equivalence
     harness (tests/test_emission_equivalence.py) which runs 1-file and
     4-file batchings and asserts identical emitted multisets."""
-    return _run(_q106_joined(spark, sf_dir, files_per_trigger=4), "append").orderBy(
-        "signup_id", "purchase_id"
-    )
+    q = drain_to_memory(_q106_joined(spark, sf_dir, files_per_trigger=4))
+    return spark.table(q.name).orderBy("signup_id", "purchase_id")
 
 
 def _q106_joined(
@@ -251,20 +260,9 @@ def q112_live_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     global version column, the final state is independent of batch
     arrival order and of replays — the idempotent-sink half of the
     exactly-once story (A13/A14) made checkable."""
-    import os
-
-    from kinesis_sample_spark.operators.upsert import foreach_batch_upsert
-    from kinesis_sample_spark.sources.files import (
-        replay_events_stream,
-        write_stream_fixture,
-    )
-
-    out = scratch_dir(prefix="kss_live_")
-    events_dir = write_stream_fixture(spark, sf_dir, out, n_files=4)
-    table_path = os.path.join(out, "cdc_table")
-    stream = replay_events_stream(spark, events_dir, files_per_trigger=1)
+    table_path = os.path.join(scratch_dir(prefix="kss_live_"), "cdc_table")
     drain_available_now(
-        stream.writeStream.foreachBatch(
+        _replay(spark, sf_dir).writeStream.foreachBatch(
             foreach_batch_upsert(table_path, "user_id", "event_id")
         ),
         what="q112 CDC upsert drain",
@@ -316,16 +314,13 @@ def q126_live_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFram
     and a complete-mode aggregate's final table is the aggregate over
     ALL input whatever the batching. Equivalence pinned by
     tests/test_emission_equivalence.py."""
-    return _run(_q126_agg(spark, sf_dir, files_per_trigger=4), "complete").orderBy(
-        "partitionKey"
-    )
+    q = drain_to_memory(_q126_agg(spark, sf_dir, files_per_trigger=4), "complete")
+    return spark.table(q.name).orderBy("partitionKey")
 
 
 def _q126_agg(spark: SparkSession, sf_dir: str, files_per_trigger: int) -> DataFrame:
     """q126's streaming pipeline, parameterized by drain batching so the
     emission-equivalence harness can run both variants."""
-    from kinesis_sample_spark.catalog import load_table
-
     ev = load_table(spark, sf_dir, "events")
     prof = (
         ev.groupBy("user_id")
@@ -389,9 +384,6 @@ def q131_live_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key and windows close ``gap`` after the key's last event —
     state size tracks *active* keys, not history; the batch shape is a
     single keyed aggregation."""
-    from kinesis_sample_spark.streaming.dlq import split_dlq
-    from kinesis_sample_spark.streaming.envelope import decode_envelope
-
     stream = decode_envelope(envelope_from_events(_replay(spark, sf_dir)))
     good, _ = split_dlq(stream, "event_ts")
     agg = (
@@ -406,63 +398,14 @@ def q131_live_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run(agg, "complete").orderBy("partitionKey", "session_start")
+    q = drain_to_memory(agg, "complete")
+    return spark.table(q.name).orderBy("partitionKey", "session_start")
 
 
 # ---------------------------------------------------------------------------
 # q153 — LIVE left-outer stream-stream join (outer rows need watermark
 # progress: the only join flavor whose output depends on state EXPIRY).
 # ---------------------------------------------------------------------------
-
-
-def _replay_time_ordered(
-    spark: SparkSession, sf_dir: str, files_per_trigger: int = 1
-) -> DataFrame:
-    """Replay with files range-partitioned on ts: file k's span precedes
-    file k+1's, so a *finite* watermark delay never drops rows (the
-    round-robin fixture of _replay would interleave old rows into every
-    batch and force the 3650-day delay). A finite delay is what lets the
-    final watermark actually pass event times — the precondition for
-    outer-join state expiry.
-
-    The one determinism guard (required on Spark ≥4.1): the file source
-    orders files by *modification time*, but parallel parquet writes
-    finish in arbitrary order — so the mtimes are explicitly rewritten to
-    ascend with the partition index (range partition i holds ts-range i),
-    stamped an hour in the past so no mtime is ever near the query-start
-    instant. Without this, a late-range file can be read first, jump the
-    watermark, and drop every earlier file's rows as late — a different
-    result every run.
-    """
-    out = scratch_dir(prefix="kss_live_")
-    events_dir = os.path.join(out, "events_stream")
-    events = load_table(spark, sf_dir, "events")
-    events.repartitionByRange(4, "ts").write.mode("overwrite").parquet(events_dir)
-
-    def _parts() -> list[str]:
-        return sorted(
-            f for f in os.listdir(events_dir)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-
-    import time
-
-    base = int(time.time()) - 3600
-    parts = _parts()
-    # Exactly 4 data files, explicitly: FileFormatWriter SKIPS empty range
-    # partitions, so a fixture whose ts range leaves one empty would write
-    # fewer files — and q331's oracle (last_batch_id = 4: four data batches
-    # under maxFilesPerTrigger=1 plus availableNow's final no-data batch)
-    # would fail with a confusing parity mismatch instead of this error.
-    if len(parts) != 4:  # not assert: must survive `python -O`
-        raise RuntimeError(
-            f"_replay_time_ordered wrote {len(parts)} data files, expected 4 "
-            f"(empty range partition in the events fixture?) — q331's batch-id "
-            f"arithmetic and the finite-watermark replay contract assume 4"
-        )
-    for i, fname in enumerate(parts):  # part-0000i holds ts-range i
-        os.utime(os.path.join(events_dir, fname), (base + i, base + i))
-    return replay_events_stream(spark, events_dir, files_per_trigger=files_per_trigger)
 
 
 @query(
@@ -505,8 +448,8 @@ def q153_live_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff its join-window end ``ts + 1h`` is ≤ that watermark − 1ms. Inner
     matches emit unconditionally. Signups newer than the boundary remain
     in (discarded) state and must NOT appear — a hash gate on the
-    eviction rule itself. Time-ordered replay files (deterministic
-    mtimes) keep the finite watermark from dropping input.
+    eviction rule itself. Time-ordered replay files (read in ts order)
+    keep the finite watermark from dropping input.
 
     Optimization r17 (guide §1 — the cost was micro-batch trigger
     scheduling): the drain takes all 4 files in ONE trigger. The emitted
@@ -524,9 +467,8 @@ def q153_live_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     all the data regardless of how it was batched. Pinned empirically by
     tests/test_emission_equivalence.py (1-file vs 4-file drain, identical
     emitted multisets including the null-padded rows)."""
-    return _run(_q153_joined(spark, sf_dir, files_per_trigger=4), "append").orderBy(
-        "signup_id", "purchase_id"
-    )
+    q = drain_to_memory(_q153_joined(spark, sf_dir, files_per_trigger=4))
+    return spark.table(q.name).orderBy("signup_id", "purchase_id")
 
 
 def _q153_joined(
@@ -534,7 +476,7 @@ def _q153_joined(
 ) -> DataFrame:
     """q153's streaming pipeline, parameterized by drain batching so the
     emission-equivalence harness can run both variants."""
-    st = _replay_time_ordered(spark, sf_dir, files_per_trigger=files_per_trigger)
+    st = _replay(spark, sf_dir, files_per_trigger, time_ordered=True)
     a = (
         st.withWatermark("ts", "1 hour")
         .filter(F.col("event_type") == "signup")
@@ -571,44 +513,6 @@ def _q153_joined(
 # ---------------------------------------------------------------------------
 
 
-def _replay_id_sliced(spark: SparkSession, sf_dir: str, n_files: int = 4) -> DataFrame:
-    """Replay with files sliced on *event_id* quartiles (not ts ranges):
-    the slice boundaries are pure integer arithmetic on event_id, so the
-    oracle can reconstruct exactly which events each micro-batch carried —
-    the precondition for gating UPDATE-mode emission, whose output is one
-    row per (key, batch-that-changed-it). Ascending past-stamped mtimes
-    (see _replay_time_ordered) make file order — and therefore the batch
-    schedule — deterministic."""
-    out = scratch_dir(prefix="kss_live_")
-    events_dir = os.path.join(out, "events_stream")
-    events = load_table(spark, sf_dir, "events")
-    n = events.count()
-    slice_col = F.floor(F.col("event_id") * n_files / F.lit(n)).cast("int")
-    (
-        events.withColumn("slice", F.least(slice_col, F.lit(n_files - 1)))
-        .repartition(1)
-        .sortWithinPartitions("slice", "event_id")
-        .write.mode("overwrite")
-        .partitionBy("slice")
-        .parquet(events_dir)
-    )
-    import time
-
-    base = int(time.time()) - 3600
-    # one subdirectory per slice; stamp every file under slice=i with base+i
-    for i in range(n_files):
-        sdir = os.path.join(events_dir, f"slice={i}")
-        for fname in os.listdir(sdir):
-            if fname.endswith(".parquet"):
-                os.utime(os.path.join(sdir, fname), (base + i, base + i))
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(os.path.join(events_dir, "slice=*"))
-    )
-
-
 @query(
     "q164_live_update_mode",
     oracle="""
@@ -642,14 +546,26 @@ def q164_live_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliced batches differently, the hash breaks. Watermark far wider than
     the fixture span: no state eviction, pure incremental-emission
     semantics."""
-    st = _replay_id_sliced(spark, sf_dir)
+    events = load_table(spark, sf_dir, "events")
+    n = events.count()
+    # file i holds the events whose event_id falls in quartile i — pure
+    # integer arithmetic, so the oracle can reconstruct exactly which
+    # events each micro-batch carried
+    slice_col = F.floor(F.col("event_id") * 4 / F.lit(n)).cast("int")
+    st = replay_frame(
+        events.withColumn("slice", F.least(slice_col, F.lit(3))),
+        os.path.join(scratch_dir(prefix="kss_live_"), "events_stream"),
+        4,
+        by="slice",
+    )
     agg = (
         st.withWatermark("ts", "3650 days")
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count("*").alias("n_records"))
         .select(F.col("w.start").alias("w_start"), "user_id", "n_records")
     )
-    return _run(agg, "update").orderBy("w_start", "user_id", "n_records")
+    q = drain_to_memory(agg, "update")
+    return spark.table(q.name).orderBy("w_start", "user_id", "n_records")
 
 
 # ---------------------------------------------------------------------------
@@ -735,8 +651,6 @@ def q171_live_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFram
     LAST emission per key (max strictly-increasing count) must equal the
     batch aggregate. Integer cents keep sums associative → hash is
     parallelism-proof."""
-    from pyspark.sql import Window as W
-
     st = _replay(spark, sf_dir)
     if _twsip_available():  # pragma: no cover — protobuf absent here
         out = st.groupBy("user_id").transformWithStateInPandas(
@@ -772,11 +686,9 @@ def q171_live_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFram
             outputMode="Update",
             timeoutConf="NoTimeout",
         )
-    emissions = _run(out, "update")
-    w = W.partitionBy("user_id").orderBy(F.col("n").desc())
+    q = drain_to_memory(out, "update")
     return (
-        emissions.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        last_emission(spark.table(q.name), "user_id", "n")
         .select("user_id", "n", "cents")
         .orderBy("user_id")
     )
@@ -838,15 +750,14 @@ def q184_live_retry_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (retry_process docstring); keys partition with the stream, so a
     1000-executor run shards the retry bookkeeping exactly like the
     KCL's per-shard processors — no coordination beyond the state store."""
-    from kinesis_sample_spark.streaming.stateful import retry_process
-
     stream = _replay(spark, sf_dir).filter(F.col("event_id") < _RETRY_BOUND)
     env = stream.select(
         F.encode(F.col("event_id").cast("string"), "UTF-8").alias("data"),
         F.col("event_id").cast("string").alias("sequenceNumber"),
     )
     out = retry_process(env, _flaky_process, max_attempts=_RETRY_MAX_ATTEMPTS)
-    return _run(out, "update").orderBy("sequenceNumber")
+    q = drain_to_memory(out, "update")
+    return spark.table(q.name).orderBy("sequenceNumber")
 
 
 # ---------------------------------------------------------------------------
@@ -930,20 +841,13 @@ def q185_live_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             what="q185 incarnation",
         )
 
-    import shutil
-
     try:
         for half in halves:
             half.coalesce(2).write.mode("append").parquet(src)
             run_incarnation()
 
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy("user_id").orderBy(F.col("n_records").desc())
         last = (
-            spark.read.parquet(emissions)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            last_emission(spark.read.parquet(emissions), "user_id", "n_records")
             .select("user_id", "n_records", "cents")
             .orderBy("user_id")
         )
@@ -1017,14 +921,6 @@ def q186_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the KCL's per-shard metric emission folded into per-stream
     CloudWatch sums; no extra shuffle, state, or driver loop. The
     listener holds one dict per batch, not per record."""
-    import shutil
-    import time
-
-    from kinesis_sample_spark.streaming.observe import (
-        CollectingListener,
-        ObservedMetricsListener,
-    )
-
     base = scratch_dir(prefix="kss_a17_")
     metric_name = f"a17_{uuid.uuid4().hex[:8]}"  # isolate from other queries
     obs_listener = ObservedMetricsListener(metric_name)
@@ -1032,13 +928,12 @@ def q186_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.streams.addListener(obs_listener)
     spark.streams.addListener(log_listener)
     try:
-        events_dir = write_stream_fixture(spark, sf_dir, base, n_files=4)
+        events = load_table(spark, sf_dir, "events")
+        st = replay_frame(events.repartition(4), os.path.join(base, "events_stream"), 4)
         # bounded input ⇒ the expected record count is known up front (one
         # metadata-scale action); the poll below waits for the async
         # listener bus to deliver the final batch's events
-        expected_n = load_table(spark, sf_dir, "events").count()
-
-        st = replay_events_stream(spark, events_dir)
+        expected_n = events.count()
         metrics = [
             F.count(F.lit(1)).alias("n_records"),
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
@@ -1147,13 +1042,6 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     The emission log writes each epoch to its own directory
     (``write_epoch``), so a replayed boundary batch overwrites its first
     write instead of appending a second copy."""
-    import shutil
-    import time
-
-    from pyspark.sql import Window as W
-
-    from kinesis_sample_spark.streaming.pipeline import stop_query
-
     base = scratch_dir(prefix="kss_a16_")
     ck = os.path.join(base, "ck")
     emissions = os.path.join(base, "emissions")
@@ -1233,11 +1121,8 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             what="q187 phase 2",
         )
 
-        w = W.partitionBy("user_id").orderBy(F.col("n_records").desc())
         last = (
-            spark.read.parquet(emissions)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            last_emission(spark.read.parquet(emissions), "user_id", "n_records")
             .select("user_id", "n_records", "cents", "max_event_id")
             .orderBy("user_id")
         )
@@ -1262,28 +1147,14 @@ def _two_parity_streams(
 ) -> tuple[DataFrame, DataFrame]:
     """Two independent event streams: even event_ids (ascending order)
     and odd event_ids (descending — different arrival order), each its
-    own directory + readStream, one file per micro-batch."""
+    own directory + readStream of two files, one file per micro-batch."""
     out = scratch_dir(prefix="kss_live2_")
     ev = load_table(spark, sf_dir, "events")
-    even_dir = os.path.join(out, "even")
-    odd_dir = os.path.join(out, "odd")
-    (
-        ev.filter(F.col("event_id") % 2 == 0)
-        .repartition(2)
-        .sortWithinPartitions("event_id")
-        .write.mode("overwrite")
-        .parquet(even_dir)
-    )
-    (
-        ev.filter(F.col("event_id") % 2 == 1)
-        .repartition(2)
-        .sortWithinPartitions(F.col("event_id").desc())
-        .write.mode("overwrite")
-        .parquet(odd_dir)
-    )
+    even = ev.filter(F.col("event_id") % 2 == 0).repartition(2)
+    odd = ev.filter(F.col("event_id") % 2 == 1).repartition(2)
     return (
-        replay_events_stream(spark, even_dir),
-        replay_events_stream(spark, odd_dir),
+        replay_frame(even.sortWithinPartitions("event_id"), f"{out}/even", 2),
+        replay_frame(odd.sortWithinPartitions(F.col("event_id").desc()), f"{out}/odd", 2),
     )
 
 
@@ -1345,7 +1216,8 @@ def q290_live_union_two_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_event_id",
         )
     )
-    return _run(agg, "complete").orderBy("w_start", "event_type")
+    q = drain_to_memory(agg, "complete")
+    return spark.table(q.name).orderBy("w_start", "event_type")
 
 
 @query(
@@ -1377,27 +1249,19 @@ def q291_live_union_dedup_across_streams(spark: SparkSession, sf_dir: str) -> Da
     not state."""
     out = scratch_dir(prefix="kss_live2_")
     ev = load_table(spark, sf_dir, "events")
-    all_dir = os.path.join(out, "all")
-    third_dir = os.path.join(out, "third")
-    ev.repartition(3).write.mode("overwrite").parquet(all_dir)
-    (
-        ev.filter(F.col("event_id") % 3 == 0)
-        .repartition(1)
-        .write.mode("overwrite")
-        .parquet(third_dir)
-    )
-    s_all = replay_events_stream(spark, all_dir).withWatermark("ts", "3650 days")
-    s_third = replay_events_stream(spark, third_dir).withWatermark(
-        "ts", "3650 days"
-    )
+    third = ev.filter(F.col("event_id") % 3 == 0).repartition(1)
+    s_all = replay_frame(ev.repartition(3), f"{out}/all", 3)
+    s_third = replay_frame(third, f"{out}/third", 1)
     dedup = (
-        s_all.unionByName(s_third)
+        s_all.withWatermark("ts", "3650 days")
+        .unionByName(s_third.withWatermark("ts", "3650 days"))
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type")
     )
-    emitted = _run(dedup, "append")
+    q = drain_to_memory(dedup)
     return (
-        emitted.groupBy("event_type")
+        spark.table(q.name)
+        .groupBy("event_type")
         .agg(F.count("*").alias("n_dedup"))
         .orderBy("event_type")
     )
@@ -1440,37 +1304,13 @@ def q292_live_union_heterogeneous_schema(spark: SparkSession, sf_dir: str) -> Da
     matrix."""
     out = scratch_dir(prefix="kss_live2_")
     ev = load_table(spark, sf_dir, "events")
-    vdir = os.path.join(out, "value_stream")
-    pdir = os.path.join(out, "props_stream")
-    (
-        ev.filter(F.col("event_id") % 2 == 0)
-        .drop("props")
-        .repartition(2)
-        .write.mode("overwrite")
-        .parquet(vdir)
+    value_only = ev.filter(F.col("event_id") % 2 == 0).drop("props").repartition(2)
+    props_only = ev.filter(F.col("event_id") % 2 == 1).drop("value").repartition(2)
+    s_value = replay_frame(value_only, f"{out}/value_stream", 2).withColumn(
+        "src", F.lit("value_stream")
     )
-    (
-        ev.filter(F.col("event_id") % 2 == 1)
-        .drop("value")
-        .repartition(2)
-        .write.mode("overwrite")
-        .parquet(pdir)
-    )
-    import pyspark.sql.types as T
-
-    v_schema = T.StructType([f for f in EVENTS_SCHEMA if f.name != "props"])
-    p_schema = T.StructType([f for f in EVENTS_SCHEMA if f.name != "value"])
-    s_value = (
-        spark.readStream.schema(v_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(vdir)
-        .withColumn("src", F.lit("value_stream"))
-    )
-    s_props = (
-        spark.readStream.schema(p_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pdir)
-        .withColumn("src", F.lit("props_stream"))
+    s_props = replay_frame(props_only, f"{out}/props_stream", 2).withColumn(
+        "src", F.lit("props_stream")
     )
     unioned = s_value.withWatermark("ts", "3650 days").unionByName(
         s_props.withWatermark("ts", "3650 days"), allowMissingColumns=True
@@ -1480,7 +1320,8 @@ def q292_live_union_heterogeneous_schema(spark: SparkSession, sf_dir: str) -> Da
         F.count("value").alias("n_value"),
         F.count("props").alias("n_props"),
     )
-    return _run(agg, "complete").orderBy("src")
+    q = drain_to_memory(agg, "complete")
+    return spark.table(q.name).orderBy("src")
 
 
 @query(
@@ -1514,8 +1355,6 @@ def q293_live_priority_merge_latest(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: the upsert is one shuffle per micro-batch on the key; union
     fan-in adds producers without changing the sink contract, because
     the version column (not arrival order) decides every collision."""
-    from kinesis_sample_spark.operators.upsert import foreach_batch_upsert
-
     out = scratch_dir(prefix="kss_live2_")
     table_path = os.path.join(out, "merged_table")
     s_even, s_odd = _two_parity_streams(spark, sf_dir)
@@ -1576,18 +1415,12 @@ def q313_live_dual_sink_consistency(spark: SparkSession, sf_dir: str) -> DataFra
     read-modify-write);
     the aggregate table is bounded by |event_type| so its per-epoch
     merge reads KBs regardless of stream volume."""
-    import os
-
-    from kinesis_sample_spark.operators.upsert import foreach_batch_dual_sink
-
     out = scratch_dir(prefix="kss_live2_")
-    events_dir = write_stream_fixture(spark, sf_dir, out, n_files=4)
     raw_dir = os.path.join(out, "raw_sink")
     agg_path = os.path.join(out, "agg_table")
-    stream = replay_events_stream(spark, events_dir, files_per_trigger=1)
+    sink = foreach_batch_dual_sink(raw_dir, agg_path)
     drain_available_now(
-        stream.writeStream.foreachBatch(foreach_batch_dual_sink(raw_dir, agg_path)),
-        what="q313 dual-sink drain",
+        _replay(spark, sf_dir).writeStream.foreachBatch(sink), what="q313 dual-sink drain"
     )
     agg = spark.read.parquet(agg_path)
     re_agg = (
@@ -1651,11 +1484,11 @@ def q316_live_rate_limited_backlog(spark: SparkSession, sf_dir: str) -> DataFram
 
     - one_file_per_trigger: the MULTISET of per-batch input-row counts
       equals the multiset of per-file row counts — every trigger
-      consumed exactly one file, none was split or coalesced. (The
-      multiset, not the sequence: the file source orders by
-      modification time, which ties under parallel writers — the
-      round-14 prototype measured arrival order as layout-dependent,
-      so order is NOT gateable and equality-as-multiset is.)
+      consumed exactly one file, none was split or coalesced. File
+      order is deterministic (``replay_frame`` stamps mtimes in file
+      order, and ``tests/test_sources.py`` checks the in-order law on
+      the writer itself); the law here stays a multiset check, which is
+      all that "one file per trigger" needs.
     - drained_in_file_count_batches: exactly 8 data batches (plus at
       most one trailing empty commit batch).
     - watermark_monotone / watermark_advanced: the watermark never
@@ -1675,14 +1508,12 @@ def q316_live_rate_limited_backlog(spark: SparkSession, sf_dir: str) -> DataFram
     growth on a backlogged source (the 100 TB restart story: a cold
     consumer must not load the whole backlog into one micro-batch);
     aggregate state is (event_type)-keyed, trivially bounded."""
-    out = scratch_dir(prefix="kss_backlog_")
+    events_dir = os.path.join(scratch_dir(prefix="kss_backlog_"), "sliced")
     ev = load_table(spark, sf_dir, "events")
-    events_dir = os.path.join(out, "sliced")
-    (
-        ev.repartitionByRange(_BACKLOG_FILES, "ts")
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .parquet(events_dir)
+    stream = replay_frame(  # maxFilesPerTrigger=1
+        ev.repartitionByRange(_BACKLOG_FILES, "ts").sortWithinPartitions("ts"),
+        events_dir,
+        _BACKLOG_FILES,
     )
     file_counts = sorted(
         r["n"]
@@ -1693,7 +1524,6 @@ def q316_live_rate_limited_backlog(spark: SparkSession, sf_dir: str) -> DataFram
     )
     n_total = sum(file_counts)
 
-    stream = replay_events_stream(spark, events_dir)  # maxFilesPerTrigger=1
     agg = (
         stream.withWatermark("ts", "3650 days")
         .groupBy("event_type")
@@ -1706,11 +1536,7 @@ def q316_live_rate_limited_backlog(spark: SparkSession, sf_dir: str) -> DataFram
             F.max("event_id").alias("max_event_id"),
         )
     )
-    name = f"backlog_{uuid.uuid4().hex[:12]}"
-    q = drain_available_now(
-        agg.writeStream.format("memory").queryName(name).outputMode("complete"),
-        what="q316 backlog drain",
-    )
+    q = drain_to_memory(agg, "complete")
 
     progs = q.recentProgress
     data_batches = [p for p in progs if p["numInputRows"] > 0]
@@ -1729,7 +1555,7 @@ def q316_live_rate_limited_backlog(spark: SparkSession, sf_dir: str) -> DataFram
     advanced = bool(marks) and marks[-1] > "1971-01-01T00:00:00.000Z"
     totals = sum(batch_rows) == n_total
     return (
-        spark.sql(f"SELECT * FROM {name}")
+        spark.table(q.name)
         .select(
             "event_type",
             "n_events",
@@ -1833,16 +1659,9 @@ def q328_live_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: see timeout_sessions — O(active keys) state with
     watermark-driven eviction; per-batch shuffle is that batch's rows
     keyed by user, the same topology a 1000-executor cluster runs."""
-    from kinesis_sample_spark.streaming.stateful import timeout_sessions
-
-    stream = _replay_time_ordered(spark, sf_dir).withWatermark("ts", "1 hour")
-    sessions = timeout_sessions(stream, _TIMEOUT_GAP_MS)
-    name = f"live_{uuid.uuid4().hex[:12]}"
-    drain_available_now(
-        sessions.writeStream.format("memory").queryName(name).outputMode("append"),
-        what="q328 session drain",
-    )
-    return spark.sql(f"SELECT * FROM {name}").orderBy("user_id", "session_start")
+    stream = _replay(spark, sf_dir, time_ordered=True).withWatermark("ts", "1 hour")
+    q = drain_to_memory(timeout_sessions(stream, _TIMEOUT_GAP_MS))
+    return spark.table(q.name).orderBy("user_id", "session_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1893,21 +1712,10 @@ def q331_live_state_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     same read diagnoses skewed/leaking state without touching the
     running query. The checkpoint is per-run scratch, so the audit is
     hermetic and idempotent."""
-    from kinesis_sample_spark.streaming.stateful import timeout_sessions
-
-    out = scratch_dir(prefix="kss_live_")
-    ck = os.path.join(out, "ck")
-    stream = _replay_time_ordered(spark, sf_dir).withWatermark("ts", "1 hour")
-    sessions = timeout_sessions(stream, _TIMEOUT_GAP_MS)
-    name = f"live_{uuid.uuid4().hex[:12]}"
-    drain_available_now(
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ck),
-        what="q331 session drain",
-    )
-    n_emitted = spark.sql(f"SELECT count(*) AS c FROM {name}").collect()[0].c
+    ck = os.path.join(scratch_dir(prefix="kss_live_"), "ck")
+    stream = _replay(spark, sf_dir, time_ordered=True).withWatermark("ts", "1 hour")
+    q = drain_to_memory(timeout_sessions(stream, _TIMEOUT_GAP_MS), checkpoint=ck)
+    n_emitted = spark.table(q.name).count()
 
     md = (
         spark.read.format("state-metadata").load(ck)

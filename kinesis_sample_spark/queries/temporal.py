@@ -842,8 +842,8 @@ def q261_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order inter-arrival gaps per customer (days between consecutive
     orders, tie-broken by orderkey), aggregated by market segment: mean,
     coefficient of variation (cv ~ 1 is the memoryless/Poisson
-    signature; q218 measures fulfillment latency, this measures demand
-    cadence), and p50/p90.
+    signature; this measures demand cadence, not fulfillment latency),
+    and p50/p90.
 
     Gaps are exact day INTs; mean/cv derive from exact BIGINT moments
     with an identical double expression in both engines, quantized

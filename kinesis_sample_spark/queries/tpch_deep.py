@@ -1,11 +1,10 @@
-"""TPC-H deepest cuts (Q8/Q9/Q12/Q13/Q15/Q16/Q17/Q20/Q21 analogs adapted
-to the fixture schema — no partsupp / shipmode / commitdate / receiptdate
-columns exist, see FIXTURES.md, so cost uses p_retailprice and "late" is
-defined against o_orderdate). Together with relational.py and tpch_more.py
-this makes the TPC-H shape coverage effectively complete: market-share
-ratio-of-sums, two-level aggregation (group→distribution), argmax-by-join,
-NOT IN anti-join under count-distinct, correlated-average predicates, and
-the Q21 EXISTS/NOT EXISTS pair expressed as semi/anti joins.
+"""TPC-H deepest cuts (Q8/Q16/Q17/Q20/Q21 analogs adapted to the fixture
+schema — no partsupp / shipmode / commitdate / receiptdate columns exist,
+see FIXTURES.md, so cost uses p_retailprice and "late" is defined against
+o_orderdate). Together with relational.py and tpch_more.py these cover
+the TPC-H shapes: market-share ratio-of-sums, NOT IN anti-join under
+count-distinct, correlated-average predicates, and the Q21 EXISTS/NOT
+EXISTS pair expressed as semi/anti joins.
 
 Scale notes (100 TB): every fact-side join here shuffles once on its key
 and dims are broadcast; the Q21 exists/anti pair self-joins lineitem on
@@ -20,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
-from kinesis_sample_spark.functions.numeric import dec, dsum, sql_double
+from kinesis_sample_spark.functions.numeric import dec, sql_double
 from kinesis_sample_spark.queries import query
 
 _SQL_DISC_PRICE = (
@@ -100,186 +99,6 @@ def q84_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mkt_share")
         )
         .orderBy("o_year")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q85 — product-type profit (TPC-H Q9 shape; p_retailprice stands in for
-# the missing ps_supplycost).
-# ---------------------------------------------------------------------------
-@query(
-    "q85_profit_by_nation_year",
-    oracle=f"""
-SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-       {sql_double(
-           "SUM(" + _SQL_DISC_PRICE +
-           " - CAST(p_retailprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2)))"
-       )} AS sum_profit
-FROM part
-JOIN lineitem ON p_partkey = l_partkey
-JOIN supplier ON s_suppkey = l_suppkey
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN nation   ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%gear%'
-GROUP BY n_name, year(o_orderdate)
-ORDER BY nation, o_year DESC
-""",
-)
-def q85_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Profit = disc_price − retailprice·qty, all in exact decimal so the
-    600k-row sum is order-independent. part is filtered by a contains-LIKE
-    then broadcast; grouping key (nation, year) is tiny → near-total
-    map-side partial aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    part = F.broadcast(
-        load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
-    )
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
-    profit = _disc_price() - dec("p_retailprice") * dec("l_quantity")
-    return (
-        part.join(li, F.col("p_partkey") == F.col("l_partkey"))
-        .join(supp, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
-        )
-        .agg(dsum(profit, "sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# q86 — shipping-delay buckets x order priority (TPC-H Q12 shape; the
-# missing l_shipmode is replaced by a derived ship-delay bucket).
-# ---------------------------------------------------------------------------
-@query(
-    "q86_ship_delay_priority",
-    oracle="""
-SELECT ship_bucket,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
-         AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT)
-         AS low_line_count
-FROM (
-  SELECT o_orderpriority,
-         CASE WHEN date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) <= 30
-              THEN 'FAST'
-              WHEN date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) <= 90
-              THEN 'NORMAL'
-              ELSE 'SLOW' END AS ship_bucket
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-)
-GROUP BY ship_bucket
-ORDER BY ship_bucket
-""",
-)
-def q86_ship_delay_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer day-diff bucketing (exact on both engines) then conditional
-    counts — the Q12 two-counters-per-group idiom. One shuffle for the
-    orders⋈lineitem join on orderkey; the 3-row aggregate is map-side."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    delay = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate"))
-    bucket = (
-        F.when(delay <= 30, "FAST").when(delay <= 90, "NORMAL").otherwise("SLOW")
-    )
-    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_orderpriority"), bucket.alias("ship_bucket"))
-        .groupBy("ship_bucket")
-        .agg(
-            F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(is_high, 0).otherwise(1)).alias("low_line_count"),
-        )
-        .orderBy("ship_bucket")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q87 — customer order-count distribution (TPC-H Q13 shape).
-# ---------------------------------------------------------------------------
-@query(
-    "q87_customer_distribution",
-    oracle="""
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer
-  LEFT OUTER JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-  GROUP BY c_custkey
-)
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""",
-)
-def q87_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level aggregation with an outer join carrying a join-time (not
-    WHERE-time) filter — customers with zero qualifying orders must appear
-    as c_count = 0, which a post-join WHERE would silently drop. count(col)
-    skips the NULLs the outer join manufactures. Second aggregate is over
-    |distinct counts| rows → trivially small."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# q88 — top supplier by period revenue (TPC-H Q15 shape: argmax via
-# join-back against the global max).
-# ---------------------------------------------------------------------------
-@query(
-    "q88_top_supplier",
-    oracle=f"""
-WITH revenue AS (
-  SELECT l_suppkey AS supplier_no,
-         {sql_double(f"SUM({_SQL_DISC_PRICE})")} AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-    AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM supplier JOIN revenue ON s_suppkey = supplier_no
-WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-ORDER BY s_suppkey
-""",
-)
-def q88_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Q15 view + uncorrelated scalar-subquery argmax, done as a
-    broadcast join against a 1-row max — equality on doubles is safe
-    because both sides derive them from the same exact decimal sum. The
-    per-supplier aggregate shuffles once; everything after is broadcast."""
-    li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    rev = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-        )
-        .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(dsum(_disc_price(), "total_revenue"))
-    )
-    mx = rev.agg(F.max("total_revenue").alias("mx"))
-    return (
-        rev.join(F.broadcast(mx), F.col("total_revenue") == F.col("mx"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("supplier_no"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
     )
 
 

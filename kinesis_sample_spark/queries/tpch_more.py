@@ -1,4 +1,4 @@
-"""Deeper TPC-H-shaped coverage (Q2/Q7/Q10/Q14/Q18/Q19/Q22 analogs adapted
+"""Deeper TPC-H-shaped coverage (Q2/Q7/Q18/Q19/Q22 analogs adapted
 to the fixture schema — no partsupp/shipmode columns exist, see
 FIXTURES.md). These exercise the join/aggregate patterns the lighter
 queries don't: multi-dim join trees with disjunctive residuals, having-
@@ -74,86 +74,6 @@ def q70_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(dsum(_disc_price(), "revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q71 — returned-item revenue per customer, top 20 (TPC-H Q10 shape).
-# ---------------------------------------------------------------------------
-@query(
-    "q71_returned_items",
-    oracle=f"""
-SELECT c_custkey, c_name, n_name,
-       CAST(CAST(SUM({_SQL_DISC_PRICE}) AS VARCHAR) AS DOUBLE) AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o_orderdate <  TIMESTAMP '1997-07-01 00:00:00'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-""",
-)
-def q71_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Selective fact filter (returnflag pushed to the scan) → join →
-    top-20 via TakeOrdered with deterministic tie-break."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01 00:00:00").cast("timestamp"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(dsum(_disc_price(), "revenue"))
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
-# q72 — promo revenue share (TPC-H Q14 shape: conditional agg ratio).
-# ---------------------------------------------------------------------------
-@query(
-    "q72_promo_share",
-    oracle=f"""
-SELECT CAST(strftime(l_shipdate, '%Y-%m') AS VARCHAR) AS ym,
-       100.0 * CAST(CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_SQL_DISC_PRICE} END) AS VARCHAR) AS DOUBLE)
-             / CAST(CAST(SUM({_SQL_DISC_PRICE}) AS VARCHAR) AS DOUBLE) AS promo_share,
-       COUNT(*) AS n_rows
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY strftime(l_shipdate, '%Y-%m')
-ORDER BY ym
-""",
-)
-def q72_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional-aggregate ratio per month. NULL-skipping SUM(CASE) on
-    both engines; exact decimal sums surfaced as doubles before one final
-    division."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    part = load_table(spark, sf_dir, "part")
-    promo = F.sum(F.when(F.col("p_type") == "PROMO", _disc_price())).cast("double")
-    total = F.sum(_disc_price()).cast("double")
-    return (
-        li.join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("ym"))
-        .agg(
-            (F.lit(100.0) * promo / total).alias("promo_share"),
-            F.count("*").alias("n_rows"),
-        )
-        .orderBy("ym")
     )
 
 
@@ -593,60 +513,6 @@ def q207_nested_semi_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q218 — order-fulfillment latency percentiles per priority.
-# ---------------------------------------------------------------------------
-@query(
-    "q218_fulfillment_latency",
-    oracle="""
-WITH f AS (
-    SELECT l_orderkey, MIN(l_shipdate) AS first_ship
-    FROM lineitem GROUP BY l_orderkey
-),
-lat AS (
-    SELECT o_orderpriority,
-           datediff('day', o_orderdate, first_ship) AS latency_days
-    FROM orders JOIN f ON l_orderkey = o_orderkey
-)
-SELECT o_orderpriority,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       quantile_cont(latency_days, 0.5) AS p50_days,
-       quantile_cont(latency_days, 0.95) AS p95_days,
-       CAST(MAX(latency_days) AS BIGINT) AS max_days
-FROM lat GROUP BY o_orderpriority ORDER BY o_orderpriority
-""",
-)
-def q218_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-to-first-shipment latency distribution per order priority —
-    the SLA dashboard query. Per-order MIN(shipdate), day-count latency,
-    then exact percentiles per priority (Spark ``percentile`` and DuckDB
-    ``quantile_cont`` share the linear-interpolation definition; inputs
-    are exact integer day counts, so interpolated values are identical
-    doubles — the q162 recipe).
-
-    Scale: the per-order MIN rides one shuffle on l_orderkey, the join
-    to orders is co-keyed on the same key, and the final aggregate has
-    5 groups — percentile state is per-group sorted values, safe at any
-    SF because priorities are bounded."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    f = li.groupBy("l_orderkey").agg(F.min("l_shipdate").alias("first_ship"))
-    lat = orders.join(f, orders.o_orderkey == f.l_orderkey).select(
-        "o_orderpriority",
-        F.datediff(F.col("first_ship"), F.col("o_orderdate")).alias("latency_days"),
-    )
-    return (
-        lat.groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.expr("percentile(latency_days, 0.5D)").alias("p50_days"),
-            F.expr("percentile(latency_days, 0.95D)").alias("p95_days"),
-            F.max("latency_days").cast("bigint").alias("max_days"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q231 — percent-of-parent hierarchical revenue shares (region > nation).
 # ---------------------------------------------------------------------------
 @query(
@@ -705,69 +571,6 @@ def q231_percent_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rev_d / region_total).alias("share_of_region"),
         (rev_d / grand_total).alias("share_of_total"),
     ).orderBy("r_name", "n_name")
-
-
-# ---------------------------------------------------------------------------
-# q233 — dormant-parts audit (sold before the cutoff, silent after).
-# ---------------------------------------------------------------------------
-_DORMANT_CUTOFF = "2000-01-01 00:00:00"
-
-
-@query(
-    "q233_dormant_parts",
-    oracle=f"""
-WITH act AS (
-    SELECT l_partkey, MIN(l_shipdate) AS first_ship, MAX(l_shipdate) AS last_ship,
-           SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS lifetime_rev
-    FROM lineitem GROUP BY l_partkey
-)
-SELECT p_brand,
-       CAST(COUNT(*) AS BIGINT) AS n_parts_sold,
-       CAST(SUM(CASE WHEN last_ship < TIMESTAMP '{_DORMANT_CUTOFF}'
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_dormant,
-       CAST(SUM(CASE WHEN last_ship < TIMESTAMP '{_DORMANT_CUTOFF}'
-                     THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS dormant_rate,
-       CAST(CAST(SUM(CASE WHEN last_ship < TIMESTAMP '{_DORMANT_CUTOFF}'
-                          THEN lifetime_rev END) AS VARCHAR) AS DOUBLE)
-         AS dormant_lifetime_rev
-FROM act JOIN part ON p_partkey = l_partkey
-GROUP BY p_brand
-ORDER BY p_brand
-""",
-)
-def q233_dormant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dormant-catalog audit per brand: parts that sold at least once but
-    have shipped nothing since the cutoff — the slow-mover /
-    discontinuation report (and, for a corpus, the "stale shard"
-    detector: content present historically with zero recent activity).
-    Per-part min/max/revenue in one aggregate, then a NULL-skipping
-    conditional decimal sum per brand; the rate is one division of exact
-    counts.
-
-    Scale: one shuffle on l_partkey for the per-part profile, broadcast
-    part dim, brand-bounded output."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = F.broadcast(load_table(spark, sf_dir, "part"))
-    act = li.groupBy("l_partkey").agg(
-        F.min("l_shipdate").alias("first_ship"),
-        F.max("l_shipdate").alias("last_ship"),
-        F.sum(dec("l_extendedprice")).alias("lifetime_rev"),
-    )
-    cutoff = F.lit(_DORMANT_CUTOFF).cast("timestamp")
-    dormant = F.when(F.col("last_ship") < cutoff, 1).otherwise(0)
-    return (
-        act.join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.count("*").alias("n_parts_sold"),
-            F.sum(dormant).cast("bigint").alias("n_dormant"),
-            (F.sum(dormant).cast("double") / F.count("*")).alias("dormant_rate"),
-            F.sum(F.when(F.col("last_ship") < cutoff, F.col("lifetime_rev")))
-            .cast("double")
-            .alias("dormant_lifetime_rev"),
-        )
-        .orderBy("p_brand")
-    )
 
 
 # ---------------------------------------------------------------------------

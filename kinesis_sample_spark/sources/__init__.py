@@ -8,6 +8,10 @@
               per SURVEY.md §7.
 """
 
-from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
+from kinesis_sample_spark.sources.files import (
+    replay_events_stream,
+    replay_frame,
+    write_stream_fixture,
+)
 
-__all__ = ["replay_events_stream", "write_stream_fixture"]
+__all__ = ["replay_events_stream", "replay_frame", "write_stream_fixture"]

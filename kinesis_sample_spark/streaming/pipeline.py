@@ -11,7 +11,9 @@ rate: state is per (key × open-window), not per record.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
@@ -60,7 +62,11 @@ def consume_with_dlq(
     batch replayed after a crash between its sink write and its offset
     commit overwrites its first write: at-least-once delivery, no
     duplicate output. This is the engine's replacement for
-    processRecordsWithRetries (Proc:63-91)."""
+    processRecordsWithRetries (Proc:63-91).
+
+    Drains every available input through ``drain_available_now`` and
+    returns the terminated query; a drain that misses its timeout raises
+    with the query stopped."""
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         decoded = decode_envelope(batch_df)
@@ -68,11 +74,9 @@ def consume_with_dlq(
         write_epoch(good.drop("data"), good_path, epoch_id)
         write_epoch(dlq.drop("data"), dlq_path, epoch_id)
 
-    return (
-        env.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return drain_available_now(
+        env.writeStream.foreachBatch(_process).option("checkpointLocation", checkpoint),
+        what="consume_with_dlq drain",
     )
 
 
@@ -124,3 +128,34 @@ def drain_available_now(
         stop_query(q)
         raise RuntimeError(f"{what} did not finish within {timeout_s} s")
     return q
+
+
+def drain_to_memory(
+    stream_df: DataFrame,
+    output_mode: str = "append",
+    name: str | None = None,
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Drain ``stream_df`` into a memory-sink table through
+    ``drain_available_now`` and return the terminated query; the table is
+    ``spark.table(query.name)``. ``name`` defaults to a fresh unique one;
+    ``checkpoint`` keeps the run's offsets and state where a caller can
+    read them back."""
+    name = name or f"live_{uuid.uuid4().hex[:12]}"
+    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return drain_available_now(writer, what=f"memory drain {name}")
+
+
+def last_emission(emissions: DataFrame, key: str, running: str) -> DataFrame:
+    """Each ``key``'s final row in an update-mode emission log: the row
+    with the largest ``running`` value. Update mode re-emits a key only
+    when new input arrived, so a running count strictly increases over a
+    key's emissions and its maximum marks the last one."""
+    w = Window.partitionBy(key).orderBy(F.col(running).desc())
+    return (
+        emissions.withColumn("_emission_rank", F.row_number().over(w))
+        .filter(F.col("_emission_rank") == 1)
+        .drop("_emission_rank")
+    )

@@ -19,28 +19,20 @@ counts), q164/q187-phase-1 (per-batch emission IS the law), q290-q293
 
 from __future__ import annotations
 
-import uuid
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kinesis_sample_spark.streaming.pipeline import drain_to_memory
 
 SF = "/root/testdata/sf0.01"
 
 
 def _emitted(spark: SparkSession, stream_df: DataFrame, mode: str) -> Counter:
-    name = f"emiss_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    name = drain_to_memory(stream_df, mode).name
     try:
-        assert q.awaitTermination(300), f"{name} did not drain within 300 s"
-        rows = spark.sql(f"SELECT * FROM {name}").collect()
+        rows = spark.table(name).collect()
     finally:
-        q.stop()
         spark.catalog.dropTempView(name)
     return Counter(tuple(r) for r in rows)
 

@@ -1,5 +1,5 @@
 """Both branches of the capability-gated media decoder (multimodal.py):
-the byte-level stub path that the q50/q133/q178 oracles check, and the
+the byte-level stub path that the q50/q133 oracles check, and the
 PIL self-upgrade path — simulated with a fake PIL module because the CI
 image has no imaging libs (the round-3 verdict's 'stub raises only when
 no decoder exists' contract)."""

@@ -248,8 +248,8 @@ def test_q323_heaps_broadcast_checkpoints(spark):
 
 
 def test_q324_ks_distinct_value_preagg(spark):
-    """The ECDF must ride the distinct-gap pre-aggregate (tie-safe q199
-    recipe) — partial aggregation before the ordered window."""
+    """The ECDF must ride the distinct-gap pre-aggregate (the tie-safe
+    two-sample KS recipe) — partial aggregation before the ordered window."""
     assert has_partial_aggregate(_df(spark, "q324_ks_exponential_fit"))
 
 

@@ -379,22 +379,14 @@ def test_q347_memory_sink_refuses_resume(spark, tmp_path):
         STREAM_SOURCE_NAME,
         register_stream,
     )
+    from kinesis_sample_spark.streaming.pipeline import drain_to_memory
 
     register_stream(spark)
     ck = str(tmp_path / "ck")
 
     def drain(rows, name):
-        q = (
-            spark.readStream.format(STREAM_SOURCE_NAME)
-            .option("rows", str(rows))
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
+        stream = spark.readStream.format(STREAM_SOURCE_NAME).option("rows", str(rows)).load()
+        drain_to_memory(stream, "append", name, checkpoint=ck)
 
     drain(10, "t347_a")
     with pytest.raises(AnalysisException, match="recovering from checkpoint"):

@@ -64,7 +64,7 @@ def test_skyline_prefix_min_equals_brute_force_dominance(spark):
 
 
 def test_ks_distinct_value_cdf_equals_brute_force(spark):
-    """q199's distinct-value pre-agg + cumulative window must equal the
+    """The two-sample KS distinct-value pre-agg + cumulative window must equal the
     textbook sup-norm over the pooled sample, including heavy ties."""
     rng = random.Random(17)
     for trial in range(4):

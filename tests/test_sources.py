@@ -1,16 +1,29 @@
 """Source formats (Table B "Scans/sources"): JSON and CSV roundtrips with
 explicit schemas (never inferSchema in production — it is an extra full
-read), plus the RocksDB state store provider for stateful streaming.
+read), the replay writer behind every streaming fixture, plus the RocksDB
+state store provider for stateful streaming.
 """
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
-from kinesis_sample_spark.sources.files import EVENTS_SCHEMA, replay_events_stream, write_stream_fixture
+from kinesis_sample_spark.sources.files import (
+    EVENTS_SCHEMA,
+    replay_events_stream,
+    replay_frame,
+    write_stream_fixture,
+)
 from kinesis_sample_spark.streaming.envelope import envelope_from_events
-from kinesis_sample_spark.streaming.pipeline import drain_available_now, use_rocksdb_state
+from kinesis_sample_spark.streaming.pipeline import (
+    drain_available_now,
+    drain_to_memory,
+    use_rocksdb_state,
+)
 from kinesis_sample_spark.streaming.stateful import stateful_key_counts
 
 SF = "/root/testdata/sf0.001"
@@ -18,6 +31,50 @@ SF = "/root/testdata/sf0.001"
 
 def _events(spark):
     return load_table(spark, SF, "events")
+
+
+def _replay_files(d: str) -> list[str]:
+    return [os.path.join(d, f) for f in sorted(os.listdir(d))]
+
+
+def test_replay_frame_writes_exactly_n_files(spark, tmp_path):
+    d = str(tmp_path / "replay")
+    st = replay_frame(spark.range(40).repartition(4), d, 4)
+    assert [os.path.basename(f) for f in _replay_files(d)] == [
+        f"part-{i:05d}.parquet" for i in range(4)
+    ]
+    assert sorted(os.listdir(tmp_path)) == ["replay"]  # no staging left behind
+    assert st.isStreaming and st.schema.names == ["id"]
+
+
+def test_replay_frame_mtimes_ascend_in_file_order(spark, tmp_path):
+    d = str(tmp_path / "replay")
+    replay_frame(spark.range(80).repartitionByRange(8, "id"), d, 8)
+    mtimes = [os.stat(f).st_mtime for f in _replay_files(d)]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+
+def test_replay_frame_batches_follow_file_order(spark, tmp_path):
+    """One file per trigger, in file order: file i holds i + 1 rows, so the
+    per-batch input-row counts name the file each batch read."""
+    d = str(tmp_path / "replay")
+    sized = spark.range(10).withColumn(
+        "file",
+        F.when(F.col("id") < 1, 0).when(F.col("id") < 3, 1).when(F.col("id") < 6, 2).otherwise(3),
+    )
+    st = replay_frame(sized, d, 4, by="file")
+    assert st.schema.names == ["id"]
+    q = drain_available_now(st.writeStream.format("noop"), 120, "replay order")
+    batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+    assert batches == [spark.read.parquet(f).count() for f in _replay_files(d)]
+    assert batches == [1, 2, 3, 4]
+
+
+def test_replay_frame_raises_on_an_empty_partition(spark, tmp_path):
+    d = str(tmp_path / "replay")
+    with pytest.raises(RuntimeError, match="empty partition"):
+        replay_frame(spark.range(2).repartition(4), d, 4)
+    assert os.listdir(tmp_path) == []
 
 
 def test_json_roundtrip_with_schema(spark, tmp_path):
@@ -75,14 +132,7 @@ def test_stateful_query_on_rocksdb_state_store(spark, tmp_path):
         env = envelope_from_events(
             replay_events_stream(spark, events_dir, files_per_trigger=1)
         )
-        drain_available_now(
-            stateful_key_counts(env)
-            .writeStream.format("memory")
-            .queryName("t_rocks")
-            .outputMode("update"),
-            120,
-            "t_rocks",
-        )
+        drain_to_memory(stateful_key_counts(env), "update", "t_rocks")
         total_keys = spark.sql(
             "SELECT count(DISTINCT partitionKey) AS n FROM t_rocks"
         ).collect()[0].n

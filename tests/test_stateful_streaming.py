@@ -5,9 +5,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
-from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
+from kinesis_sample_spark.sources.files import (
+    replay_events_stream,
+    replay_frame,
+    write_stream_fixture,
+)
 from kinesis_sample_spark.streaming.envelope import envelope_from_events
-from kinesis_sample_spark.streaming.pipeline import drain_available_now
+from kinesis_sample_spark.streaming.pipeline import drain_to_memory, last_emission
 from kinesis_sample_spark.streaming.stateful import stateful_key_counts
 
 SF = "/root/testdata/sf0.001"
@@ -18,25 +22,12 @@ def test_stateful_counts_accumulate_across_batches(spark, tmp_path):
     the final running count per key equals the batch groupBy count."""
     events_dir = write_stream_fixture(spark, SF, str(tmp_path), n_files=4)
     env = envelope_from_events(replay_events_stream(spark, events_dir, files_per_trigger=1))
-    drain_available_now(
-        stateful_key_counts(env)
-        .writeStream.format("memory")
-        .queryName("t_state")
-        .outputMode("update"),
-        120,
-        "t_state",
-    )
+    drain_to_memory(stateful_key_counts(env), "update", "t_state")
 
     # update mode appends one row per (key, batch) — the last row per key
     # is the running total; compare against batch ground truth
-    final = spark.sql(
-        """
-        SELECT partitionKey, n_records, total_batches FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY partitionKey
-                                         ORDER BY n_records DESC) rn
-            FROM t_state
-        ) WHERE rn = 1
-        """
+    final = last_emission(spark.table("t_state"), "partitionKey", "n_records").select(
+        "partitionKey", "n_records", "total_batches"
     )
     expected = (
         envelope_from_events(load_table(spark, SF, "events"))
@@ -79,15 +70,8 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("v_ts") <= F.col("p_ts"))
     )
-    drain_available_now(
-        sp.join(sv, cond)
-        .select("user_id", "p_id", "v_id")
-        .writeStream.format("memory")
-        .queryName("t_ssj")
-        .outputMode("append"),
-        120,
-        "t_ssj",
-    )
+    joined = sp.join(sv, cond).select("user_id", "p_id", "v_id")
+    drain_to_memory(joined, "append", "t_ssj")
     streamed = spark.sql("SELECT * FROM t_ssj")
 
     bp, bv = _split(load_table(spark, SF, "events"))
@@ -114,14 +98,8 @@ def test_retry_process_bounded_attempts_then_dlq(spark, tmp_path):
             raise ValueError(payload)
         return payload
 
-    drain_available_now(
-        retry_process(env, process, max_attempts=3)
-        .writeStream.format("memory")
-        .queryName("t_retry")
-        .outputMode("update"),
-        120,
-        "t_retry",
-    )
+    retried = retry_process(env, process, max_attempts=3)
+    drain_to_memory(retried, "update", "t_retry")
     rows = spark.sql("SELECT * FROM t_retry").collect()
     assert rows
     poison = [r for r in rows if not r["ok"]]
@@ -143,42 +121,23 @@ def test_retry_process_redelivery_short_circuits(spark, tmp_path):
     micro-batch (the A14 lease-lost replay) must short-circuit straight
     to a DLQ row — ``exhausted:redelivered`` with the prior attempt
     count — instead of burning another max_attempts executions."""
-    import glob
-    import os
-    import shutil
-    import time as _t
-
     from kinesis_sample_spark.streaming.stateful import retry_process
 
-    events_dir = write_stream_fixture(spark, SF, str(tmp_path), n_files=2)
-    # duplicate every file with a LATER mtime: the file source orders by
-    # modification time, so the copies arrive as later micro-batches —
-    # a replayed delivery of every record after state already exists
-    parts = sorted(glob.glob(os.path.join(events_dir, "*.parquet")))
-    now = _t.time()
-    for i, p in enumerate(parts):
-        dup = os.path.join(events_dir, f"redelivered_{i}.parquet")
-        shutil.copy(p, dup)
-        os.utime(p, (now - 3600 + i, now - 3600 + i))
-        os.utime(dup, (now - 1800 + i, now - 1800 + i))
-
-    env = envelope_from_events(
-        replay_events_stream(spark, events_dir, files_per_trigger=1)
-    )
+    # files 0-1 split the events on event_id parity and files 2-3 repeat
+    # them: the copies arrive as later micro-batches — a replayed delivery
+    # of every record after state already exists
+    events = load_table(spark, SF, "events")
+    half = F.col("event_id") % 2
+    twice = events.withColumn("file", half).unionByName(events.withColumn("file", half + 2))
+    env = envelope_from_events(replay_frame(twice, str(tmp_path / "replay"), 4, by="file"))
 
     def process(payload: str, attempt: int) -> str:
         if payload.endswith("0"):  # permanent poison
             raise ValueError(payload)
         return payload
 
-    drain_available_now(
-        retry_process(env, process, max_attempts=3)
-        .writeStream.format("memory")
-        .queryName("t_retry_redeliver")
-        .outputMode("update"),
-        120,
-        "t_retry_redeliver",
-    )
+    retried = retry_process(env, process, max_attempts=3)
+    drain_to_memory(retried, "update", "t_retry_redeliver")
     rows = spark.sql("SELECT * FROM t_retry_redeliver").collect()
 
     by_seq: dict[str, list] = {}

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.operators.upsert import write_epoch
-from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
+from kinesis_sample_spark.sources.files import (
+    replay_events_stream,
+    replay_frame,
+    write_stream_fixture,
+)
 from kinesis_sample_spark.streaming.envelope import (
     decode_envelope,
     envelope_from_events,
@@ -22,6 +26,7 @@ from kinesis_sample_spark.streaming.observe import CollectingListener
 from kinesis_sample_spark.streaming.pipeline import (
     consume_with_dlq,
     drain_available_now,
+    drain_to_memory,
     stop_query,
     streaming_dedup,
     streaming_window_counts,
@@ -36,17 +41,12 @@ def events_dir(spark, tmp_path_factory):
     return write_stream_fixture(spark, SF, out, n_files=4)
 
 
-def _run_to_memory(stream_df, name: str, output_mode: str = "append"):
-    writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    return drain_available_now(writer, 120, name)
-
-
 def test_envelope_roundtrip_streaming(spark, events_dir):
     """Envelope build + decode survives the streaming path; payload parses
     back to the original second-truncated event time."""
     env = envelope_from_events(replay_events_stream(spark, events_dir))
     decoded = decode_envelope(env)
-    _run_to_memory(decoded.select("partitionKey", "payload", "event_ts"), "t_env")
+    drain_to_memory(decoded.select("partitionKey", "payload", "event_ts"), "append", "t_env")
     out = spark.sql("SELECT * FROM t_env")
     n_events = load_table(spark, SF, "events").count()
     assert out.count() == n_events
@@ -63,7 +63,7 @@ def test_windowed_counts_match_batch(spark, events_dir):
     that trade is the point of watermarks."""
     env = envelope_from_events(replay_events_stream(spark, events_dir))
     agg = streaming_window_counts(env, window="1 hour", watermark="40 days")
-    _run_to_memory(agg, "t_win", output_mode="complete")
+    drain_to_memory(agg, "complete", "t_win")
     streamed = spark.sql("SELECT w_start, partitionKey, n_records FROM t_win")
 
     batch_env = decode_envelope(envelope_from_events(load_table(spark, SF, "events")))
@@ -88,7 +88,7 @@ def test_streaming_dedup_collapses_replay(spark, events_dir):
     # are time-unordered, and dropDuplicatesWithinWatermark would discard
     # genuinely-late rows (correct in production, wrong for equivalence).
     dedup = streaming_dedup(env, watermark="40 days")
-    _run_to_memory(dedup.select("partitionKey", "sequenceNumber"), "t_dedup")
+    drain_to_memory(dedup.select("partitionKey", "sequenceNumber"), "append", "t_dedup")
     out = spark.sql("SELECT * FROM t_dedup")
     n_events = load_table(spark, SF, "events").count()
     assert out.count() == n_events
@@ -110,13 +110,7 @@ def test_dlq_splits_poison_records(spark, events_dir, tmp_path):
     )
     good_path = str(tmp_path / "good")
     dlq_path = str(tmp_path / "dlq")
-    q = consume_with_dlq(
-        poisoned, good_path, dlq_path, checkpoint=str(tmp_path / "ckpt")
-    )
-    try:
-        assert q.awaitTermination(120), "DLQ consumer did not drain in 120 s"
-    finally:
-        stop_query(q)
+    consume_with_dlq(poisoned, good_path, dlq_path, checkpoint=str(tmp_path / "ckpt"))
 
     n_events = load_table(spark, SF, "events").count()
     good = spark.read.parquet(good_path)
@@ -217,7 +211,7 @@ def test_observed_metrics_accumulate_to_batch_aggregate(spark, events_dir):
 def test_rate_producer_envelope(spark):
     """A1/A2: the producer simulation emits schema-correct envelopes."""
     env = rate_producer(spark, rows_per_second=50)
-    q = _run_to_memory(env, "t_rate")
+    drain_to_memory(env, "append", "t_rate")
     # rate+availableNow produces whatever was due; schema is the contract
     out = spark.sql("SELECT * FROM t_rate")
     assert set(out.columns) == {
@@ -239,7 +233,7 @@ def test_streaming_session_windows_match_batch(spark, events_dir):
         .agg(F.count("*").alias("n_events"))
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )
-    _run_to_memory(agg, "t_sess", output_mode="complete")
+    drain_to_memory(agg, "complete", "t_sess")
     streamed = spark.sql("SELECT * FROM t_sess")
 
     batch = (
@@ -260,13 +254,7 @@ def test_checkpoint_resume_no_reprocessing(spark, tmp_path):
 
     def run():
         env = envelope_from_events(replay_events_stream(spark, events_dir))
-        q = consume_with_dlq(
-            env, f"{out}/good", f"{out}/dlq", checkpoint=f"{out}/ckpt"
-        )
-        try:
-            assert q.awaitTermination(120), "consumer did not drain in 120 s"
-        finally:
-            stop_query(q)
+        consume_with_dlq(env, f"{out}/good", f"{out}/dlq", checkpoint=f"{out}/ckpt")
 
     run()
     first = spark.read.parquet(f"{out}/good").count()
@@ -284,9 +272,8 @@ def test_stream_static_join_enrichment(spark, events_dir):
     )
     stream = replay_events_stream(spark, events_dir)
     enriched = stream.join(static_users, "user_id", "left")
-    _run_to_memory(
-        enriched.select("event_id", "user_id", "c_mktsegment"), "t_enrich"
-    )
+    enriched = enriched.select("event_id", "user_id", "c_mktsegment")
+    drain_to_memory(enriched, "append", "t_enrich")
     out = spark.sql("SELECT * FROM t_enrich")
     n_events = load_table(spark, SF, "events").count()
     assert out.count() == n_events
@@ -305,42 +292,27 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     (arrives after the watermark has been in force for a full batch —
     dropped, absent from results)."""
     import datetime
-    import os
-    import time
 
-    d = str(tmp_path / "late_stream")
-    os.makedirs(d)
     base = datetime.datetime(2024, 6, 1, 12, 0, 0)
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
+    schema = (
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double, props string, file int"
+    )
     batches = [
         [(i, base + datetime.timedelta(minutes=i), 1, "click", 1.0, "{}") for i in range(10)],
         [(100 + i, base - datetime.timedelta(days=2), 2, "click", 1.0, "{}") for i in range(5)],
         [(200 + i, base - datetime.timedelta(days=3), 3, "click", 1.0, "{}") for i in range(4)],
     ]
-
-    def _parts():
-        return {f for f in os.listdir(d) if f.endswith(".parquet")}
-
-    now = int(time.time()) - 3600
-    seen = set()
-    for j, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(d)
-        new = _parts() - seen
-        for f in new:
-            os.utime(os.path.join(d, f), (now + j, now + j))
-        seen |= new
-
-    st = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    rows = [row + (j,) for j, batch in enumerate(batches) for row in batch]
+    st = replay_frame(
+        spark.createDataFrame(rows, schema), str(tmp_path / "late_stream"), 3, by="file"
     )
     agg = (
         st.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    q = _run_to_memory(agg, "t_late_drop", output_mode="update")
+    q = drain_to_memory(agg, "update", "t_late_drop")
     dropped = sum(
         s.get("numRowsDroppedByWatermark", 0)
         for p in q.recentProgress
