@@ -31,15 +31,13 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def _assert_observability_live(spark: SparkSession) -> None:
     """A17 smoke: every ``entry`` call re-proves the observed-metrics
-    surface (``df.observe`` partials delivered through
-    ``StreamingQueryListener.observedMetrics``) that q186 checks in
+    surface (``df.observe`` partials in the query's per-batch progress,
+    summed by ``streaming.observe.observed_totals``) that q186 checks in
     full against its oracle. A tiny 2-file replay with one observed count
-    must deliver totals equal to the fixture's true row count; any break
-    in the listener seam raises here with its own message instead of
-    surfacing downstream."""
+    must report totals equal to the fixture's true row count; any break
+    in that seam raises here with its own message instead of surfacing
+    downstream."""
     import shutil
-    import time
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -49,44 +47,30 @@ def _assert_observability_live(spark: SparkSession) -> None:
         replay_events_stream,
         write_stream_fixture,
     )
-    from kinesis_sample_spark.streaming.observe import ObservedMetricsListener
+    from kinesis_sample_spark.streaming.observe import observed_totals
     from kinesis_sample_spark.streaming.pipeline import drain_available_now
 
     base = scratch_dir(prefix="kss_entry_a17_")
-    metric = f"entry_a17_{uuid.uuid4().hex[:8]}"
-    listener = ObservedMetricsListener(metric)
-    spark.streams.addListener(listener)
+    metric = "entry_a17"
     try:
         events_dir = write_stream_fixture(spark, SMOKE_SF_DIR, base, n_files=2)
         expected = load_table(spark, SMOKE_SF_DIR, "events").count()
-        drain_available_now(
+        q = drain_available_now(
             replay_events_stream(spark, events_dir, files_per_trigger=2)
             .observe(metric, F.count(F.lit(1)).alias("n_records"))
             .writeStream.format("noop"),
             timeout_s=120,
             what="entry A17 smoke: replay",
         )
-        deadline = time.monotonic() + 60
-        while listener.totals().get("n_records", 0) < expected:
-            if time.monotonic() >= deadline:
-                raise RuntimeError(
-                    f"entry A17 smoke: observed "
-                    f"{listener.totals().get('n_records', 0)}/{expected} rows "
-                    f"after 60 s — listener bus delivery broken"
-                )
-            time.sleep(0.25)
-        # ADVICE r08: the query has drained and the bus has caught up, so
-        # over-delivery (duplicate observedMetrics events) must fail too —
-        # exact equality, matching q186's check, not just "enough rows".
-        time.sleep(0.5)  # let any straggler duplicate event land first
-        got = listener.totals().get("n_records", 0)
+        # ADVICE r08: exact equality, matching q186's check, not just
+        # "enough rows" — a batch counted twice must fail too.
+        got = observed_totals(q, metric).get("n_records", 0)
         if got != expected:
             raise RuntimeError(
                 f"entry A17 smoke: observed {got} rows, expected exactly "
-                f"{expected} — duplicate/over-delivered observed metrics"
+                f"{expected} — dropped or duplicated observed metrics"
             )
     finally:
-        spark.streams.removeListener(listener)
         shutil.rmtree(base, ignore_errors=True)
 
 

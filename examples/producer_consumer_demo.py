@@ -27,19 +27,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kinesis_sample_spark.session import get_spark
 from kinesis_sample_spark.streaming.envelope import rate_producer
-from kinesis_sample_spark.streaming.observe import (
-    CollectingListener,
-    ObservedMetricsListener,
-)
+from kinesis_sample_spark.streaming.observe import batch_progress, observed_totals
 from kinesis_sample_spark.streaming.pipeline import stop_query
 
 
 def main(run_seconds: float = 5.0) -> None:
     spark = get_spark("demo", cpus=4)
-    listener = CollectingListener()
-    metrics_listener = ObservedMetricsListener("demo_metrics")
-    spark.streams.addListener(listener)
-    spark.streams.addListener(metrics_listener)
     work = tempfile.mkdtemp(prefix="kss_demo_")
 
     # --- producer (A1/A2) → consumer decode/DLQ (A11/A12), live with a
@@ -54,7 +47,7 @@ def main(run_seconds: float = 5.0) -> None:
     decoded = decode_envelope(rate_producer(spark, rows_per_second=200))
     good, _ = split_dlq(decoded, "event_ts")
     # A17's in-plan metric channel (the KCL metricsConfig analog, q186):
-    # per-batch partial aggregates delivered through the listener bus
+    # per-batch partial aggregates reported in the query's progress
     good = good.observe(
         "demo_metrics",
         F.count(F.lit(1)).alias("n_good"),
@@ -73,9 +66,9 @@ def main(run_seconds: float = 5.0) -> None:
     n = spark.sql("SELECT count(*) AS n FROM live").collect()[0].n
     rate = n / run_seconds
     print(f"consumed {n} records in ~{run_seconds:.0f}s (≈{rate:.0f} rec/s; reference: ~2 rec/s)")
-    for p in listener.progress[-3:]:
-        print(f"  batch {p.batch_id}: {p.num_input_rows} rows -> {p.sink_description[:60]}")
-    print(f"observed metric totals across batches: {metrics_listener.totals()}")
+    for p in batch_progress(live)[-3:]:
+        print(f"  batch {p.batchId}: {p.numInputRows} rows -> {p.sink.description[:60]}")
+    print(f"observed metric totals across batches: {observed_totals(live, 'demo_metrics')}")
 
     # --- A9/A13 made visible: a STATEFUL stage (windowed counts) whose
     # checkpointed state we read back AFTER shutdown with Spark 4's batch
@@ -99,23 +92,22 @@ def main(run_seconds: float = 5.0) -> None:
     )
     time.sleep(run_seconds)
     stop_query(q2, timeout_s=20.0)
-    md_rows = (
-        spark.read.format("state-metadata").load(ck_agg)
-        .select("operatorName", "maxBatchId")
-        .collect()
-    )
-    if not md_rows:  # a very short run can stop before the first commit
+    # a batch reports progress only after its commit, and a short run can
+    # stop before the first one (the state metadata exists before it)
+    if not batch_progress(q2):
         print(f"state store after shutdown: no batch committed in {run_seconds}s")
     else:
-        md = md_rows[0]
+        md = (
+            spark.read.format("state-metadata").load(ck_agg)
+            .select("operatorName", "maxBatchId")
+            .collect()[0]
+        )
         n_keys = spark.read.format("statestore").load(ck_agg).count()
         print(
             f"state store after shutdown: operator={md.operatorName} "
             f"last_batch={md.maxBatchId} window_keys_held={n_keys} "
             f"(read back cold from {ck_agg})"
         )
-    spark.streams.removeListener(listener)
-    spark.streams.removeListener(metrics_listener)
 
 
 if __name__ == "__main__":

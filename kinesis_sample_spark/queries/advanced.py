@@ -12,35 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table, register_views
-from kinesis_sample_spark.functions.numeric import dec
 from kinesis_sample_spark.queries import query
-
-
-# ---------------------------------------------------------------------------
-# q44 — pivot (conditional aggregation).
-# ---------------------------------------------------------------------------
-@query(
-    "q44_pivot_status",
-    oracle="""
-SELECT l_returnflag,
-       CAST(CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS qty_open,
-       CAST(CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(12,2)) END) AS VARCHAR) AS DOUBLE) AS qty_filled
-FROM lineitem
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-""",
-)
-def q44_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``pivot`` with an explicit value list (never let Spark scan for
-    distinct pivot values at 100 TB — that is an extra pass)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.sum(dec("l_quantity")).cast("double"))
-        .withColumnsRenamed({"O": "qty_open", "F": "qty_filled"})
-        .orderBy("l_returnflag")
-    )
 
 
 # ---------------------------------------------------------------------------

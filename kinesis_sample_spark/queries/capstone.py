@@ -1,7 +1,8 @@
 """Capstone: the full training-corpus preparation pipeline as ONE query —
 quality filter → near-dup removal → chunking → reproducible sampling.
-Every stage is an operator verified individually elsewhere (q42, q31, q63,
-q54); this query proves they compose, with a single end-to-end oracle.
+The dedup, chunking and sampling stages are operators verified individually
+elsewhere (q31, q63, q54); this query proves the four compose, with a single
+end-to-end oracle.
 """
 
 from __future__ import annotations

@@ -137,43 +137,6 @@ def q67_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q68 — pattern scan (PII-shaped regex counts) over text + payloads.
-# ---------------------------------------------------------------------------
-@query(
-    "q68_pattern_scan",
-    oracle=r"""
-SELECT event_id,
-       len(regexp_extract_all(props, '[0-9]+')) AS n_digit_runs,
-       len(regexp_extract_all(props, '[0-9]{3,}')) AS n_long_digit_runs,
-       len(regexp_extract_all(props, '[a-z]+@[a-z]+\.[a-z]+')) AS n_email_like,
-       regexp_matches(props, '"k":\s*[0-9]+') AS has_k_field
-FROM events
-ORDER BY event_id
-""",
-)
-def q68_pattern_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regex pattern battery over the opaque payload — the shape of a PII
-    scrubbing pass (emails/phones/ids). On the fixtures only digit runs
-    fire, but the operator (multi-pattern extract-all counts + boolean
-    flags, single scan) is the production one."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_id",
-            F.size(F.regexp_extract_all("props", F.lit(r"[0-9]+"), 0)).alias("n_digit_runs"),
-            F.size(F.regexp_extract_all("props", F.lit(r"[0-9]{3,}"), 0)).alias(
-                "n_long_digit_runs"
-            ),
-            F.size(
-                F.regexp_extract_all("props", F.lit(r"[a-z]+@[a-z]+\.[a-z]+"), 0)
-            ).alias("n_email_like"),
-            F.col("props").rlike(r'"k":\s*[0-9]+').alias("has_k_field"),
-        )
-        .orderBy("event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q188 — corpus-derived unigram log-probability quality score.
 # ---------------------------------------------------------------------------
 _ULP_KEEP = -3.402  # fixture median avg-logprob; below = token-soup outlier

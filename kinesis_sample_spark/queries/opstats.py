@@ -1217,8 +1217,8 @@ ORDER BY l_returnflag
 def q333_observed_metrics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch ``Observation`` / CollectMetrics — the observability channel
     the registry had never exercised outside streaming (q186 gates the
-    *listener* channel; ``streaming/observe.py`` the per-micro-batch
-    ``observe``). A ``df.observe(...)`` plants a CollectMetrics node
+    per-micro-batch ``observe`` partials that ``streaming/observe.py``
+    reads from a streaming query's progress). A ``df.observe(...)`` plants a CollectMetrics node
     mid-plan; its aggregates ride the SAME task pass as the query (an
     AggregatingAccumulator, not a second job), and the driver reads them
     from ``Observation.get`` after the first action. The A17 story at

@@ -1,6 +1,6 @@
 """PII detection and redaction — the transform side of corpus hygiene.
 
-q68 *scans* for patterns; a release pipeline must also *rewrite* — strip
+Scanning for patterns is not enough; a release pipeline must also *rewrite* — strip
 emails, phone-ish digit runs, ids — and report what it stripped (audit
 counts), per C4/CCNet-style cleaning. The fixture documents contain no
 PII by construction, so the operator renders a PII-bearing string from

@@ -411,31 +411,6 @@ def q11_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q12 — cube over two dims.
-# ---------------------------------------------------------------------------
-@query(
-    "q12_cube",
-    oracle="""
-SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_price
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-""",
-)
-def q12_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE: all 4 grouping sets in one Expand pass."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("n_orders"), dsum(dec("o_totalprice"), "sum_price"))
-        .orderBy(
-            F.col("o_orderstatus").asc_nulls_first(), F.col("o_orderpriority").asc_nulls_first()
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # q13 — theta (non-equi band) join: parts priced within a band of the
 # average price of their type.
 # ---------------------------------------------------------------------------

@@ -18,7 +18,7 @@ lossless by computing daily straight from raw.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
@@ -62,52 +62,6 @@ def q93_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.filter(
         md5_long(F.col("event_id").cast("string")) % 1000 < rate
     ).select("event_id", "event_type", "user_id")
-
-
-# ---------------------------------------------------------------------------
-# q94 — fixed-size per-stratum sample (deterministic reservoir): bottom-k
-# by hash, with a map-side prefilter mirrored in the oracle.
-# ---------------------------------------------------------------------------
-_PREFILTER = 100  # keep bottom ~10% by hash before the exact window
-_K = 20
-
-
-@query(
-    "q94_per_stratum_bottom_k",
-    oracle=f"""
-SELECT event_type, event_id, user_id
-FROM (
-  SELECT event_type, event_id, user_id,
-         row_number() OVER (
-           PARTITION BY event_type
-           ORDER BY {md5_long_sql("CAST(event_id AS VARCHAR)")}, event_id
-         ) AS rk
-  FROM events
-  WHERE {md5_long_sql("CAST(event_id AS VARCHAR)")} % 1000 < {_PREFILTER}
-)
-WHERE rk <= {_K}
-ORDER BY event_type, event_id
-""",
-)
-def q94_per_stratum_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-k-per-stratum sampling = the k smallest hashes per stratum
-    (a deterministic reservoir sample: each subset of size k is equally
-    likely under the hash's uniformity, but re-runs agree). Two-phase for
-    scale: a map-side hash prefilter (bottom ~10%) discards ~90% of rows
-    before the row_number window, so the per-stratum shuffle moves only
-    candidates — the standard guard against low-cardinality-stratum skew.
-    The oracle mirrors both phases, so equality holds by construction even
-    for strata so small the prefilter leaves fewer than k rows."""
-    ev = load_table(spark, sf_dir, "events")
-    h = md5_long(F.col("event_id").cast("string"))
-    win = W.partitionBy("event_type").orderBy(h.asc(), F.col("event_id").asc())
-    return (
-        ev.filter(h % 1000 < _PREFILTER)
-        .withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= _K)
-        .select("event_type", "event_id", "user_id")
-        .orderBy("event_type", "event_id")
-    )
 
 
 # ---------------------------------------------------------------------------

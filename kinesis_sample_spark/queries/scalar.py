@@ -65,46 +65,6 @@ def q19_payload_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q20 — date/time function family over event time.
-# ---------------------------------------------------------------------------
-@query(
-    "q20_event_time_parts",
-    oracle="""
-SELECT event_id,
-       CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start,
-       date_trunc('hour', ts) AS hour_start,
-       CAST(year(ts) AS INTEGER)  AS y,
-       CAST(month(ts) AS INTEGER) AS m,
-       CAST(hour(ts) AS INTEGER)  AS h,
-       CAST(isodow(ts) AS INTEGER) AS iso_dow,
-       strftime(ts, '%Y-%m') AS ym,
-       epoch_ms(ts) // 1000 AS epoch_s
-FROM events
-ORDER BY event_id
-""",
-)
-def q20_event_time_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time decomposition — the typed version of the reference's
-    embedded ISO timestamp (producer :128-129, never parsed back by its
-    consumer). iso_dow uses Monday=1 on both engines (Spark weekday()+1)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_id",
-            F.date_trunc("day", "ts").alias("day_start"),
-            F.date_trunc("hour", "ts").alias("hour_start"),
-            F.year("ts").alias("y"),
-            F.month("ts").alias("m"),
-            F.hour("ts").alias("h"),
-            (F.weekday("ts") + F.lit(1)).alias("iso_dow"),
-            F.date_format("ts", "yyyy-MM").alias("ym"),
-            F.unix_timestamp("ts").alias("epoch_s"),
-        )
-        .orderBy("event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q166 — try_* error-tolerant functions (A11/A12's skip-malformed semantics).
 # ---------------------------------------------------------------------------
 @query(
@@ -198,7 +158,7 @@ ORDER BY o_orderkey
 """,
 )
 def q167_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date arithmetic beyond q20's part extraction: last_day, add_months
+    """Date arithmetic beyond part extraction: last_day, add_months
     (month-end clamping included), date_add, datediff, weekofyear (ISO on
     both engines), dayofweek (Spark counts Sunday=1, DuckDB Sunday=0 —
     the oracle shifts), trunc-to-month, quarter, and next_day (DuckDB has
@@ -209,7 +169,7 @@ def q167_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every date-valued output is surfaced as a midnight TIMESTAMP: the
     # DateType→pandas-object vs DuckDB-DATE→datetime64 pair has never
     # been through the driver's canonicalizer, while timestamp-vs-
-    # timestamp is green in three rounds (q20/q55/q139) — same fix class
+    # timestamp is green in three rounds (q55/q139) — same fix class
     # as q166's maybe_date.
     return (
         orders.select(

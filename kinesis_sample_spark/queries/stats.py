@@ -225,7 +225,7 @@ ORDER BY bucket
 def q102_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of order value (50k buckets) with per-bucket
     exact-decimal sums and a running cumulative-distribution share — the
-    fixed-bucket complement to q18's rank-based distribution and q48's
+    fixed-bucket complement to q155's rank-based distribution and q48's
     exact percentiles. The window runs over the *aggregated* buckets
     (O(buckets) rows), so the single-partition running sum is free even
     when the input is 100 TB."""

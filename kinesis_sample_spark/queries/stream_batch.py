@@ -199,37 +199,6 @@ def q25_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q26 — deterministic dedup: first event per (user, type).
-# ---------------------------------------------------------------------------
-@query(
-    "q26_first_event_dedup",
-    oracle="""
-SELECT event_id, user_id, event_type, ts, value
-FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-                                 ORDER BY ts, event_id) AS rn
-    FROM events
-) t
-WHERE rn = 1
-ORDER BY user_id, event_type
-""",
-)
-def q26_first_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic keep-first dedup (``dropDuplicates`` keeps an
-    arbitrary row — unacceptable for an oracle-checked engine; the
-    window-rank rewrite pins the survivor). Streaming equivalent:
-    ``dropDuplicatesWithinWatermark`` in streaming.pipeline."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "user_id", "event_type", "ts", "value")
-        .orderBy("user_id", "event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q27 — as-of join: latest view at-or-before each purchase, per user.
 # ---------------------------------------------------------------------------
 @query(

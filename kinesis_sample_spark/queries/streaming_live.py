@@ -15,8 +15,7 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
-import uuid
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,10 +35,7 @@ from kinesis_sample_spark.sources.files import (
 )
 from kinesis_sample_spark.streaming.dlq import split_dlq
 from kinesis_sample_spark.streaming.envelope import decode_envelope, envelope_from_events
-from kinesis_sample_spark.streaming.observe import (
-    CollectingListener,
-    ObservedMetricsListener,
-)
+from kinesis_sample_spark.streaming.observe import batch_progress, observed_totals
 from kinesis_sample_spark.streaming.pipeline import (
     drain_available_now,
     drain_to_memory,
@@ -781,7 +777,11 @@ def q185_live_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming query *incarnations* share one checkpointLocation: phase 1
     drains the even-event_id half of the fixture and stops (A16's
     graceful-stop path); the odd half then lands in the source directory;
-    phase 2 starts a NEW query from the same checkpoint. The sink is a
+    phase 2 starts a NEW query from the same checkpoint. Both halves are
+    written once by ``replay_frame`` (files 0-1 even, 2-3 odd) into a
+    staging directory, and each phase renames its two files into the
+    source directory, so both keep the writer's file-count check and
+    ascending mtimes. The sink is a
     parquet emission log with one directory per epoch (update-mode
     foreachBatch through ``write_epoch``, so a replayed epoch overwrites
     its first write), and the returned table keeps each user's LAST
@@ -804,13 +804,8 @@ def q185_live_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(base, "in")
     ck = os.path.join(base, "ck")
     emissions = os.path.join(base, "emissions")
+    staging = os.path.join(base, "halves")
     os.makedirs(src)
-
-    events = load_table(spark, sf_dir, "events")
-    halves = (
-        events.filter(F.col("event_id") % 2 == 0),
-        events.filter(F.col("event_id") % 2 == 1),
-    )
 
     def run_incarnation() -> None:
         # optimization r16: the law gated here is CROSS-INCARNATION
@@ -842,8 +837,19 @@ def q185_live_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     try:
-        for half in halves:
-            half.coalesce(2).write.mode("append").parquet(src)
+        eid = F.col("event_id")
+        replay_frame(
+            load_table(spark, sf_dir, "events").withColumn(
+                "file", eid % 2 * 2 + F.floor(eid % 4 / 2)
+            ),
+            staging,
+            4,
+            by="file",
+        )
+        files = sorted(os.listdir(staging))
+        for half in (files[:2], files[2:]):
+            for f in half:
+                os.rename(os.path.join(staging, f), os.path.join(src, f))
             run_incarnation()
 
         last = (
@@ -898,13 +904,13 @@ def q186_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaces two observability channels: per-record-processor CloudWatch
     metrics via the KCL's metricsConfig (Cons:72,:80) and the per-batch
     "Processing N records" slf4j log line (Proc:167). Spark's equivalents
-    are ``df.observe`` (metrics computed INSIDE the query plan, delivered
-    per micro-batch through StreamingQueryListener.observedMetrics) and
-    the listener's per-batch ``numInputRows`` progress field. This query
-    runs a live replay with BOTH channels attached and returns the
-    accumulated metric totals as a (metric, value) table — so the driver's
-    DuckDB hash gate checks the observability surface itself, not the
-    query result it describes.
+    are ``df.observe`` (metrics computed INSIDE the query plan, reported
+    per micro-batch in the query's progress as ``observedMetrics``) and
+    the progress's per-batch ``numInputRows`` field. This query runs a
+    live replay with BOTH channels attached and returns the accumulated
+    metric totals as a (metric, value) table — so the driver's DuckDB
+    hash gate checks the observability surface itself, not the query
+    result it describes.
 
     Correctness law (pinned by test_observed_metrics_accumulate_to_batch_
     aggregate): per-batch observed rows are partial aggregates over
@@ -914,26 +920,20 @@ def q186_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed twice, partials computed on post-filter rows — shifts a
     total and breaks the value hash. ``progress_input_rows`` pins the
     second channel: the sum of per-batch numInputRows must equal the
-    true record count (the reference's N values, summed).
+    true record count (the reference's N values, summed). Both are read
+    from the drained query through ``streaming/observe.py``, which holds
+    every batch once the drain returns.
 
     Scale: ``observe`` aggregates ride the existing per-batch plan
     (map-side partials, one tiny merged row per batch to the driver) —
     exactly the KCL's per-shard metric emission folded into per-stream
-    CloudWatch sums; no extra shuffle, state, or driver loop. The
-    listener holds one dict per batch, not per record."""
+    CloudWatch sums; no extra shuffle, state, or driver loop. The query
+    keeps one progress entry per batch, not per record."""
     base = scratch_dir(prefix="kss_a17_")
-    metric_name = f"a17_{uuid.uuid4().hex[:8]}"  # isolate from other queries
-    obs_listener = ObservedMetricsListener(metric_name)
-    log_listener = CollectingListener()
-    spark.streams.addListener(obs_listener)
-    spark.streams.addListener(log_listener)
+    metric_name = "a17"
     try:
         events = load_table(spark, sf_dir, "events")
         st = replay_frame(events.repartition(4), os.path.join(base, "events_stream"), 4)
-        # bounded input ⇒ the expected record count is known up front (one
-        # metadata-scale action); the poll below waits for the async
-        # listener bus to deliver the final batch's events
-        expected_n = events.count()
         metrics = [
             F.count(F.lit(1)).alias("n_records"),
             F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
@@ -948,29 +948,8 @@ def q186_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             st.observe(metric_name, *metrics).writeStream.format("noop"),
             what="q186 replay",
         )
-
-        qid = str(q.id)
-        deadline = time.monotonic() + 60
-        totals: dict = {}
-        progress_rows = -1
-        while True:
-            totals = obs_listener.totals()
-            progress_rows = sum(
-                p.num_input_rows for p in log_listener.progress if p.query_id == qid
-            )
-            if totals.get("n_records", 0) >= expected_n and progress_rows >= expected_n:
-                break
-            if time.monotonic() >= deadline:
-                # fail loudly, same policy as q185's drain timeout:
-                # returning partial totals would surface as an
-                # inexplicable hash mismatch instead of naming the
-                # listener bus as the culprit
-                raise RuntimeError(
-                    f"q186 listener delivery incomplete after 60 s: observed "
-                    f"{totals.get('n_records', 0)}/{expected_n} rows, progress "
-                    f"{progress_rows}/{expected_n}"
-                )
-            time.sleep(0.25)
+        totals = observed_totals(q, metric_name)
+        progress_rows = sum(p.numInputRows for p in batch_progress(q))
 
         rows = sorted(
             [
@@ -984,8 +963,6 @@ def q186_live_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, "metric string, value bigint"
         ).orderBy("metric")
     finally:
-        spark.streams.removeListener(obs_listener)
-        spark.streams.removeListener(log_listener)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1018,10 +995,11 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: a 16-file throttled replay (1 file/trigger, 500 ms cadence)
     with an update-mode per-user aggregation into an append-only
-    emission log. After ≥2 completed micro-batches the query is stopped
-    gracefully MID-STREAM — trigger arithmetic guarantees files remain
-    (the poll detects the 2nd progress within ~a trigger period, so at
-    most a handful of the 12 files are consumed; asserted). A second
+    emission log. Once the sink has written its second micro-batch the
+    query is stopped gracefully MID-STREAM — trigger arithmetic
+    guarantees files remain (the sink signals the stop as that batch's
+    write returns, so at most a handful of the 16 files are consumed;
+    asserted from the query's progress). A second
     incarnation on the SAME checkpoint then drains the remainder
     (availableNow), exactly the reference's next-worker-picks-up-the-
     stream semantics. The returned table keeps each user's LAST emission.
@@ -1045,11 +1023,12 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir(prefix="kss_a16_")
     ck = os.path.join(base, "ck")
     emissions = os.path.join(base, "emissions")
-    # 16 files at a 500 ms cadence: the poll detects the 2nd completed
-    # batch within ~a trigger period, so reaching all 16 before the stop
-    # lands would need the host to stall ~6+ s mid-phase — wide margin
-    # for a loaded driver box, cheap in phase-2 drain time
+    # 16 files at a 500 ms cadence: the stop follows the 2nd batch's sink
+    # write, so reaching all 16 before it lands would need the host to
+    # stall ~6+ s mid-phase — wide margin for a loaded driver box, cheap
+    # in phase-2 drain time
     n_files = 16
+    second_batch_written = threading.Event()
 
     def aggregate(st: DataFrame) -> DataFrame:
         return (
@@ -1064,6 +1043,8 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         write_epoch(batch_df, emissions, epoch_id)
+        if epoch_id >= 1:
+            second_batch_written.set()
 
     try:
         events_dir = write_stream_fixture(spark, sf_dir, base, n_files=n_files)
@@ -1077,25 +1058,19 @@ def q187_live_graceful_shutdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="500 milliseconds")
             .start()
         )
-        deadline = time.monotonic() + 120
-        while True:
-            done = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(done) >= 2:
-                break
-            if time.monotonic() >= deadline:
-                q.stop()
-                raise RuntimeError("q187 phase 1: no 2nd micro-batch within 120 s")
-            time.sleep(0.05)
+        if not second_batch_written.wait(120):
+            stop_query(q)
+            raise RuntimeError("q187 phase 1: no 2nd micro-batch within 120 s")
         if not stop_query(q, timeout_s=20.0):
             raise RuntimeError(
                 "q187 graceful stop exceeded the reference's 20 s bound (Cons:97)"
             )
         if q.isActive:
             raise RuntimeError("q187 query still active after graceful stop")
-        consumed = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+        consumed = sum(p.numInputRows > 0 for p in batch_progress(q))
         if not 1 <= consumed < n_files:
             # the 500 ms cadence makes draining all 16 files before the
-            # ~instant post-2nd-progress stop physically impossible; if
+            # ~instant post-2nd-batch stop physically impossible; if
             # this fires, the mid-stream premise (files REMAIN at stop)
             # was not exercised and the A16 evidence would be hollow
             raise RuntimeError(
@@ -1538,14 +1513,10 @@ def q316_live_rate_limited_backlog(spark: SparkSession, sf_dir: str) -> DataFram
     )
     q = drain_to_memory(agg, "complete")
 
-    progs = q.recentProgress
-    data_batches = [p for p in progs if p["numInputRows"] > 0]
-    batch_rows = sorted(p["numInputRows"] for p in data_batches)
-    marks = [
-        p["eventTime"]["watermark"]
-        for p in progs
-        if "watermark" in p.get("eventTime", {})
-    ]
+    progs = batch_progress(q)
+    data_batches = [p for p in progs if p.numInputRows > 0]
+    batch_rows = sorted(p.numInputRows for p in data_batches)
+    marks = [p.eventTime["watermark"] for p in progs if "watermark" in p.eventTime]
     one_file = batch_rows == file_counts
     drained = (
         len(data_batches) == _BACKLOG_FILES

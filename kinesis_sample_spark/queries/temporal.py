@@ -1,7 +1,7 @@
 """Temporal analytics — round-12 additions.
 
 The time-dimension family the earlier registry touched only pointwise
-(q23-q26 windows, q55 gap fill, q228 seasonality, q235 OHLC): inter-session gaps, bidirectional as-of spreads, cohort LTV
+(q23-q25 windows, q55 gap fill, q228 seasonality, q235 OHLC): inter-session gaps, bidirectional as-of spreads, cohort LTV
 curves, interval-stabbing backlog, point-in-time (SCD-style) joins, peak
 detection, finite-window EWMA, autocorrelation, inter-arrival statistics,
 and time-spread revenue recognition.

@@ -77,132 +77,6 @@ def q40_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q41 — stopword-profile language-ID heuristic.
-# ---------------------------------------------------------------------------
-#: synthetic profiles over the fixture vocabulary (the fixture text is
-#: word-soup, so real stopword lists would never fire; the *operator* —
-#: n-gram/stopword-hit scoring with deterministic argmax — is the point).
-PROFILES = {
-    "prof_func": ("the", "a", "of", "data", "value"),
-    "prof_join": ("join", "merge", "hash", "sort", "key"),
-    "prof_stream": ("stream", "window", "spark", "batch", "query"),
-}
-
-
-def _sql_profile_hits(name: str, words: tuple[str, ...]) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter(string_split(text, ' '), t -> t IN ({lst}))) AS {name}"
-
-
-@query(
-    "q41_langid_scores",
-    oracle=f"""
-WITH s AS (
-    SELECT doc_id, lang,
-           {_sql_profile_hits('prof_func', PROFILES['prof_func'])},
-           {_sql_profile_hits('prof_join', PROFILES['prof_join'])},
-           {_sql_profile_hits('prof_stream', PROFILES['prof_stream'])}
-    FROM documents
-)
-SELECT doc_id, lang, prof_func, prof_join, prof_stream,
-       CASE WHEN prof_func >= prof_join AND prof_func >= prof_stream THEN 'prof_func'
-            WHEN prof_join >= prof_stream THEN 'prof_join'
-            ELSE 'prof_stream' END AS guess
-FROM s ORDER BY doc_id
-""",
-)
-def q41_langid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID by profile-hit counting (`filter` higher-order fn —
-    one pass over the token array per profile) with a deterministic
-    fixed-preference argmax. Swap PROFILES for real per-language stopword
-    lists on natural-language corpora."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    def _hits(words: tuple[str, ...]):
-        # 1-arg lambda required: a defaulted second parameter would be
-        # bound to the array index by Spark's filter().
-        return lambda t: t.isin(*words)
-
-    hit_cols = {
-        name: F.size(F.filter(toks, _hits(words))).alias(name)
-        for name, words in PROFILES.items()
-    }
-    s = docs.select("doc_id", "lang", *hit_cols.values())
-    guess = (
-        F.when(
-            (F.col("prof_func") >= F.col("prof_join"))
-            & (F.col("prof_func") >= F.col("prof_stream")),
-            "prof_func",
-        )
-        .when(F.col("prof_join") >= F.col("prof_stream"), "prof_join")
-        .otherwise("prof_stream")
-    )
-    return s.withColumn("guess", guess).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# q42 — document quality scoring.
-# ---------------------------------------------------------------------------
-@query(
-    "q42_quality_scores",
-    oracle="""
-WITH m AS (
-    SELECT doc_id,
-           len(string_split(text, ' ')) AS n_tokens,
-           len(list_distinct(string_split(text, ' '))) AS n_types,
-           length(text) AS n_text_chars,
-           len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS n_stop
-    FROM documents
-)
-SELECT doc_id, n_tokens, n_types,
-       n_types / n_tokens AS ttr,
-       (n_text_chars - n_tokens + 1) / n_tokens AS mean_tok_len,
-       n_stop / n_tokens AS stop_ratio,
-       0.25 * (LEAST(n_tokens, 100) / 100.0)
-         + 0.25 * (n_types / n_tokens)
-         + 0.5 * (1.0 - n_stop / n_tokens) AS quality,
-       (n_tokens >= 20 AND n_types / n_tokens >= 0.15) AS keep
-FROM m ORDER BY doc_id
-""",
-)
-def q42_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality score = weighted blend of length, lexical diversity and
-    stopword ratio — the standard cheap pre-filter before expensive dedup /
-    model scoring in a training-data pipeline. Identical double expression
-    trees on both engines."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    m = docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_types"),
-        F.length("text").alias("n_text_chars"),
-        F.size(F.filter(toks, lambda t: t.isin("the", "a"))).alias("n_stop"),
-    )
-    ttr = F.col("n_types") / F.col("n_tokens")
-    stop_ratio = F.col("n_stop") / F.col("n_tokens")
-    return (
-        m.select(
-            "doc_id",
-            "n_tokens",
-            "n_types",
-            ttr.alias("ttr"),
-            ((F.col("n_text_chars") - F.col("n_tokens") + 1) / F.col("n_tokens")).alias(
-                "mean_tok_len"
-            ),
-            stop_ratio.alias("stop_ratio"),
-            (
-                0.25 * (F.least(F.col("n_tokens"), F.lit(100)) / 100.0)
-                + 0.25 * ttr
-                + 0.5 * (1.0 - stop_ratio)
-            ).alias("quality"),
-            ((F.col("n_tokens") >= 20) & (ttr >= 0.15)).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q43 — winnowing fingerprints (rolling-hash document signatures).
 # ---------------------------------------------------------------------------
 @query(
@@ -252,7 +126,7 @@ def q43_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q44... continued text ops: q63 chunking, q64 vocabulary.
+# Continued text ops: q63 chunking, q64 vocabulary.
 # ---------------------------------------------------------------------------
 CHUNK = 20  # tokens per chunk
 STRIDE = 15  # 5-token overlap

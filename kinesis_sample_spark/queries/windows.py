@@ -94,68 +94,6 @@ def q15_running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q17 — time-range frame: events in the trailing hour per user.
-# ---------------------------------------------------------------------------
-@query(
-    "q17_trailing_hour_count",
-    oracle="""
-SELECT user_id, event_id,
-       COUNT(*) OVER (PARTITION BY user_id ORDER BY epoch_ms(ts)
-                      RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW) AS n_last_hour
-FROM events
-ORDER BY user_id, event_id
-""",
-)
-def q17_trailing_hour_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE frame over event-time. Spark's rangeBetween needs a numeric
-    ordering, so the frame runs on epoch milliseconds — DuckDB's
-    ``epoch_ms`` floors identically to Spark's ``unix_millis``. Scale: the
-    range frame is a per-partition two-pointer scan, O(rows) total."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy(F.unix_millis("ts"))
-        .rangeBetween(-3_600_000, W.currentRow)
-    )
-    return (
-        ev.select("user_id", "event_id", F.count("*").over(w).alias("n_last_hour"))
-        .orderBy("user_id", "event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q18 — distribution functions: ntile / percent_rank / cume_dist.
-# ---------------------------------------------------------------------------
-@query(
-    "q18_customer_balance_distribution",
-    oracle="""
-SELECT c_custkey, c_mktsegment,
-       NTILE(4)       OVER w AS quartile,
-       PERCENT_RANK() OVER w AS pct_rank,
-       CUME_DIST()    OVER w AS cume
-FROM customer
-WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-ORDER BY c_mktsegment, c_acctbal, c_custkey
-""",
-)
-def q18_customer_balance_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile/percent_rank/cume_dist with a unique ordering. The ratio
-    outputs are small-integer divisions — identical doubles either engine."""
-    cust = load_table(spark, sf_dir, "customer")
-    w = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    return (
-        cust.select(
-            "c_custkey",
-            "c_mktsegment",
-            F.ntile(4).over(w).alias("quartile"),
-            F.percent_rank().over(w).alias("pct_rank"),
-            F.cume_dist().over(w).alias("cume"),
-        )
-        .orderBy("c_mktsegment", "c_acctbal", "c_custkey")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q114 — ratio-to-report: nation revenue share within its region.
 # ---------------------------------------------------------------------------
 @query(

@@ -10,7 +10,7 @@ shutdown — maps onto the Structured Streaming lifecycle (SURVEY.md §3.4):
 - DynamoDB checkpoint table      → ``checkpointLocation`` (offset WAL)
 - per-record retry + poison skip → explicit DLQ split (streaming.dlq)
 - graceful shutdown (stdin+20 s) → ``stop_query(query, timeout)``
-- CloudWatch metrics             → ``StreamingQueryListener`` (observe.py)
+- CloudWatch metrics             → the query's progress, read through observe.py
 """
 
 from kinesis_sample_spark.streaming.envelope import (

@@ -1,93 +1,56 @@
 """Observability — the reference's A17 (slf4j/MDC logs + CloudWatch
-metrics via KCL metricsConfig, Cons:72/:80) mapped to Spark's
-StreamingQueryListener / lastProgress.
+metrics via KCL metricsConfig, Cons:72/:80) read from the streaming query
+itself.
+
+A query keeps its own per-batch progress: ``numInputRows`` is the
+reference's "Processing N records" log line (Proc:167), and
+``observedMetrics`` carries the ``df.observe(name, exprs...)`` partials
+computed inside the plan — Spark's equivalent of the KCL's CloudWatch
+metric emission. Both are readable from the query as soon as it returns
+from a drain, so nothing here waits on the asynchronous listener bus.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
-from pyspark.sql.streaming import StreamingQueryListener
-
-
-@dataclass
-class ProgressRecord:
-    batch_id: int
-    num_input_rows: int
-    sink_description: str
-    query_id: str = ""  # lets a shared-session consumer filter to one query
+_RETENTION_CONF = "spark.sql.streaming.numRecentProgressUpdates"
 
 
-class CollectingListener(StreamingQueryListener):
-    """Collects per-batch progress (batch size ≈ the reference's
-    "Processing N records" log line, Proc:167)."""
+def batch_progress(query: StreamingQuery) -> list[StreamingQueryProgress]:
+    """The query's per-batch progress, oldest first, one entry per
+    executed micro-batch (no-data batches included).
 
-    def __init__(self) -> None:
-        super().__init__()
-        self.progress: list[ProgressRecord] = []
-        self.started: list[str] = []
-        self.terminated: list[str] = []
-
-    def onQueryStarted(self, event) -> None:
-        self.started.append(event.id)
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        self.progress.append(
-            ProgressRecord(
-                batch_id=p.batchId,
-                num_input_rows=p.numInputRows,
-                sink_description=p.sink.description,
-                query_id=str(p.id),
-            )
+    Spark keeps at most ``numRecentProgressUpdates - 1`` entries and drops
+    the oldest beyond that, so a full history may already have lost
+    batches: this raises instead of letting a caller undercount."""
+    progress = query.recentProgress
+    retention = int(SparkSession.active().conf.get(_RETENTION_CONF))
+    if len(progress) >= retention - 1:
+        raise RuntimeError(
+            f"query {query.name or query.id} holds {len(progress)} progress "
+            f"entries, the most {_RETENTION_CONF}={retention} retains; "
+            f"earlier batches may have been dropped"
         )
-
-    def onQueryIdle(self, event) -> None:  # pragma: no cover
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        self.terminated.append(event.id)
+    return progress
 
 
-class ObservedMetricsListener(StreamingQueryListener):
-    """Accumulates ``df.observe(name, exprs...)`` results per micro-batch
-    — Spark's equivalent of the KCL's CloudWatch metric emission (A17),
-    but computed inside the query plan instead of by side-channel
-    instrumentation.
-
-    Per-batch observed rows are partial aggregates over exactly that
-    batch's input, so additive metrics (counts, integer sums) summed
-    across batches equal the same aggregate computed over the whole
-    bounded input — which is what makes an observability surface
-    hash-checkable against batch SQL (q186's oracle and the A17 smoke in
-    ``__spark_entry__.entry`` both rely on it)."""
-
-    def __init__(self, metric_name: str) -> None:
-        super().__init__()
-        self.metric_name = metric_name
-        self.rows: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:  # pragma: no cover — no-op
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        om = event.progress.observedMetrics
-        row = om.get(self.metric_name) if om else None
-        if row is not None:
-            self.rows.append(row.asDict())
-
-    def onQueryIdle(self, event) -> None:  # pragma: no cover
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # pragma: no cover — no-op
-        pass
-
-    def totals(self) -> dict:
-        """Sum each additive metric across batches (None-safe: a batch
-        with no matching rows observes NULL for sum-like metrics)."""
-        out: dict = {}
-        for r in self.rows:
-            for k, v in r.items():
-                if v is not None:
-                    out[k] = out.get(k, 0) + v
-        return out
+def observed_totals(query: StreamingQuery, name: str) -> dict:
+    """Sum each metric that ``df.observe(name, ...)`` reported across the
+    query's batches. Per-batch observed rows are partial aggregates over
+    exactly that batch's input, so additive metrics (counts, integer
+    sums) summed across batches equal the same aggregate over the whole
+    bounded input — which makes the surface hash-checkable against batch
+    SQL (q186 and the A17 smoke in ``__spark_entry__.entry``). None-safe:
+    a batch with no matching rows observes NULL for sum-like metrics."""
+    out: dict = {}
+    for p in batch_progress(query):
+        row = p.observedMetrics.get(name)
+        if row is None:
+            continue
+        for k, v in row.asDict().items():
+            if v is not None:
+                out[k] = out.get(k, 0) + v
+    return out

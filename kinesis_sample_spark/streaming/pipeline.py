@@ -122,7 +122,8 @@ def drain_available_now(
     drain every input available at start. A drain that misses
     ``timeout_s`` raises with the query stopped, so no caller reads a
     partially written sink or leaves a query holding its checkpoint.
-    Returns the terminated query (its ``recentProgress`` stays readable)."""
+    Returns the terminated query (``observe.batch_progress`` reads its
+    per-batch progress)."""
     q = writer.trigger(availableNow=True).start()
     if not q.awaitTermination(timeout_s):
         stop_query(q)

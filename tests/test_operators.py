@@ -184,9 +184,9 @@ def test_countmin_never_underestimates(spark):
 
 def test_observe_metrics_match_aggregate(spark):
     """df.observe() piggybacks metrics on a real action — the in-band
-    observability hook (A17's batch analogue; streaming uses
-    streaming/observe.py's listener). The observed sum/count must equal
-    the same aggregate computed as a query."""
+    observability hook (A17's batch analogue; streaming reads it from the
+    query's progress through streaming/observe.py). The observed sum/count
+    must equal the same aggregate computed as a query."""
     from pyspark.sql import Observation
 
     df = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -19,6 +19,7 @@ from kinesis_sample_spark.sources.files import (
     write_stream_fixture,
 )
 from kinesis_sample_spark.streaming.envelope import envelope_from_events
+from kinesis_sample_spark.streaming.observe import batch_progress
 from kinesis_sample_spark.streaming.pipeline import (
     drain_available_now,
     drain_to_memory,
@@ -65,7 +66,7 @@ def test_replay_frame_batches_follow_file_order(spark, tmp_path):
     st = replay_frame(sized, d, 4, by="file")
     assert st.schema.names == ["id"]
     q = drain_available_now(st.writeStream.format("noop"), 120, "replay order")
-    batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"] > 0]
+    batches = [p.numInputRows for p in batch_progress(q) if p.numInputRows > 0]
     assert batches == [spark.read.parquet(f).count() for f in _replay_files(d)]
     assert batches == [1, 2, 3, 4]
 

@@ -22,7 +22,7 @@ from kinesis_sample_spark.streaming.envelope import (
     envelope_from_events,
     rate_producer,
 )
-from kinesis_sample_spark.streaming.observe import CollectingListener
+from kinesis_sample_spark.streaming.observe import batch_progress, observed_totals
 from kinesis_sample_spark.streaming.pipeline import (
     consume_with_dlq,
     drain_available_now,
@@ -122,35 +122,23 @@ def test_dlq_splits_poison_records(spark, events_dir, tmp_path):
 
 
 def test_graceful_stop_and_listener(spark, events_dir):
-    """A16 graceful shutdown + A17 observability: listener sees progress;
-    stop_query terminates within the 20 s budget; offsets are checkpointed
-    so a restart would resume, not reprocess."""
-    listener = CollectingListener()
-    spark.streams.addListener(listener)
-    try:
-        env = envelope_from_events(replay_events_stream(spark, events_dir))
-        q = (
-            decode_envelope(env)
-            .writeStream.format("memory")
-            .queryName("t_stop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert stop_query(q, timeout_s=20.0, drain=True)  # bounded source → drain first
-        assert not q.isActive
-        n_events = load_table(spark, SF, "events").count()
-        # listener delivery is async — poll briefly for the tail batches
-        import time
-
-        total = 0
-        for _ in range(240):  # up to 60 s — listener bus delivery is async
-            total = sum(p.num_input_rows for p in listener.progress)
-            if total >= n_events:
-                break
-            time.sleep(0.25)
-        assert total == n_events
-    finally:
-        spark.streams.removeListener(listener)
+    """A16 graceful shutdown + A17 observability: the stopped query's
+    progress counts every event; stop_query terminates within the 20 s
+    budget; offsets are checkpointed so a restart would resume, not
+    reprocess."""
+    env = envelope_from_events(replay_events_stream(spark, events_dir))
+    q = (
+        decode_envelope(env)
+        .writeStream.format("memory")
+        .queryName("t_stop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert stop_query(q, timeout_s=20.0, drain=True)  # bounded source → drain first
+    assert not q.isActive
+    n_events = load_table(spark, SF, "events").count()
+    total = sum(p.numInputRows for p in batch_progress(q))
+    assert total == n_events
 
 
 def test_drain_timeout_raises_and_stops_query(spark, events_dir):
@@ -174,38 +162,40 @@ def test_drain_timeout_raises_and_stops_query(spark, events_dir):
 def test_observed_metrics_accumulate_to_batch_aggregate(spark, events_dir):
     """A17 as a *checkable* metric surface: ``df.observe`` counts/sums
     accumulated across micro-batches must equal the same aggregate over
-    the bounded input — the additivity law the round-6 A17 live-gate
-    candidate rests on (see ObservedMetricsListener.totals)."""
-    import time
+    the bounded input — the additivity law q186 rests on (see
+    streaming.observe.observed_totals)."""
+    st = replay_events_stream(spark, events_dir)
+    obs = st.observe(
+        "a17",
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
+    )
+    q = drain_available_now(obs.writeStream.format("noop"), 120, "a17")
+    events = load_table(spark, SF, "events")
+    expected_n = events.count()
+    expected_cents = events.select(
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+    ).collect()[0][0]
+    totals = observed_totals(q, "a17")
+    assert totals["n_rows"] == expected_n
+    assert totals["cents"] == expected_cents
 
-    from kinesis_sample_spark.streaming.observe import ObservedMetricsListener
 
-    listener = ObservedMetricsListener("a17")
-    spark.streams.addListener(listener)
+def test_batch_progress_raises_when_history_may_be_truncated(spark, tmp_path):
+    """Spark keeps at most numRecentProgressUpdates - 1 progress entries
+    and silently drops older ones; a reader that summed what is left
+    would undercount, so a full history must raise."""
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "2")
     try:
-        st = replay_events_stream(spark, events_dir)
-        obs = st.observe(
-            "a17",
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-        )
-        drain_available_now(obs.writeStream.format("noop"), 120, "a17")
-        events = load_table(spark, SF, "events")
-        expected_n = events.count()
-        expected_cents = events.select(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        ).collect()[0][0]
-        # listener delivery is async — poll briefly for the tail batches
-        totals: dict = {}
-        for _ in range(240):  # up to 60 s — listener bus delivery is async
-            totals = listener.totals()
-            if totals.get("n_rows", 0) >= expected_n:
-                break
-            time.sleep(0.25)
-        assert totals["n_rows"] == expected_n
-        assert totals["cents"] == expected_cents
+        one_row_files = spark.range(4).withColumn("file", F.col("id"))
+        st = replay_frame(one_row_files, str(tmp_path / "replay"), 4, by="file")
+        q = drain_available_now(st.writeStream.format("noop"), 120, "retention")
+        with pytest.raises(RuntimeError, match="numRecentProgressUpdates=2"):
+            batch_progress(q)
     finally:
-        spark.streams.removeListener(listener)
+        spark.conf.set(key, before)
 
 
 def test_rate_producer_envelope(spark):
@@ -314,9 +304,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     )
     q = drain_to_memory(agg, "update", "t_late_drop")
     dropped = sum(
-        s.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for s in p["stateOperators"]
+        s.numRowsDroppedByWatermark for p in batch_progress(q) for s in p.stateOperators
     )
     assert dropped >= 1, "late batch was not filtered by the watermark"
     out = spark.sql("SELECT * FROM t_late_drop")
