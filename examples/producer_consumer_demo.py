@@ -19,6 +19,7 @@ Differences from the reference, by design (SURVEY.md §3.4):
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -34,7 +35,13 @@ from kinesis_sample_spark.streaming.pipeline import stop_query
 def main(run_seconds: float = 5.0) -> None:
     spark = get_spark("demo", cpus=4)
     work = tempfile.mkdtemp(prefix="kss_demo_")
+    try:
+        _demo(spark, work, run_seconds)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
+
+def _demo(spark, work: str, run_seconds: float) -> None:
     # --- producer (A1/A2) → consumer decode/DLQ (A11/A12), live with a
     # processing-time trigger ≈ the reference's continuous loop. (The
     # bounded-replay variant of this pipeline, consume_with_dlq over a

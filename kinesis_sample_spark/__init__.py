@@ -17,8 +17,8 @@ Design rules (see SURVEY.md §2/§4):
   an operator — every operator must survive a 1000-executor / 100 TB run.
 """
 
-from kinesis_sample_spark.session import get_spark, stop_spark
+from kinesis_sample_spark.session import get_spark
 from kinesis_sample_spark.catalog import TABLES, load_table, register_views
 
-__all__ = ["get_spark", "stop_spark", "TABLES", "load_table", "register_views"]
+__all__ = ["get_spark", "TABLES", "load_table", "register_views"]
 __version__ = "0.1.0"

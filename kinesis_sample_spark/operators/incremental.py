@@ -19,8 +19,6 @@ Runs unchanged inside ``foreachBatch`` for streaming ingest.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -156,7 +154,3 @@ def dedup_batch_against_store(
         accepted_sig.write.mode("append").parquet(store_path)
     sig_new.unpersist()
     return dups, accepted_ids
-
-
-def store_size(spark: SparkSession, store_path: str) -> int:
-    return spark.read.parquet(store_path).count() if os.path.isdir(store_path) else 0

@@ -102,8 +102,8 @@ def _sql_minhash_cols() -> str:
 
 
 #: the candidate-verification pipeline (through verified intersection
-#: counts) as a WITH-clause body — shared by q31/q69 (jaccard) and q113
-#: (asymmetric containment), which apply different final filters.
+#: counts) as a WITH-clause body — shared by q31/q69 (jaccard) and
+#: q249/q259 (textcal.py), which apply different final filters.
 _SQL_CAND_BODY_TEMPLATE = f"""docs3 AS (
     SELECT doc_id, {_SQL_SHL} AS shl
     FROM documents WHERE len(string_split(text, ' ')) >= 3
@@ -263,8 +263,8 @@ gcand AS (
 def _verified_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs with verified shingle-set intersection counts
     (doc_a, doc_b, n_inter, n_a, n_b) — unfiltered, so different
-    similarity measures (jaccard q31, containment q113) share one
-    pipeline."""
+    similarity measures (jaccard q31, MinHash calibration q249) share
+    one pipeline."""
     docs3 = _docs_with_shingles(spark, sf_dir)
 
     # One signature relation, persisted: (doc_id, distinct shingle set,
@@ -583,47 +583,6 @@ def q69_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q113 — asymmetric containment near-dup (sub-document duplication).
-# ---------------------------------------------------------------------------
-@query(
-    "q113_containment_neardup",
-    oracle=f"""
-WITH {_SQL_CAND_BODY_TEMPLATE},
-cont AS (
-    SELECT i.doc_a, i.doc_b, i.n_inter, na.n AS n_a, nb.n AS n_b,
-           i.n_inter / na.n AS cont_a,
-           i.n_inter / nb.n AS cont_b
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.doc_a
-    JOIN sizes nb ON nb.doc_id = i.doc_b
-)
-SELECT doc_a, doc_b, n_inter, n_a, n_b, cont_a, cont_b
-FROM cont
-WHERE GREATEST(cont_a, cont_b) >= 0.9
-ORDER BY doc_a, doc_b
-""",
-)
-def q113_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Containment (|A∩B| / |A|) instead of jaccard: catches the
-    *sub-document* duplication jaccard misses — a short doc wholly quoted
-    inside a long one has low jaccard but containment ≈ 1 on the short
-    side. Shares q31's entire signature→band→verify pipeline
-    (_verified_candidate_pairs); only the final measure differs, which is
-    the point: at 100 TB the expensive stages are computed once and every
-    similarity policy (dedup, quote detection, decontamination) reads the
-    same verified-pair relation."""
-    pairs = _verified_candidate_pairs(spark, sf_dir)
-    cont_a = F.col("n_inter") / F.col("n_a")
-    cont_b = F.col("n_inter") / F.col("n_b")
-    return (
-        pairs.withColumn("cont_a", cont_a)
-        .withColumn("cont_b", cont_b)
-        .filter(F.greatest(F.col("cont_a"), F.col("cont_b")) >= 0.9)
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q127 — canonical-document selection: clusters → keep-best policy.
 # ---------------------------------------------------------------------------
 @query(
@@ -719,7 +678,7 @@ def q138_dedup_rate_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     of each source's documents sit in a verified near-dup pair, and how
     many chars that duplication represents. A source with an outlier
     dup-rate is either a mirror of another source (see q130) or a
-    boilerplate farm — both change its mixing weight (q119). Reuses
+    boilerplate farm — both change its sampling weight. Reuses
     q31's verified pairs; the per-source rollup is a left join against
     the (tiny) distinct dup-doc set, broadcast by Catalyst."""
     pairs = q31_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")

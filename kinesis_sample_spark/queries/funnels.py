@@ -19,56 +19,6 @@ from kinesis_sample_spark.queries import query
 
 
 # ---------------------------------------------------------------------------
-# q109 — weekly cohort retention matrix.
-# ---------------------------------------------------------------------------
-@query(
-    "q109_retention_cohorts",
-    oracle="""
-WITH first_seen AS (
-    SELECT user_id, CAST(date_trunc('week', MIN(ts)) AS TIMESTAMP) AS cohort_week
-    FROM events GROUP BY user_id
-),
-activity AS (
-    SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS TIMESTAMP) AS act_week
-    FROM events
-)
-SELECT cohort_week,
-       CAST(FLOOR(date_diff('day', cohort_week, act_week) / 7) AS BIGINT) AS week_number,
-       COUNT(DISTINCT user_id) AS n_active_users
-FROM activity JOIN first_seen USING (user_id)
-GROUP BY 1, 2
-ORDER BY cohort_week, week_number
-""",
-)
-def q109_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort users by first-seen week, count distinct active users per
-    (cohort, weeks-since-cohort) cell — the retention triangle. Two
-    aggregations plus one user-keyed join; the cohort table is one row
-    per user, so at 100 TB the join side to broadcast or bucket is the
-    *user dimension*, not the event fact. Week offsets are exact
-    multiples of 7 days, so FLOOR(days/7) is integer-safe on both
-    engines."""
-    ev = load_table(spark, sf_dir, "events")
-    first_seen = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_week")
-    )
-    activity = ev.select(
-        "user_id", F.date_trunc("week", "ts").alias("act_week")
-    ).distinct()
-    return (
-        activity.join(first_seen, "user_id")
-        .groupBy(
-            "cohort_week",
-            F.floor(
-                F.datediff(F.col("act_week"), F.col("cohort_week")) / 7
-            ).alias("week_number"),
-        )
-        .agg(F.countDistinct("user_id").alias("n_active_users"))
-        .orderBy("cohort_week", "week_number")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q110 — signup→purchase funnel conversion per user.
 # ---------------------------------------------------------------------------
 @query(
@@ -430,72 +380,6 @@ def q200_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q202 — behavioral transition entropy (Markov predictability).
-# ---------------------------------------------------------------------------
-@query(
-    "q202_transition_entropy",
-    oracle=f"""
-WITH e AS (
-    SELECT user_id, ts, event_id, event_type,
-           lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-    FROM events
-),
-t AS (
-    SELECT event_type AS prior_type, nxt, COUNT(*) AS c
-    FROM e WHERE nxt IS NOT NULL GROUP BY event_type, nxt
-),
-a AS (
-    SELECT prior_type, CAST(SUM(c) AS BIGINT) AS n_transitions,
-           COUNT(*) AS n_next_types,
-           CAST(SUM(CAST(round(c * ln(c), 6) AS DECIMAL(18,6))) AS DOUBLE) AS s,
-           SUM(c) AS ct
-    FROM t GROUP BY prior_type
-)
-SELECT prior_type, n_transitions, n_next_types,
-       {sql_double('CAST(round(ln(ct), 6) AS DECIMAL(18,6))')} - s / ct AS entropy_nats
-FROM a ORDER BY prior_type
-""",
-)
-def q202_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """How predictable is the next user action given the current one:
-    Shannon entropy of each prior event type's next-event distribution
-    (the Markov-chain uncertainty score behind behavioral segmentation
-    and bot detection — near-zero entropy = scripted traffic). Builds on
-    q141's lead() transition counts and q194's entropy identity
-    ln(n) - Σ c·ln(c)/n, with every ln quantized round(·,6) → DECIMAL
-    per the round-9 transcendental rule (Java Math.log and libm ln
-    drift 1 ulp on plain integers).
-
-    Scale: one user-keyed window for the lead, one |event_types|²-row
-    count table, one |event_types|-row aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    wq = W.partitionBy("user_id").orderBy("ts", "event_id")
-    tr = (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("nxt", F.lead("event_type").over(wq))
-        .where(F.col("nxt").isNotNull())
-        .groupBy(F.col("event_type").alias("prior_type"), "nxt")
-        .agg(F.count("*").alias("c"))
-    )
-    a = tr.groupBy("prior_type").agg(
-        F.sum("c").alias("ct"),
-        F.count("*").alias("n_next_types"),
-        F.sum(F.round(F.col("c") * F.log("c"), 6).cast("decimal(18,6)"))
-        .cast("double")
-        .alias("s"),
-    )
-    return a.select(
-        "prior_type",
-        F.col("ct").alias("n_transitions"),
-        "n_next_types",
-        (
-            F.round(F.log("ct"), 6).cast("decimal(18,6)").cast("double")
-            - F.col("s") / F.col("ct")
-        ).alias("entropy_nats"),
-    ).orderBy("prior_type")
-
-
-# ---------------------------------------------------------------------------
 # q203 — exact rolling 7-day distinct users per day.
 # ---------------------------------------------------------------------------
 @query(
@@ -784,7 +668,8 @@ def q224_transition_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition — q141 mines *which* transitions happen, this measures
     *how fast* (the view->purchase latency a conversion team actually
     tracks). Gaps are exact integer microseconds (unix_micros ≡ DuckDB
-    epoch_us); percentiles interpolate identical integers (q162 recipe).
+    epoch_us); percentiles interpolate identical integers (Spark's
+    ``percentile`` and DuckDB's ``quantile_cont`` share one linear rule).
     Column names avoid DuckDB's reserved word `prior` (the q200 lesson).
 
     Scale: one shuffle on user_id for the lag window, then a bounded
@@ -913,8 +798,8 @@ GROUP BY d ORDER BY d
 )
 def q236_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """New-vs-returning daily active user census — the growth-accounting
-    view product analytics leads with (q109's cohort triangle collapsed
-    to its diagonal readout): per day, actives split by whether it is
+    view product analytics leads with (the cohort retention triangle
+    collapsed to its diagonal readout): per day, actives split by whether it is
     the user's first-ever active day. Pure integer day arithmetic; the
     first-seen relation is user-dimension-sized.
 

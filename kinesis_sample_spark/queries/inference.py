@@ -271,7 +271,7 @@ def q285_median_order_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment via the binomial order-statistic bound: L = floor((n −
     1.96·√n)/2), U = n+1−L; the CI is [x_(L), x_(U)] — valid for ANY
     continuous distribution, no normality assumed. The inference layer
-    q162's point percentiles lack: a segment whose CI excludes another's
+    exact point percentiles lack: a segment whose CI excludes another's
     median is a real difference, not noise.
 
     Ranks are exact integers (tie-broken by orderkey); bounds use one

@@ -40,8 +40,8 @@ FEATURE_SCHEMA = (
 
 
 def decode_media(data: bytes, fmt: str, strict: bool = True) -> dict:
-    """Capability-gated decoder (same pattern as sources/table_formats.py):
-    byte-level features are always computed (deterministic, SQL-checkable —
+    """Capability-gated decoder (an optional dependency is probed with an
+    import-try, never required): byte-level features are always computed (deterministic, SQL-checkable —
     the q50 oracle path); for ``image/*`` payloads the function *also*
     decodes pixels when PIL is importable, and raises a clearly-marked
     ``NotImplementedError`` ONLY when no decoder exists in the

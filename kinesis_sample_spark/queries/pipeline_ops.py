@@ -1,6 +1,5 @@
 """Training-data pipeline operators, round 2: rule-based quality filtering,
-dataset splitting, source mixing, two-stage ANN retrieval, label centroids,
-and sketch-based decontamination.
+two-stage ANN retrieval, label centroids, and sketch-based decontamination.
 
 These extend the LLM-data surface (dedup/similarity/text/contamination
 families) with the remaining ops a production corpus pipeline runs between
@@ -10,13 +9,6 @@ families) with the remaining ops a production corpus pipeline runs between
   (word-count bounds, mean-word-length bounds, max-repetition ratio,
   stop-word presence) as boolean columns plus a final keep decision, so
   downstream stages can both filter and audit *why* documents dropped.
-- **q118 deterministic train/val/test split** — hash-bucket assignment
-  (md5, engine-portable) stratified-audited per source. Hash-based splits
-  are reproducible under re-runs and append-only growth, unlike random
-  ones.
-- **q119 temperature-scaled source mixing** — sqrt-damped (α = 0.5)
-  sampling weights per source with integer quotas and repetition factors;
-  the standard multi-source mixing step (GPT-3/Pile style).
 - **q120 multi-probe LSH rerank** — stage 1 generates candidates from
   Hamming-≤1 bucket probes (9 probes over 8 hyperplane bits), stage 2
   reranks candidates by exact cosine, and the output carries
@@ -38,11 +30,11 @@ Reference parity note: the reference (AmazonKinesisApplicationSample*.java)
 has no analytics surface — these operators come from the SURVEY §2 mandate
 to cover what a large-scale training-data pipeline needs.
 
-Scale notes (100 TB): q117/q118 are map-side except one (doc_id, token)
-shuffle for the repetition rule; q119 aggregates to |sources| rows; q120
-broadcasts the query-side probes and equi-joins on bucket; q121 shuffles
-(label, dim) partial sums (map-side combine makes this |labels|·dim rows
-per task); q122 broadcasts the Bloom bit set.
+Scale notes (100 TB): q117 is map-side except one (doc_id, token) shuffle
+for the repetition rule; q120 broadcasts the query-side probes and
+equi-joins on bucket; q121 shuffles (label, dim) partial sums (map-side
+combine makes this |labels|·dim rows per task); q122 broadcasts the Bloom
+bit set.
 """
 
 from __future__ import annotations
@@ -53,7 +45,6 @@ from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.functions.hashing import md5_long, md5_long_sql
-from kinesis_sample_spark.functions.numeric import sql_double
 from kinesis_sample_spark.functions.shingles import shingle_array
 from kinesis_sample_spark.queries import query
 from kinesis_sample_spark.queries.contamination import _BENCH_SOURCE, _NGRAM, _SQL_GRAMS
@@ -157,109 +148,6 @@ def q117_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r_wc & r_ml & r_rep & r_stop).cast("int").alias("keep"),
         )
         .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q118 — deterministic hash train/val/test split, audited per source.
-# ---------------------------------------------------------------------------
-_SPLIT_SQL_BUCKET = f"({md5_long_sql('CAST(doc_id AS VARCHAR)')} % 100)"
-
-
-@query(
-    "q118_train_split",
-    oracle=f"""
-WITH s AS (
-  SELECT doc_id, source, length(text) AS n_chars_t,
-         CASE WHEN {_SPLIT_SQL_BUCKET} < 80 THEN 'train'
-              WHEN {_SPLIT_SQL_BUCKET} < 90 THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents
-)
-SELECT split, source,
-       count(*) AS n_docs,
-       count(DISTINCT doc_id) AS n_distinct_docs,
-       CAST(sum(n_chars_t) AS BIGINT) AS sum_chars
-FROM s GROUP BY split, source ORDER BY split, source
-""",
-)
-def q118_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 split by md5 hash bucket of doc_id —
-    reproducible across runs and stable under corpus append (a new doc
-    never moves an old doc between splits, unlike ``randomSplit``). The
-    per-(split, source) audit shows stratification balance, and
-    ``n_distinct_docs = n_docs`` proves the bucket function is a
-    partition (no doc lands twice). Map-only + one small aggregation."""
-    docs = load_table(spark, sf_dir, "documents")
-    bucket = md5_long(F.col("doc_id").cast("string")) % 100
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return (
-        docs.select(
-            split.alias("split"), "source", "doc_id", F.length("text").alias("n_chars_t")
-        )
-        .groupBy("split", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("doc_id").alias("n_distinct_docs"),
-            F.sum("n_chars_t").alias("sum_chars"),
-        )
-        .orderBy("split", "source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q119 — temperature-scaled source mixing weights (α = 0.5).
-# ---------------------------------------------------------------------------
-_TARGET_SAMPLES = 1000
-
-
-@query(
-    "q119_source_mixing_weights",
-    oracle=f"""
-WITH c AS (
-  SELECT source, count(*) AS n_docs,
-         CAST(sqrt(count(*)) AS DECIMAL(20,8)) AS w_dec
-  FROM documents GROUP BY source
-),
-t AS (SELECT *, SUM(w_dec) OVER () AS total_dec FROM c)
-SELECT source, n_docs,
-       {sql_double('w_dec')} / {sql_double('total_dec')} AS weight,
-       CAST(FLOOR({sql_double('w_dec')} / {sql_double('total_dec')}
-                  * {_TARGET_SAMPLES}) AS BIGINT) AS quota,
-       CAST(FLOOR({sql_double('w_dec')} / {sql_double('total_dec')}
-                  * {_TARGET_SAMPLES}) AS BIGINT) / n_docs AS epochs
-FROM t ORDER BY source
-""",
-)
-def q119_source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source sampling weights ∝ count^0.5 (temperature mixing à la
-    multilingual-BERT / Pile; α=0.5 uses sqrt, which is correctly rounded
-    in both engines — ln/pow are not, see functions/numeric.py). The
-    irrational sqrt doubles are snapped to DECIMAL(20,8) before the
-    cross-source sum so the total is exact and order-independent (a
-    dyadic double can never sit on a scale-8 decimal midpoint — those
-    have 5^9 in the denominator — so the snap itself is unambiguous).
-    Weight = one double division of the two snapped values; quota floors
-    to an integer sample budget; epochs = repetition factor over the
-    source. Aggregates to |sources| rows, then a single-partition window
-    over those rows only."""
-    docs = load_table(spark, sf_dir, "documents")
-    c = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    c = c.withColumn("w_dec", F.sqrt("n_docs").cast("decimal(20,8)"))
-    total = F.sum("w_dec").over(W.partitionBy())
-    weight = F.col("w_dec").cast("double") / total.cast("double")
-    quota = F.floor(weight * _TARGET_SAMPLES).cast("bigint")
-    return (
-        c.select(
-            "source",
-            "n_docs",
-            weight.alias("weight"),
-            quota.alias("quota"),
-            (quota / F.col("n_docs")).alias("epochs"),
-        )
-        .orderBy("source")
     )
 
 

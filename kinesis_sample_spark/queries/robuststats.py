@@ -333,7 +333,7 @@ _MARKOV_SQL = _markov_sql()
 @query("q255_markov_stationary", oracle=_MARKOV_SQL)
 def q255_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the event-type Markov chain by power
-    iteration — the steady-state answer to q141/q202's transition
+    iteration — the steady-state answer to q141's transition
     descriptions. 20 unrolled iterations from the uniform vector.
 
     The cross-engine trap here is float summation order inside an

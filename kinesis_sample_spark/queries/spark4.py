@@ -9,7 +9,6 @@ proves.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import register_views
 from kinesis_sample_spark.queries import query

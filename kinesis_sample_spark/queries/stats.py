@@ -775,51 +775,6 @@ def q145_covariance_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q162 — exact grouped percentiles (the non-approx quantile operator).
-# ---------------------------------------------------------------------------
-@query(
-    "q162_exact_percentiles",
-    oracle="""
-SELECT l_returnflag, l_linestatus,
-       quantile_cont(l_quantity, 0.5) AS qty_p50,
-       quantile_cont(l_quantity, 0.9) AS qty_p90,
-       quantile_cont(l_extendedprice, 0.25) AS price_p25,
-       quantile_cont(l_extendedprice, 0.99) AS price_p99,
-       median(l_discount) AS disc_med
-FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-)
-def q162_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentiles per group (q48 gates the *approx* sketch path;
-    this gates the exact sort-based one). Spark's ``percentile`` and
-    DuckDB's ``quantile_cont`` share the linear-interpolation definition
-    q = v[f] + (h − f)·(v[f+1] − v[f]), and the interpolation arithmetic
-    runs over identical doubles, so the hash match is exact — verified
-    including non-integer interpolation points on l_extendedprice.
-
-    Scale: exact percentiles need the group's values together — Spark
-    executes this as partial collection per partition + final merge per
-    group, shuffling only (group, value) pairs. For heavy groups at
-    100 TB prefer q48's approx_percentile (fixed-size sketch); this
-    operator is the calibration baseline (and the right choice for
-    bounded-cardinality groups like these 6)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.expr("percentile(l_quantity, 0.5D)").alias("qty_p50"),
-            F.expr("percentile(l_quantity, 0.9D)").alias("qty_p90"),
-            F.expr("percentile(l_extendedprice, 0.25D)").alias("price_p25"),
-            F.expr("percentile(l_extendedprice, 0.99D)").alias("price_p99"),
-            F.expr("percentile(l_discount, 0.5D)").alias("disc_med"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q191 — revenue decile lift / concentration audit (Lorenz-curve table).
 # ---------------------------------------------------------------------------
 @query(
@@ -966,8 +921,9 @@ def q212_percentile_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     before you swap the exact operator out at scale.
 
     Determinism: bin width/index, interpolation, and the exact
-    percentile (q162 recipe) are all fixed-order IEEE ops over identical
-    doubles; counts are exact integers.
+    percentile (one linear-interpolation rule in both engines) are all
+    fixed-order IEEE ops over identical doubles; counts are exact
+    integers.
 
     Scale: two scans of the fact (min/max pass, then binning pass), one
     tiny per-(flag, bin) aggregate; the window and interpolation run on
@@ -1357,7 +1313,7 @@ def q217_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     job wants to compute it (per-bucket partial means combine; only 32
     scalars meet the median). Bucket means are exact integer sums over
     counts (single divisions); the median interpolates two identical
-    doubles (q162 recipe).
+    doubles (one linear-interpolation rule in both engines).
 
     Scale: one partial-aggregate shuffle to 32 groups, then a 32-row
     percentile — constant final state regardless of SF."""

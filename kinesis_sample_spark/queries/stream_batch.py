@@ -17,7 +17,6 @@ Reference semantics covered here:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
@@ -394,70 +393,4 @@ def q146_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w_start", "w_end")
         .agg(F.count("o_orderkey").alias("n_orders"))
         .orderBy("w_start")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q176 — shard sequence-continuity audit (gaps, duplicates, inversions).
-# ---------------------------------------------------------------------------
-@query(
-    "q176_sequence_continuity",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, event_id, ts,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_ts
-  FROM events
-)
-SELECT user_id,
-       count(*) AS n_records,
-       count(DISTINCT event_id) AS n_distinct,
-       CAST(min(event_id) AS BIGINT) AS min_seq,
-       CAST(max(event_id) AS BIGINT) AS max_seq,
-       CAST(max(event_id) - min(event_id) + 1 - count(DISTINCT event_id) AS BIGINT)
-         AS n_gaps,
-       count(*) - count(DISTINCT event_id) AS n_dups,
-       count(*) FILTER (WHERE prev_ts IS NOT NULL AND ts < prev_ts)
-         AS n_time_inversions
-FROM seq
-GROUP BY user_id
-ORDER BY user_id
-""",
-)
-def q176_sequence_continuity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stream-integrity audit a Kinesis consumer runs per partition
-    key: treating event_id as the shard sequence number (FIXTURES.md —
-    "event_id ≈ sequence number"), report per key the record count,
-    distinct sequence count, sequence range, GAPS (range minus distinct —
-    missed records), DUPLICATES (at-least-once redelivery), and
-    event-time INVERSIONS relative to sequence order (out-of-order
-    arrival the reference's per-shard ordering guarantee should
-    prevent). All integer arithmetic; one window + one aggregation on the
-    same user_id exchange. At 100 TB this audit is the cheap invariant
-    check run after every backfill or failover replay (A14)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("event_id")
-    seq = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.lag("ts").over(w).alias("prev_ts"),
-    )
-    return (
-        seq.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_records"),
-            F.countDistinct("event_id").alias("n_distinct"),
-            F.min("event_id").alias("min_seq"),
-            F.max("event_id").alias("max_seq"),
-            (
-                F.max("event_id") - F.min("event_id") + 1 - F.countDistinct("event_id")
-            ).alias("n_gaps"),
-            (F.count("*") - F.countDistinct("event_id")).alias("n_dups"),
-            F.count(
-                F.when(
-                    F.col("prev_ts").isNotNull() & (F.col("ts") < F.col("prev_ts")), 1
-                )
-            ).alias("n_time_inversions"),
-        )
-        .orderBy("user_id")
     )

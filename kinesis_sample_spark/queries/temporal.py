@@ -262,8 +262,8 @@ def q250_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime-value curves: customers grouped by first-order
     month, cumulative revenue per cohort member at month offsets
     0..12 — the curve whose flattening tells you when a cohort stops
-    paying back. Complements q109 (retention = activity counts) with the
-    revenue integral.
+    paying back. Complements activity-count
+    retention with the revenue integral.
 
     Month index = year*12+month-1 (exact INT); revenue quantized
     round(.,2) -> DECIMAL so cumulative sums are exact; LTV is one

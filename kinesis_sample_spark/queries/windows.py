@@ -94,64 +94,6 @@ def q15_running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q114 — ratio-to-report: nation revenue share within its region.
-# ---------------------------------------------------------------------------
-@query(
-    "q114_revenue_share_window",
-    oracle="""
-WITH nat AS (
-    SELECT r_name, n_name,
-           SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev_dec
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    JOIN region   ON n_regionkey = r_regionkey
-    GROUP BY r_name, n_name
-)
-SELECT r_name, n_name,
-       CAST(CAST(rev_dec AS VARCHAR) AS DOUBLE) AS nation_rev,
-       CAST(CAST(SUM(rev_dec) OVER (PARTITION BY r_name) AS VARCHAR) AS DOUBLE) AS region_rev,
-       CAST(CAST(rev_dec AS VARCHAR) AS DOUBLE)
-           / CAST(CAST(SUM(rev_dec) OVER (PARTITION BY r_name) AS VARCHAR) AS DOUBLE) AS share
-FROM nat
-ORDER BY r_name, n_name
-""",
-)
-def q114_revenue_share_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ratio-to-report: each nation's share of its region's order revenue —
-    the percent-of-total window shape every BI layer emits. The window
-    SUM runs over the *decimal* partials (exact, so DuckDB's segment-tree
-    vs Spark's buffer accumulation order cannot differ), and runs over
-    the aggregated 25-row nation relation, not the fact table. Dimension
-    joins broadcast (catalog.BROADCAST_DIMS)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    nat = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(F.sum(dec("o_totalprice")).alias("rev_dec"))
-    )
-    w = W.partitionBy("r_name")
-    region_dec = F.sum("rev_dec").over(w)
-    return (
-        nat.select(
-            "r_name",
-            "n_name",
-            F.col("rev_dec").cast("double").alias("nation_rev"),
-            region_dec.cast("double").alias("region_rev"),
-            (F.col("rev_dec").cast("double") / region_dec.cast("double")).alias(
-                "share"
-            ),
-        )
-        .orderBy("r_name", "n_name")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q137 — curriculum bins: ntile deciles over a lexical-diversity score.
 # ---------------------------------------------------------------------------
 @query(

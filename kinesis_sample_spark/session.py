@@ -169,39 +169,3 @@ def checkpoint_df(df, eager: bool = True):
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
-def set_runtime_bloom_filters(
-    spark: SparkSession,
-    enabled: bool = True,
-    *,
-    creation_side_threshold: str = "10MB",
-    application_side_threshold: str = "10GB",
-) -> None:
-    """Runtime (bloom-filter) row-level join pruning — the optimization
-    that matters for selective fact⋈fact joins at 100 TB: the optimizer
-    aggregates a bloom filter over the filtered build side's join keys and
-    injects ``might_contain(key)`` into the probe-side *scan*, so rows
-    that cannot join are dropped before the shuffle instead of after it.
-
-    Spark enables this by default above size thresholds; the fixtures sit
-    far below them, so tests lower the thresholds to prove the rewrite
-    fires (tests/test_plans.py::test_runtime_bloom_filter_injects). On a
-    cluster the defaults are usually right — call with custom thresholds
-    only when a selective dimension filter feeds a huge probe side that
-    AQE cannot broadcast."""
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", str(enabled).lower())
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_threshold,
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_threshold,
-    )

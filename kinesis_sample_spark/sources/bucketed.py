@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -40,12 +40,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(key)
     writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key. With matching
-    bucket counts the physical plan contains no Exchange — verified by
-    tests/test_bucketing.py."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)

@@ -80,24 +80,6 @@ def consume_with_dlq(
     )
 
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state(spark, enabled: bool = True) -> None:
-    """Switch stateful queries to the RocksDB state store (SURVEY.md §7:
-    the scale choice). The default in-memory HDFS-backed provider keeps all
-    state on the executor heap — fine for tests, fatal for a week-long
-    streaming job with millions of keys; RocksDB spills to local disk with
-    incremental checkpointing. Takes effect for queries started after the
-    call."""
-    if enabled:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    else:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def stop_query(query: StreamingQuery, timeout_s: float = 20.0, drain: bool = False) -> bool:
     """A16 graceful shutdown: the reference blocks on stdin then waits 20 s
     for the scheduler's graceful-shutdown future (Cons:86-105).

@@ -1,5 +1,6 @@
-"""Bucketed co-located join: the join over same-bucketed tables must plan
-without a shuffle exchange (the 100 TB fact⋈fact strategy)."""
+"""Bucketed co-located join: a join over two tables that ``write_bucketed``
+laid out on the same key must plan without a shuffle exchange (the 100 TB
+fact⋈fact strategy)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import pytest
 
 from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.plans.inspect import exchange_count, formatted_plan
-from kinesis_sample_spark.sources.bucketed import bucketed_join, write_bucketed
+from kinesis_sample_spark.sources.bucketed import write_bucketed
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,7 +32,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, lt, rt, "orderkey")
+        joined = spark.table(lt).join(spark.table(rt), "orderkey")
         plan = formatted_plan(joined)
         assert exchange_count(joined) == 0, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
@@ -50,4 +51,4 @@ def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
             "orderkey",
         )
     )
-    assert bucketed_join(spark, lt, rt, "orderkey").count() == plain.count()
+    assert spark.table(lt).join(spark.table(rt), "orderkey").count() == plain.count()

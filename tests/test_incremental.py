@@ -14,7 +14,6 @@ from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.operators.incremental import (
     dedup_batch_against_store,
     init_signature_store,
-    store_size,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -25,7 +24,7 @@ def test_incremental_dedup_flow(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     corpus = docs.filter(F.col("doc_id") < 400)
     init_signature_store(corpus, store)
-    n0 = store_size(spark, store)
+    n0 = spark.read.parquet(store).count()
     assert n0 == corpus.count()
 
     # batch = genuinely new docs + 5 re-ingested copies under fresh ids
@@ -50,10 +49,10 @@ def test_incremental_dedup_flow(spark, tmp_path):
     assert acc_ids.isdisjoint(dup_rows.keys())
     assert len(acc_ids) + len(dup_rows) == n_batch
     # store grew by exactly the accepted set
-    assert store_size(spark, store) == n0 + len(acc_ids)
+    assert spark.read.parquet(store).count() == n0 + len(acc_ids)
 
     # idempotence: replaying the identical batch flags everything, adds nothing
     dups2, accepted2 = dedup_batch_against_store(spark, batch, store)
     assert accepted2.count() == 0
     assert dups2.count() == n_batch
-    assert store_size(spark, store) == n0 + len(acc_ids)
+    assert spark.read.parquet(store).count() == n0 + len(acc_ids)

@@ -204,37 +204,6 @@ def test_q111_packing_is_one_window_pass(spark):
     assert exchange_count(df) <= 2, exchange_count(df)
 
 
-def test_runtime_bloom_filter_injects(spark):
-    """Selective fact⋈fact join: with thresholds lowered to fixture scale,
-    Spark must inject a bloom-filter might_contain() predicate into the
-    probe-side scan (the shuffle-volume killer for 100 TB joins); with
-    the feature disabled, it must not (negative control)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_sample_spark.plans.inspect import formatted_plan
-    from kinesis_sample_spark.session import set_runtime_bloom_filters
-
-    li = load_table(spark, SF, "lineitem")
-    orders = load_table(spark, SF, "orders").filter(F.col("o_totalprice") > 400000)
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        set_runtime_bloom_filters(
-            spark, True,
-            creation_side_threshold="10GB",
-            application_side_threshold="0",
-        )
-        plan = formatted_plan(li.join(orders, li.l_orderkey == orders.o_orderkey))
-        assert "might_contain" in plan
-
-        set_runtime_bloom_filters(spark, False)
-        plan = formatted_plan(li.join(orders, li.l_orderkey == orders.o_orderkey))
-        assert "might_contain" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
-        set_runtime_bloom_filters(spark, True)  # restore defaults
-
-
 def test_q32_band_join_is_hash_equijoin(spark):
     """The SimHash candidate self-join must be an equi-join on
     (band_idx, band_val) — never a nested-loop/cartesian over signatures.

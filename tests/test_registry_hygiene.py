@@ -8,9 +8,15 @@ registry itself must keep that gate meaningful:
    module constants still match them, and
 2. every module named in ``_MODULES`` imports, so a renamed or broken
    module fails loudly instead of silently dropping its queries.
+
+It also keeps the engine core free of orphans: a public function or
+class there must have a caller outside the tests.
 """
 
 from __future__ import annotations
+
+import ast
+import os
 
 import pytest
 
@@ -185,4 +191,120 @@ def test_docstring_literals_match_module_constants():
     assert not stale, (
         "docstring literal drifted from its module constant "
         f"(update the docstring to match): {stale}"
+    )
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CORE_DIRS = ("streaming", "sources", "operators", "functions")
+
+#: the only engine-core names kept without a caller, each with its reason
+ORPHAN_EXEMPT = {
+    "kinesis_sample_spark.sources.kinesis":
+        "the paper's stream admin (A3-A6); kinesis_source swaps in real Kinesis",
+    "kinesis_sample_spark.streaming.pipeline.consume_with_dlq":
+        "the consumer loop (A10-A13) that tests/test_replay_crash.py SIGKILL-gates",
+}
+
+
+def _module_name(path: str) -> str:
+    return os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fh:
+        return ast.parse(fh.read(), path)
+
+
+def _core_modules() -> dict[str, str]:
+    pkg = os.path.join(REPO, "kinesis_sample_spark")
+    paths = [os.path.join(pkg, "session.py")] + [
+        os.path.join(pkg, d, f)
+        for d in CORE_DIRS
+        for f in sorted(os.listdir(os.path.join(pkg, d)))
+        if f.endswith(".py") and f != "__init__.py"
+    ]
+    return {_module_name(p): p for p in paths}
+
+
+def _non_test_files() -> list[str]:
+    out = []
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__")) and d != "tests"]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".py") and not f.startswith(("test_", "conftest", "__init__"))
+        ]
+    return out
+
+
+def _dotted(node: ast.AST, modules: dict[str, str]) -> str | None:
+    if isinstance(node, ast.Name):
+        return modules.get(node.id)
+    if isinstance(node, ast.Attribute):
+        owner = _dotted(node.value, modules)
+        return owner and f"{owner}.{node.attr}"
+    return None
+
+
+def _imported_names(tree: ast.Module) -> set[tuple[str, str]]:
+    """Every (module, name) a file imports, or reads as ``module.name``."""
+    used, modules = set(), {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module:
+            for a in node.names:
+                used.add((node.module, a.name))
+                modules[a.asname or a.name] = f"{node.module}.{a.name}"
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                top = a.name.split(".")[0]
+                modules[a.asname or top] = a.name if a.asname else top
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute):
+            owner = _dotted(node.value, modules)
+            if owner:
+                used.add((owner, node.attr))
+    return used
+
+
+def _named_outside_definition(tree: ast.Module, node: ast.AST) -> bool:
+    inside = {id(n) for n in ast.walk(node)}
+    return any(
+        isinstance(n, ast.Name) and n.id == node.name and id(n) not in inside
+        for n in ast.walk(tree)
+    )
+
+
+def test_engine_core_has_no_orphan_functions():
+    """An engine-core function or class stays only if some engine path,
+    registry query, tool, example, benchmark or the driver entry calls it.
+    Each public top-level ``def``/``class`` in ``streaming/``,
+    ``sources/``, ``operators/``, ``functions/`` and ``session.py`` must
+    be named by its own module outside its definition, or be imported
+    (or read as ``module.name``) by a file that is neither a test nor an
+    ``__init__``. Imports are matched, not text: pyarrow's
+    ``pq.read_table`` does not keep an engine ``read_table`` alive."""
+    used = set()
+    for path in _non_test_files():
+        used |= _imported_names(_parse(path))
+    orphans = []
+    for module, path in _core_modules().items():
+        if module in ORPHAN_EXEMPT:
+            continue
+        tree = _parse(path)
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            name = node.name
+            if (
+                name.startswith("_")
+                or f"{module}.{name}" in ORPHAN_EXEMPT
+                or (module, name) in used
+                or _named_outside_definition(tree, node)
+            ):
+                continue
+            orphans.append(f"{module}.{name}")
+    assert not orphans, (
+        "engine-core functions that only tests call (delete them, or give "
+        f"them an engine path): {orphans}"
     )

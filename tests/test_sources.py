@@ -1,7 +1,6 @@
 """Source formats (Table B "Scans/sources"): JSON and CSV roundtrips with
 explicit schemas (never inferSchema in production — it is an extra full
-read), the replay writer behind every streaming fixture, plus the RocksDB
-state store provider for stateful streaming.
+read), and the replay writer behind every streaming fixture.
 """
 
 from __future__ import annotations
@@ -12,20 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
-from kinesis_sample_spark.sources.files import (
-    EVENTS_SCHEMA,
-    replay_events_stream,
-    replay_frame,
-    write_stream_fixture,
-)
-from kinesis_sample_spark.streaming.envelope import envelope_from_events
+from kinesis_sample_spark.sources.files import EVENTS_SCHEMA, replay_frame
 from kinesis_sample_spark.streaming.observe import batch_progress
-from kinesis_sample_spark.streaming.pipeline import (
-    drain_available_now,
-    drain_to_memory,
-    use_rocksdb_state,
-)
-from kinesis_sample_spark.streaming.stateful import stateful_key_counts
+from kinesis_sample_spark.streaming.pipeline import drain_available_now
 
 SF = "/root/testdata/sf0.001"
 
@@ -122,36 +110,6 @@ def test_malformed_json_goes_to_corrupt_column(spark, tmp_path):
         assert df.filter(F.col("event_id") == 1).count() == 1
     finally:
         df.unpersist()
-
-
-def test_stateful_query_on_rocksdb_state_store(spark, tmp_path):
-    """The RocksDB provider must run the same stateful pipeline unchanged
-    (state off-heap, incremental checkpoints — the 100 TB configuration)."""
-    use_rocksdb_state(spark, True)
-    try:
-        events_dir = write_stream_fixture(spark, SF, str(tmp_path), n_files=3)
-        env = envelope_from_events(
-            replay_events_stream(spark, events_dir, files_per_trigger=1)
-        )
-        drain_to_memory(stateful_key_counts(env), "update", "t_rocks")
-        total_keys = spark.sql(
-            "SELECT count(DISTINCT partitionKey) AS n FROM t_rocks"
-        ).collect()[0].n
-        expected = _events(spark).select("user_id").distinct().count()
-        assert total_keys == expected
-    finally:
-        use_rocksdb_state(spark, False)
-
-
-def test_table_format_stub_reports_fallback(spark):
-    from kinesis_sample_spark.sources.table_formats import format_available, read_table
-    import pytest as _pytest
-
-    assert format_available(spark, "delta") is False  # no jars in this image
-    with _pytest.raises(RuntimeError, match="fallback"):
-        read_table(spark, "delta", "/tmp/nope")
-    with _pytest.raises(KeyError):
-        format_available(spark, "paimon")
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):
