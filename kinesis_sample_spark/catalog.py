@@ -31,12 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-#: dimension tables that are always tiny relative to the facts — safe to
-#: broadcast at any scale factor (region/nation are fixed-cardinality in
-#: TPC-H; supplier grows but stays orders of magnitude below lineitem).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

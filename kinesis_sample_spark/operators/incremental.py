@@ -1,4 +1,14 @@
-"""Incremental near-dup ingestion against a persisted signature store.
+"""MinHash-LSH near-dup detection, and incremental ingestion against a
+persisted signature store.
+
+The scheme has one implementation, here: ``minhash_columns`` (8
+seeded-md5 minhashes per set), ``lsh_bands`` (bands of ``band_size``
+minhashes joined by ``_``), ``lsh_candidates`` (the band self-join,
+optionally inside a block) and ``verified_pairs`` (exact set overlap on
+the candidates only, via ``array_intersect``). Every MinHash query
+builds on these functions: q31 (and q69, q249, q259 and q288, which
+reuse its signatures or pairs), q33, q56 and q182. The DuckDB oracles
+spell the same scheme out in SQL.
 
 At 100 TB you never re-shingle the historical corpus per ingest batch:
 the MinHash signature relation (doc_id, shingle set, 8 minhashes) is
@@ -19,7 +29,11 @@ Runs unchanged inside ``foreachBatch`` for streaming ingest.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+import operator
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.functions.hashing import seeded_md5_long
@@ -28,42 +42,91 @@ from kinesis_sample_spark.functions.shingles import shingle_array
 N_HASHES = 8
 
 
-def _mh(seed: int):
-    # closure factory: transform() passes the array index to 2-arg lambdas
-    return lambda x: seeded_md5_long(x, seed)
+def minhash_columns(grams: str | Column, n_hashes: int = N_HASHES) -> list[Column]:
+    """``m0..m{n_hashes-1}``: the MinHash signature of an array column,
+    the minimum of one seeded md5 hash per seed over its elements. Pure
+    array higher-order functions: no explode, no shuffle, O(grams) per
+    row. ``transform`` builds each lambda's expression when it is called,
+    so each lambda sees the seed of its own iteration. The lambda takes
+    one argument: ``transform`` passes the array index to a second."""
+    return [
+        F.array_min(F.transform(grams, lambda x: seeded_md5_long(x, s))).alias(f"m{s}")
+        for s in range(n_hashes)
+    ]
 
 
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, distinct 3-shingle set, m0..m7) — identical signature scheme to
-    q31 so store and query sides agree. Pure array higher-order
-    functions: no explode, no shuffle, O(tokens) per row."""
+    """(doc_id, distinct 3-shingle set ``shs``, m0..m7) — the store's
+    signature relation."""
     shl = shingle_array(F.split(F.col(text_col), " "), 3)
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(shl).alias("shs"),
-        *[F.array_min(F.transform(shl, _mh(s))).alias(f"m{s}") for s in range(N_HASHES)],
+        *minhash_columns(shl),
     )
 
 
-def _bands(sig: DataFrame) -> DataFrame:
-    """Two 4-hash LSH bands per signature (same banding as q31)."""
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band_idx"),
-                    F.concat_ws("_", "m0", "m1", "m2", "m3").alias("band_val"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band_idx"),
-                    F.concat_ws("_", "m4", "m5", "m6", "m7").alias("band_val"),
-                ),
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_idx", "b.band_val")
+def lsh_bands(
+    sig: DataFrame, keys: Sequence[str], n_hashes: int = N_HASHES, band_size: int = 4
+) -> DataFrame:
+    """One row per LSH band of each signature: ``keys``, ``band_idx`` and
+    ``band_val``, the band's ``band_size`` minhashes joined by ``_``."""
+    bands = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.concat_ws("_", *[f"m{b * band_size + i}" for i in range(band_size)]).alias(
+                "band_val"
+            ),
+        )
+        for b in range(n_hashes // band_size)
+    ]
+    return sig.select(*keys, F.explode(F.array(*bands)).alias("b")).select(
+        *keys, "b.band_idx", "b.band_val"
+    )
+
+
+def lsh_candidates(
+    sig: DataFrame,
+    block: Sequence[str] = (),
+    n_hashes: int = N_HASHES,
+    band_size: int = 4,
+) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) whose signatures collide
+    on one band, and whose ``block`` columns are equal: an equi-join on
+    the block, ``band_idx`` and ``band_val``, never all pairs."""
+    bands = lsh_bands(sig, ("doc_id", *block), n_hashes, band_size)
+    same = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (*block, "band_idx", "band_val")]
+    return (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            functools.reduce(operator.and_, same) & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def verified_pairs(cand: DataFrame, sets: DataFrame, set_col: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b): each candidate pair's exact set
+    intersection and set sizes, from ``sets``' (doc_id, ``set_col``)
+    arrays of distinct elements. JVM-side array ops on the candidates
+    only: no element explode, no shuffle of the sets beyond the joins."""
+    sh_a = sets.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("sh_a"))
+    sh_b = sets.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("sh_b"))
+    return (
+        cand.join(sh_a, "doc_a")
+        .join(sh_b, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
+            F.size("sh_a").alias("n_a"),
+            F.size("sh_b").alias("n_b"),
+        )
+    )
 
 
 def init_signature_store(docs: DataFrame, store_path: str) -> None:
@@ -94,10 +157,10 @@ def dedup_batch_against_store(
     store = spark.read.parquet(store_path)
 
     cand = (
-        _bands(sig_new)
+        lsh_bands(sig_new, ("doc_id",))
         .alias("n")
         .join(
-            _bands(store).alias("o"),
+            lsh_bands(store, ("doc_id",)).alias("o"),
             (F.col("n.band_idx") == F.col("o.band_idx"))
             & (F.col("n.band_val") == F.col("o.band_val")),
         )

@@ -71,7 +71,6 @@ _MODULES = (
     "kinesis_sample_spark.queries.formats",
     "kinesis_sample_spark.queries.versioning",
     "kinesis_sample_spark.queries.retrieval",
-    "kinesis_sample_spark.queries.frames",
     "kinesis_sample_spark.queries.cogroup",
     "kinesis_sample_spark.queries.sketches",
     "kinesis_sample_spark.queries.pysource",

@@ -10,6 +10,11 @@ hash family in functions.hashing):
 - SimHash (bitwise majority over token hashes, hamming-band blocking)
 - character-n-gram jaccard with length/lang blocking
 
+The MinHash-LSH scheme (signatures, bands, candidate self-join, exact
+verification) is ``operators/incremental.py``'s; the queries here choose
+the sets, the blocks and the thresholds, and their oracles spell the
+scheme out in SQL.
+
 Scale design: signatures are computed with *array higher-order functions*
 (``transform``/``array_min``) — per-row, JVM-side, no explode, no shuffle.
 Only candidate verification explodes shingles, and only for the tiny
@@ -24,18 +29,16 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
-from kinesis_sample_spark.functions.hashing import (
-    md5_long,
-    md5_long_sql,
-    seeded_md5_long,
-    seeded_md5_long_sql,
-)
+from kinesis_sample_spark.functions.hashing import md5_long, md5_long_sql, seeded_md5_long_sql
 from kinesis_sample_spark.functions.shingles import shingle_array
+from kinesis_sample_spark.operators.incremental import (
+    N_HASHES,
+    lsh_candidates,
+    minhash_columns,
+    verified_pairs,
+)
 from kinesis_sample_spark.queries import query
 from kinesis_sample_spark.scratch import scratch_dir
-
-N_HASHES = 8  # minhash signature length
-BAND_SIZE = 4  # 2 bands of 4 → candidates at jaccard ≳ 0.5
 
 
 def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,65 +172,19 @@ def q31_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash(seed: int):
-    # NB: must be a 1-arg lambda — a second (defaulted) parameter would
-    # make Spark's transform() pass the array index into it.
-    return lambda x: seeded_md5_long(x, seed)
-
-
-def gram_minhash_bands(g: DataFrame, n_hashes: int = 8, band_size: int = 2) -> DataFrame:
-    """MinHash-LSH band relation (doc_id, lang, len_bucket, band_idx,
-    band_val) over any relation with a ``grams`` array column — the
-    blocking helper that de-quadratics the char-gram (q33) and
-    edit-distance (q56) dedup families: candidates must collide on a
-    minhash band *inside* their (lang, len-bucket) block, so the block
+def banded_block_candidates(g: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) of a relation with a
+    ``grams`` array column whose (lang, len_bucket) block AND one 2-of-8
+    minhash band both collide — the blocking that de-quadratics the
+    char-gram (q33) and edit-distance (q56) dedup families: the block
     self-join becomes an equi-join on hash buckets whose occupancy shrinks
     as the corpus grows, instead of all-pairs within the block."""
-    n_bands = n_hashes // band_size
-    mh = g.select(
-        "doc_id",
-        "lang",
-        "len_bucket",
-        *[
-            F.array_min(F.transform("grams", _minhash(s))).alias(f"m{s}")
-            for s in range(n_hashes)
-        ],
-    )
-    structs = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.concat_ws(
-                "_", *[f"m{b * band_size + i}" for i in range(band_size)]
-            ).alias("band_val"),
-        )
-        for b in range(n_bands)
-    ]
-    return mh.select(
-        "doc_id", "lang", "len_bucket", F.explode(F.array(*structs)).alias("b")
-    ).select("doc_id", "lang", "len_bucket", "b.band_idx", "b.band_val")
-
-
-def banded_block_candidates(g: DataFrame, n_hashes: int = 8, band_size: int = 2) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) whose (lang, len_bucket)
-    block AND one minhash band both collide."""
-    bands = gram_minhash_bands(g, n_hashes, band_size)
-    return (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.len_bucket") == F.col("b.len_bucket"))
-            & (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig = g.select("doc_id", "lang", "len_bucket", *minhash_columns("grams"))
+    return lsh_candidates(sig, ("lang", "len_bucket"), band_size=2)
 
 
 def sql_gram_bands(n_hashes: int = 8, band_size: int = 2) -> str:
-    """Oracle-side mirror of :func:`gram_minhash_bands`: CTE bodies
+    """Oracle-side mirror of :func:`banded_block_candidates`: CTE bodies
     ``gmh``/``gbands`` over an existing CTE ``g(doc_id, lang, len_bucket,
     grams)``."""
     n_bands = n_hashes // band_size
@@ -260,74 +217,26 @@ gcand AS (
 )"""
 
 
+def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The signature relation, persisted: (doc_id, distinct shingle set
+    ``shs``, m0..m7) of every document of 3+ tokens. Banding, both
+    candidate sides and q249's estimator all reuse it instead of
+    re-running tokenize→shingle→hash — on a real corpus this is the
+    "materialize the signature table" step of the pipeline."""
+    return (
+        _docs_with_shingles(spark, sf_dir)
+        .select("doc_id", F.array_distinct("shl").alias("shs"), *minhash_columns("shl"))
+        .persist()
+    )
+
+
 def _verified_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs with verified shingle-set intersection counts
     (doc_a, doc_b, n_inter, n_a, n_b) — unfiltered, so different
-    similarity measures (jaccard q31, MinHash calibration q249) share
-    one pipeline."""
-    docs3 = _docs_with_shingles(spark, sf_dir)
-
-    # One signature relation, persisted: (doc_id, distinct shingle set,
-    # 8 minhashes). Every later branch (banding, both candidate sides)
-    # reuses it instead of re-running tokenize→shingle→hash — on a real
-    # corpus this is the "materialize the signature table" step of the
-    # pipeline.
-    sig = docs3.select(
-        "doc_id",
-        F.array_distinct("shl").alias("shs"),
-        *[
-            F.array_min(F.transform("shl", _minhash(s))).alias(f"m{s}")
-            for s in range(N_HASHES)
-        ],
-    ).persist()
-
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band_idx"),
-                    F.concat_ws("_", "m0", "m1", "m2", "m3").alias("band_val"),
-                ),
-                F.struct(
-                    F.lit(1).alias("band_idx"),
-                    F.concat_ws("_", "m4", "m5", "m6", "m7").alias("band_val"),
-                ),
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_idx", "b.band_val")
-
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-    # exact verification on the (small) candidate set: per-pair set
-    # intersection via array ops — JVM-side, no shingle explosion/shuffle.
-    sets = sig.select("doc_id", "shs")
-    pairs = (
-        cand.join(
-            sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("sh_a")), "doc_a"
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("sh_b")), "doc_b"
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-        )
-    )
-    return pairs
+    similarity measures (jaccard q31, candidate agreement q259, cluster
+    census q288) share one pipeline."""
+    sig = _signatures(spark, sf_dir)
+    return verified_pairs(lsh_candidates(sig), sig, "shs")
 
 
 # ---------------------------------------------------------------------------
@@ -511,19 +420,7 @@ def q33_chargram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(sequence(1, length(text) - 3), i -> substring(text, i, 4))")
         ).alias("grams"),
     ).persist()
-    sets = g.select("doc_id", "grams")
-    pairs = (
-        banded_block_candidates(g)
-        .join(sets.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga")), "doc_a")
-        .join(sets.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("gb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("ga", "gb")).alias("n_inter"),
-            F.size("ga").alias("n_a"),
-            F.size("gb").alias("n_b"),
-        )
-    )
+    pairs = verified_pairs(banded_block_candidates(g), g, "grams")
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     # persist the (tiny) verified pair set before the global sort: the
     # range-partitioner's sampling pass otherwise re-executes the whole
@@ -964,12 +861,6 @@ def q152_prefix_filter_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q182 — incremental ingest dedup against a persisted signature store.
 # ---------------------------------------------------------------------------
-_INC_SQL_MINHASH = ",\n        ".join(
-    f"list_min(list_transform(shl, x -> {seeded_md5_long_sql('x', s)})) AS m{s}"
-    for s in range(N_HASHES)
-)
-
-
 @query(
     "q182_incremental_store_dedup",
     oracle=f"""
@@ -977,7 +868,7 @@ WITH d3 AS (
     SELECT doc_id, {_SQL_SHL} AS shl FROM documents
 ),
 mh AS (
-    SELECT doc_id, {_INC_SQL_MINHASH}
+    SELECT doc_id, {_sql_minhash_cols()}
     FROM d3
 ),
 bands AS (

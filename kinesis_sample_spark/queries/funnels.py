@@ -380,53 +380,6 @@ def q200_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q203 — exact rolling 7-day distinct users per day.
-# ---------------------------------------------------------------------------
-@query(
-    "q203_rolling_distinct_users",
-    oracle="""
-WITH d AS (
-    SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
-),
-x AS (
-    SELECT unnest(generate_series(day, day + INTERVAL 6 DAY, INTERVAL 1 DAY)) AS wday,
-           user_id
-    FROM d
-)
-SELECT wday AS window_end_day,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users_7d
-FROM x GROUP BY wday ORDER BY wday
-""",
-)
-def q203_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact trailing-7-day distinct active users per day — the DAU/WAU
-    family metric. COUNT(DISTINCT) does not compose across window frames
-    (you cannot sum per-day distincts), so the standard exact formulation
-    is the explode: each (user, day) presence row contributes to the 7
-    window-end days it is visible from, then one distinct count per day.
-    All date arithmetic is exact integer intervals.
-
-    Scale: the explode is a fixed 7x fan-out of the (user, day) DISTINCT
-    relation (user-dimension-sized, not event-sized), followed by one
-    day-keyed distinct aggregation. For 90-day windows at 100 TB swap
-    the explode for per-day HLL sketch unions (q177's mergeable path) —
-    this exact form is the calibration oracle for that."""
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select(F.date_trunc("day", "ts").alias("day"), "user_id").distinct()
-    return (
-        days.select(
-            F.explode(
-                F.expr("sequence(day, day + interval 6 day, interval 1 day)")
-            ).alias("window_end_day"),
-            "user_id",
-        )
-        .groupBy("window_end_day")
-        .agg(F.countDistinct("user_id").alias("users_7d"))
-        .orderBy("window_end_day")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q208 — sessionized bounce / dwell metrics per user.
 # ---------------------------------------------------------------------------
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap

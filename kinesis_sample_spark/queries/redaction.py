@@ -105,57 +105,3 @@ def q124_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type", "redacted")
     )
-
-
-# ---------------------------------------------------------------------------
-# q201 — k-anonymity audit over quasi-identifiers.
-# ---------------------------------------------------------------------------
-_K_ANON = 5
-
-
-@query(
-    "q201_k_anonymity_audit",
-    oracle=f"""
-WITH g AS (
-    SELECT event_type, hour(ts) AS hour_of_day, COUNT(*) AS group_size
-    FROM events GROUP BY event_type, hour(ts)
-)
-SELECT event_type,
-       COUNT(*) AS n_groups,
-       CAST(SUM(CAST(group_size < {_K_ANON} AS BIGINT)) AS BIGINT) AS n_small_groups,
-       CAST(SUM(CASE WHEN group_size < {_K_ANON} THEN group_size ELSE 0 END) AS BIGINT)
-           AS n_rows_at_risk,
-       MIN(group_size) AS min_group_size
-FROM g GROUP BY event_type ORDER BY event_type
-""",
-)
-def q201_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit — the privacy gate a dataset release runs after
-    q124's PII redaction: group rows by their quasi-identifier tuple
-    (here event_type × hour-of-day, the re-identification surface of a
-    "scrubbed" event log) and flag groups smaller than k,
-    whose members a linkage attack can single out (k = 5). Emits per-event-type
-    group counts, small-group counts, rows at risk, and the minimum
-    group size (the dataset's actual k). Pure integer counting.
-
-    Scale: one groupBy on the quasi-identifier tuple (domain-bounded),
-    one rollup over it; the generalization loop production systems run
-    (coarsen QI columns until min k >= target) re-executes exactly this
-    audit per candidate generalization."""
-    ev = load_table(spark, sf_dir, "events")
-    g = ev.groupBy("event_type", F.hour("ts").alias("hour_of_day")).agg(
-        F.count("*").alias("group_size")
-    )
-    small = F.col("group_size") < _K_ANON
-    return (
-        g.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_groups"),
-            F.sum(small.cast("bigint")).alias("n_small_groups"),
-            F.sum(F.when(small, F.col("group_size")).otherwise(0)).alias(
-                "n_rows_at_risk"
-            ),
-            F.min("group_size").alias("min_group_size"),
-        )
-        .orderBy("event_type")
-    )

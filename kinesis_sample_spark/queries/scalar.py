@@ -23,48 +23,6 @@ from kinesis_sample_spark.queries import query
 
 
 # ---------------------------------------------------------------------------
-# q19 — JSON + string functions over the event payload.
-# ---------------------------------------------------------------------------
-@query(
-    "q19_payload_scalars",
-    oracle="""
-SELECT event_id,
-       CAST(props->>'k' AS INTEGER) AS k,
-       UPPER(event_type) AS type_upper,
-       SUBSTRING(event_type, 1, 3) AS type_prefix,
-       LENGTH(props) AS props_len,
-       CONCAT(event_type, '#', CAST(user_id AS VARCHAR)) AS type_user,
-       REGEXP_EXTRACT(props, '([0-9]+)', 1) AS k_str,
-       CASE WHEN event_type IN ('purchase','signup') THEN 'conversion' ELSE 'traffic' END AS funnel
-FROM events
-ORDER BY event_id
-""",
-)
-def q19_payload_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's A12 decode-projection generalized: JSON payload lift
-    (``from_json`` ≈ the jackson dependency the reference never used),
-    string ops, conditional classification. All codegen'd."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_id",
-            F.from_json("props", "k INT").getField("k").alias("k"),
-            F.upper("event_type").alias("type_upper"),
-            F.substring("event_type", 1, 3).alias("type_prefix"),
-            F.length("props").alias("props_len"),
-            F.concat(F.col("event_type"), F.lit("#"), F.col("user_id").cast("string")).alias(
-                "type_user"
-            ),
-            F.regexp_extract("props", r"([0-9]+)", 1).alias("k_str"),
-            F.when(F.col("event_type").isin("purchase", "signup"), "conversion")
-            .otherwise("traffic")
-            .alias("funnel"),
-        )
-        .orderBy("event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q166 — try_* error-tolerant functions (A11/A12's skip-malformed semantics).
 # ---------------------------------------------------------------------------
 @query(

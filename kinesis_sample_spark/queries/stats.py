@@ -775,84 +775,6 @@ def q145_covariance_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q191 — revenue decile lift / concentration audit (Lorenz-curve table).
-# ---------------------------------------------------------------------------
-@query(
-    "q191_revenue_decile_lift",
-    oracle=f"""
-WITH rev AS (
-    SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(18,2)) AS rev
-    FROM orders GROUP BY o_custkey
-),
-ranked AS (
-    SELECT o_custkey, rev, ntile(10) OVER (ORDER BY rev DESC, o_custkey) AS decile FROM rev
-),
-per_decile AS (
-    SELECT decile, COUNT(*) AS n_cust,
-           CAST(SUM(rev) AS DECIMAL(18,2)) AS decile_rev
-    FROM ranked GROUP BY decile
-),
-cum AS (
-    SELECT decile, n_cust, decile_rev,
-           CAST(SUM(decile_rev) OVER (ORDER BY decile
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(18,2)) AS cum_rev,
-           CAST(SUM(decile_rev) OVER () AS DECIMAL(18,2)) AS total_rev
-    FROM per_decile
-)
-SELECT decile, n_cust,
-       {sql_double('decile_rev')} AS decile_rev,
-       {sql_double('decile_rev')} / {sql_double('total_rev')} AS rev_share,
-       {sql_double('cum_rev')} / {sql_double('total_rev')} AS cum_rev_share
-FROM cum ORDER BY decile
-""",
-)
-def q191_revenue_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile lift table / Lorenz-curve audit: customers ranked by total
-    order revenue into ntile(10) buckets, with each decile's revenue
-    share and the cumulative share — the whale-concentration readout
-    behind sampling/stratification decisions ("top decile = 40% of
-    revenue"). All money stays DECIMAL through both aggregations and the
-    cumulative window, so shares are ratios of identical doubles in both
-    engines (``sql_double`` on the oracle side avoids DuckDB's
-    double-rounded decimal cast).
-
-    Scale: the orders-sized shuffle is the per-customer pre-aggregation;
-    the ntile window then runs over one row per customer. Exact global
-    deciles do need a total order over that aggregate — at 100 TB swap
-    ntile for approx_percentile boundaries on ``rev`` (10 cut points,
-    map-side bucketing, no global sort); kept exact here because it is
-    the oracle-checkable form and the window input is already the small
-    relation. The per-decile rollup is 10 rows."""
-    orders = load_table(spark, sf_dir, "orders")
-    rev = orders.groupBy("o_custkey").agg(
-        F.sum(dec("o_totalprice")).cast("decimal(18,2)").alias("rev")
-    )
-    ranked = rev.select(
-        "rev",
-        F.ntile(10).over(W.orderBy(F.col("rev").desc(), "o_custkey")).alias("decile"),
-    )
-    per_decile = ranked.groupBy("decile").agg(
-        F.count("*").alias("n_cust"),
-        F.sum("rev").cast("decimal(18,2)").alias("decile_rev"),
-    )
-    wcum = W.orderBy("decile").rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum = per_decile.select(
-        "decile",
-        "n_cust",
-        "decile_rev",
-        F.sum("decile_rev").over(wcum).cast("decimal(18,2)").alias("cum_rev"),
-        F.sum("decile_rev").over(W.orderBy("decile").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)).cast("decimal(18,2)").alias("total_rev"),
-    )
-    return cum.select(
-        "decile",
-        "n_cust",
-        F.col("decile_rev").cast("double").alias("decile_rev"),
-        (F.col("decile_rev").cast("double") / F.col("total_rev").cast("double")).alias("rev_share"),
-        (F.col("cum_rev").cast("double") / F.col("total_rev").cast("double")).alias("cum_rev_share"),
-    ).orderBy("decile")
-
-
-# ---------------------------------------------------------------------------
 # q212 — mergeable-histogram percentile bridge (estimate vs exact audit).
 # ---------------------------------------------------------------------------
 _BRIDGE_BINS = 20
@@ -1561,55 +1483,6 @@ def q227_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("c_mktsegment")
     )
-
-
-# ---------------------------------------------------------------------------
-# q228 — month-of-year seasonality index per order priority.
-# ---------------------------------------------------------------------------
-@query(
-    "q228_seasonality_index",
-    oracle=f"""
-WITH monthly AS (
-    SELECT o_orderpriority, CAST(month(o_orderdate) AS INTEGER) AS m,
-           SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS rev,
-           CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM orders GROUP BY o_orderpriority, month(o_orderdate)
-)
-SELECT o_orderpriority, m,
-       {sql_double('rev')} AS revenue,
-       n_orders,
-       12.0 * {sql_double('rev')}
-         / {sql_double('SUM(rev) OVER (PARTITION BY o_orderpriority)')}
-         AS seasonal_index
-FROM monthly
-ORDER BY o_orderpriority, m
-""",
-)
-def q228_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-of-year seasonality index per order priority: each month's
-    revenue relative to a flat-seasonality expectation (index = 12 *
-    month / total; 1.0 = no seasonality) — the demand-planning view that
-    feeds q216's change-point detection with a periodic baseline. Sums
-    are exact decimals; the index is fixed-order double ops on
-    VARCHAR-path values.
-
-    Scale: one shuffle to the (priority, month) grid — bounded at 60
-    cells — and a window over that grid; the fact is touched once."""
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        "o_orderpriority", F.month("o_orderdate").alias("m")
-    ).agg(
-        F.sum(dec("o_totalprice")).alias("rev"),
-        F.count("*").alias("n_orders"),
-    )
-    total = F.sum("rev").over(W.partitionBy("o_orderpriority")).cast("double")
-    return monthly.select(
-        "o_orderpriority",
-        "m",
-        F.col("rev").cast("double").alias("revenue"),
-        "n_orders",
-        (F.lit(12.0) * F.col("rev").cast("double") / total).alias("seasonal_index"),
-    ).orderBy("o_orderpriority", "m")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,6 @@ tests/test_streaming.py (SURVEY.md §5.2: run the streaming query on a
 bounded source and compare the final table against the batch SQL).
 
 Reference semantics covered here:
-- A1/A2 record construction + A12 decode-projection (envelope round trip)
 - event-time windows (tumbling/sliding/session) and streaming dedup — absent
   in the reference, required of the engine (Table B)
 - as-of join via the union+window composition in operators/asof.py
@@ -23,49 +22,6 @@ from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.functions.numeric import dec
 from kinesis_sample_spark.operators.asof import asof_join
 from kinesis_sample_spark.queries import query
-
-#: the reference producer's payload format:
-#: "testData-" + LocalDateTime.now() (Prod:128-129; README.md:14)
-PAYLOAD_FMT_SPARK = "yyyy-MM-dd'T'HH:mm:ss.SSS"
-PAYLOAD_FMT_DUCK = "%Y-%m-%dT%H:%M:%S.%g"
-
-
-# ---------------------------------------------------------------------------
-# q22 — Kinesis envelope round trip: build → binary → decode → lift ts.
-# ---------------------------------------------------------------------------
-@query(
-    "q22_envelope_roundtrip",
-    oracle=f"""
-SELECT event_id,
-       'partitionKey-' || CAST(user_id AS VARCHAR) AS partition_key,
-       decode(encode('testData-' || strftime(ts, '{PAYLOAD_FMT_DUCK}'))) AS payload,
-       strptime(substring(decode(encode('testData-' || strftime(ts, '{PAYLOAD_FMT_DUCK}'))), 10),
-                '{PAYLOAD_FMT_DUCK}') AS parsed_ts
-FROM events
-ORDER BY event_id
-""",
-)
-def q22_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's full data path in one expression chain: producer
-    record construction (payload = "testData-"+ISO ts, partitionKey-%d —
-    Prod:126-130), opaque-bytes envelope (encode), consumer UTF-8 decode
-    (Proc:102-103) and the typed lift of the embedded timestamp the
-    reference never did. Millisecond truncation matches both engines."""
-    ev = load_table(spark, sf_dir, "events")
-    payload = F.concat(F.lit("testData-"), F.date_format("ts", PAYLOAD_FMT_SPARK))
-    data = F.encode(payload, "UTF-8")  # the envelope's opaque bytes
-    decoded = F.decode(data, "UTF-8")
-    return (
-        ev.select(
-            "event_id",
-            F.concat(F.lit("partitionKey-"), F.col("user_id").cast("string")).alias(
-                "partition_key"
-            ),
-            decoded.alias("payload"),
-            F.to_timestamp(F.expr("substring(decode(encode(concat('testData-', date_format(ts, 'yyyy-MM-dd\\'T\\'HH:mm:ss.SSS')), 'UTF-8'), 'UTF-8'), 10)"), PAYLOAD_FMT_SPARK).alias("parsed_ts"),
-        )
-        .orderBy("event_id")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -27,11 +27,12 @@ from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.functions.numeric import sql_double
 from kinesis_sample_spark.functions.shingles import shingle_array
 from kinesis_sample_spark.functions.vectors import cosine, sql_cosine
+from kinesis_sample_spark.operators.incremental import N_HASHES, lsh_candidates, verified_pairs
 from kinesis_sample_spark.queries import query
 from kinesis_sample_spark.queries.dedup import (
     _SQL_CAND_BODY_TEMPLATE,
     _SQL_SHL,
-    N_HASHES,
+    _signatures,
     _verified_candidate_pairs,
 )
 
@@ -285,19 +286,10 @@ def q249_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: rides q31's signature pipeline (banded candidates only —
     never all pairs); the calibration aggregate is {h}+1 rows."""
-    pairs = _verified_candidate_pairs(spark, sf_dir)
-    docs3_sig = pairs  # (doc_a, doc_b, n_inter, n_a, n_b)
-    # signature equality counts need the minhash columns again: recompute
-    # the per-doc signatures (same deterministic pipeline) and join.
-    from kinesis_sample_spark.queries.dedup import _docs_with_shingles, _minhash
-
-    sig = _docs_with_shingles(spark, sf_dir).select(
-        "doc_id",
-        *[
-            F.array_min(F.transform("shl", _minhash(s))).alias(f"m{s}")
-            for s in range(N_HASHES)
-        ],
-    )
+    # one persisted signature relation feeds the candidates, their
+    # verification and the signature equality counts
+    sig = _signatures(spark, sf_dir)
+    pairs = verified_pairs(lsh_candidates(sig), sig, "shs")
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"m{s}").alias(f"a{s}") for s in range(N_HASHES)]
     )
@@ -310,7 +302,7 @@ def q249_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("int")
     jac_raw = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     scored = (
-        docs3_sig.join(sa, "doc_a")
+        pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
             est8.alias("est8"),

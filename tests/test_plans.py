@@ -219,12 +219,13 @@ def test_q32_band_join_is_hash_equijoin(spark):
 
 
 def test_banded_block_candidates_equijoin(spark):
-    """q33/q56 share banded_block_candidates: the block join must be an
-    equi-join keyed on (lang, len_bucket, band_idx, band_val), not an
-    all-pairs product within the block."""
+    """q31, q33 and q56 share ``operators.incremental.lsh_candidates``: its
+    band self-join must be an equi-join keyed on the block columns (q33
+    and q56: lang, len_bucket), band_idx and band_val, not an all-pairs
+    product."""
     from kinesis_sample_spark.plans.inspect import formatted_plan
 
-    for name in ("q33_chargram_jaccard", "q56_edit_distance_neardup"):
+    for name in ("q31_minhash_lsh", "q33_chargram_jaccard", "q56_edit_distance_neardup"):
         plan = formatted_plan(REGISTRY[name].fn(spark, SF))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name

@@ -14,7 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from tests.test_round12_ops import SF, _pd, _run
+from tests.test_round12_ops import _pd, _run
 
 
 # ---------------------------------------------------------------------------

@@ -13,6 +13,10 @@ A query's fingerprint is two sets:
   finds what only Python workers call, such as the kernels a query
   passes to ``mapInArrow`` or ``applyInArrow``.
 
+A ``_live_`` query's DataFrame is the batch read-back of its sink, so
+its operator set is that read-back's, not its streaming plan's; live
+queries that share a group need not duplicate each other.
+
 Each query runs once at sf0.01 through ``oracle_harness.run_query``.
 Queries with equal fingerprints form one group; groups are numbered in
 registration order, the order of ``load_registry()``.
@@ -158,6 +162,12 @@ def main() -> None:
         "while it builds its DataFrame or names, directly or through the",
         "package functions it names (kernels run by Python workers). Equal",
         "fingerprints share a group, numbered in registration order.",
+        "",
+        "A `_live_` query returns the batch read-back of its sink, so its",
+        "operators are those of that read-back (a `LocalTableScan` and its",
+        "sort), not of its streaming plan. Live queries with different",
+        "streaming plans (joins, aggregates, unions) therefore share a group;",
+        "for them a shared group is no evidence of duplication.",
         "",
         summary + ".",
         "",
