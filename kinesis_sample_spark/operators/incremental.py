@@ -3,12 +3,13 @@ persisted signature store.
 
 The scheme has one implementation, here: ``minhash_columns`` (8
 seeded-md5 minhashes per set), ``lsh_bands`` (bands of ``band_size``
-minhashes joined by ``_``), ``lsh_candidates`` (the band self-join,
-optionally inside a block) and ``verified_pairs`` (exact set overlap on
-the candidates only, via ``array_intersect``). Every MinHash query
-builds on these functions: q31 (and q69, q249, q259 and q288, which
-reuse its signatures or pairs), q33, q56 and q182. The DuckDB oracles
-spell the same scheme out in SQL.
+minhashes joined by ``_``), ``lsh_candidates`` (the band join: a
+self-join, optionally inside a block, or a batch against a store) and
+``verified_pairs`` (exact set overlap on the candidates only, via
+``array_intersect``). Every MinHash query builds on these functions:
+q31 (and q69, q249, q259 and q288, which reuse its signatures or
+pairs), q33, q56 and q182. The DuckDB oracles spell the same scheme out
+in SQL.
 
 At 100 TB you never re-shingle the historical corpus per ingest batch:
 the MinHash signature relation (doc_id, shingle set, 8 minhashes) is
@@ -42,16 +43,16 @@ from kinesis_sample_spark.functions.shingles import shingle_array
 N_HASHES = 8
 
 
-def minhash_columns(grams: str | Column, n_hashes: int = N_HASHES) -> list[Column]:
-    """``m0..m{n_hashes-1}``: the MinHash signature of an array column,
-    the minimum of one seeded md5 hash per seed over its elements. Pure
-    array higher-order functions: no explode, no shuffle, O(grams) per
-    row. ``transform`` builds each lambda's expression when it is called,
-    so each lambda sees the seed of its own iteration. The lambda takes
-    one argument: ``transform`` passes the array index to a second."""
+def minhash_columns(grams: str | Column) -> list[Column]:
+    """``m0..m7``: the MinHash signature of an array column, the minimum
+    of one seeded md5 hash per seed over its elements. Pure array
+    higher-order functions: no explode, no shuffle, O(grams) per row.
+    ``transform`` builds each lambda's expression when it is called, so
+    each lambda sees the seed of its own iteration. The lambda takes one
+    argument: ``transform`` passes the array index to a second."""
     return [
         F.array_min(F.transform(grams, lambda x: seeded_md5_long(x, s))).alias(f"m{s}")
-        for s in range(n_hashes)
+        for s in range(N_HASHES)
     ]
 
 
@@ -68,9 +69,7 @@ def minhash_signatures(
     )
 
 
-def lsh_bands(
-    sig: DataFrame, keys: Sequence[str], n_hashes: int = N_HASHES, band_size: int = 4
-) -> DataFrame:
+def lsh_bands(sig: DataFrame, keys: Sequence[str], band_size: int = 4) -> DataFrame:
     """One row per LSH band of each signature: ``keys``, ``band_idx`` and
     ``band_val``, the band's ``band_size`` minhashes joined by ``_``."""
     bands = [
@@ -80,7 +79,7 @@ def lsh_bands(
                 "band_val"
             ),
         )
-        for b in range(n_hashes // band_size)
+        for b in range(N_HASHES // band_size)
     ]
     return sig.select(*keys, F.explode(F.array(*bands)).alias("b")).select(
         *keys, "b.band_idx", "b.band_val"
@@ -90,32 +89,42 @@ def lsh_bands(
 def lsh_candidates(
     sig: DataFrame,
     block: Sequence[str] = (),
-    n_hashes: int = N_HASHES,
     band_size: int = 4,
+    other: DataFrame | None = None,
 ) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) whose signatures collide
-    on one band, and whose ``block`` columns are equal: an equi-join on
-    the block, ``band_idx`` and ``band_val``, never all pairs."""
-    bands = lsh_bands(sig, ("doc_id", *block), n_hashes, band_size)
-    same = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (*block, "band_idx", "band_val")]
+    """Distinct candidate pairs (doc_a, doc_b) whose signatures collide on
+    one band and whose ``block`` columns are equal: an equi-join on the
+    block, ``band_idx`` and ``band_val``, never all pairs. Without
+    ``other`` this is the self-join of ``sig``, each pair once with
+    doc_a < doc_b; with it, doc_a comes from ``sig`` and doc_b from
+    ``other``, whose ids may overlap ``sig``'s."""
+    keys = ("doc_id", *block)
+    bands_a = lsh_bands(sig, keys, band_size)
+    bands_b = bands_a if other is None else lsh_bands(other, keys, band_size)
+    on = functools.reduce(
+        operator.and_,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (*block, "band_idx", "band_val")],
+    )
+    if other is None:
+        on = on & (F.col("a.doc_id") < F.col("b.doc_id"))
     return (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            functools.reduce(operator.and_, same) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        bands_a.alias("a")
+        .join(bands_b.alias("b"), on)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
 
-def verified_pairs(cand: DataFrame, sets: DataFrame, set_col: str) -> DataFrame:
+def verified_pairs(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame, set_col: str
+) -> DataFrame:
     """(doc_a, doc_b, n_inter, n_a, n_b): each candidate pair's exact set
-    intersection and set sizes, from ``sets``' (doc_id, ``set_col``)
-    arrays of distinct elements. JVM-side array ops on the candidates
-    only: no element explode, no shuffle of the sets beyond the joins."""
-    sh_a = sets.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("sh_a"))
-    sh_b = sets.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("sh_b"))
+    intersection and set sizes, doc_a's set read from ``sets_a`` and
+    doc_b's from ``sets_b`` (doc_id, ``set_col``: an array of distinct
+    elements). JVM-side array ops on the candidates only: no element
+    explode, no shuffle of the sets beyond the joins."""
+    sh_a = sets_a.select(F.col("doc_id").alias("doc_a"), F.col(set_col).alias("sh_a"))
+    sh_b = sets_b.select(F.col("doc_id").alias("doc_b"), F.col(set_col).alias("sh_b"))
     return (
         cand.join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
@@ -156,36 +165,13 @@ def dedup_batch_against_store(
     sig_new = minhash_signatures(batch).persist()
     store = spark.read.parquet(store_path)
 
-    cand = (
-        lsh_bands(sig_new, ("doc_id",))
-        .alias("n")
-        .join(
-            lsh_bands(store, ("doc_id",)).alias("o"),
-            (F.col("n.band_idx") == F.col("o.band_idx"))
-            & (F.col("n.band_val") == F.col("o.band_val")),
-        )
-        .select(F.col("n.doc_id").alias("doc_id"), F.col("o.doc_id").alias("dup_of"))
-        .distinct()
-    )
+    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     verified = (
-        cand.join(
-            sig_new.select(F.col("doc_id"), F.col("shs").alias("sh_n")), "doc_id"
-        )
-        .join(
-            store.select(F.col("doc_id").alias("dup_of"), F.col("shs").alias("sh_o")),
-            "dup_of",
-        )
+        verified_pairs(lsh_candidates(sig_new, other=store), sig_new, store, "shs")
         .select(
-            "doc_id",
-            "dup_of",
-            (
-                F.size(F.array_intersect("sh_n", "sh_o"))
-                / (
-                    F.size("sh_n")
-                    + F.size("sh_o")
-                    - F.size(F.array_intersect("sh_n", "sh_o"))
-                )
-            ).alias("jaccard"),
+            F.col("doc_a").alias("doc_id"),
+            F.col("doc_b").alias("dup_of"),
+            jac.alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

@@ -163,7 +163,7 @@ def q31_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     jaccard verification on candidates only. The fixtures contain ~25
     planted near-dup pairs at jaccard ≈ 0.98; threshold 0.8 keeps them and
     rejects the word-soup background."""
-    pairs = _verified_candidate_pairs(spark, sf_dir)
+    pairs = _verified_candidate_pairs(_signatures(spark, sf_dir))
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
         pairs.withColumn("jaccard", jac)
@@ -230,13 +230,13 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _verified_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs with verified shingle-set intersection counts
-    (doc_a, doc_b, n_inter, n_a, n_b) — unfiltered, so different
-    similarity measures (jaccard q31, candidate agreement q259, cluster
-    census q288) share one pipeline."""
-    sig = _signatures(spark, sf_dir)
-    return verified_pairs(lsh_candidates(sig), sig, "shs")
+def _verified_candidate_pairs(sig: DataFrame) -> DataFrame:
+    """LSH candidate pairs of the ``_signatures`` relation ``sig``, with
+    verified shingle-set intersection counts (doc_a, doc_b, n_inter, n_a,
+    n_b) — unfiltered, so different similarity measures (jaccard q31,
+    signature calibration q249, candidate agreement q259, cluster census
+    q288) share one pipeline."""
+    return verified_pairs(lsh_candidates(sig), sig, sig, "shs")
 
 
 # ---------------------------------------------------------------------------
@@ -420,7 +420,7 @@ def q33_chargram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(sequence(1, length(text) - 3), i -> substring(text, i, 4))")
         ).alias("grams"),
     ).persist()
-    pairs = verified_pairs(banded_block_candidates(g), g, "grams")
+    pairs = verified_pairs(banded_block_candidates(g), g, g, "grams")
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     # persist the (tiny) verified pair set before the global sort: the
     # range-partitioner's sampling pass otherwise re-executes the whole

@@ -574,9 +574,9 @@ def q288_dedup_cluster_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the near-dup graph is candidate-blocked and tiny relative to
     the corpus by construction; CC localCheckpoints per round."""
-    from kinesis_sample_spark.queries.dedup import _verified_candidate_pairs
+    from kinesis_sample_spark.queries.dedup import _signatures, _verified_candidate_pairs
 
-    pairs = _verified_candidate_pairs(spark, sf_dir)
+    pairs = _verified_candidate_pairs(_signatures(spark, sf_dir))
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     edges = pairs.filter(jac >= 0.8).select("doc_a", "doc_b").localCheckpoint(
         eager=True

@@ -27,7 +27,7 @@ from kinesis_sample_spark.catalog import load_table
 from kinesis_sample_spark.functions.numeric import sql_double
 from kinesis_sample_spark.functions.shingles import shingle_array
 from kinesis_sample_spark.functions.vectors import cosine, sql_cosine
-from kinesis_sample_spark.operators.incremental import N_HASHES, lsh_candidates, verified_pairs
+from kinesis_sample_spark.operators.incremental import N_HASHES
 from kinesis_sample_spark.queries import query
 from kinesis_sample_spark.queries.dedup import (
     _SQL_CAND_BODY_TEMPLATE,
@@ -289,7 +289,7 @@ def q249_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one persisted signature relation feeds the candidates, their
     # verification and the signature equality counts
     sig = _signatures(spark, sf_dir)
-    pairs = verified_pairs(lsh_candidates(sig), sig, "shs")
+    pairs = _verified_candidate_pairs(sig)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"m{s}").alias(f"a{s}") for s in range(N_HASHES)]
     )
@@ -453,7 +453,7 @@ def q259_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic only inside the 64-doc cap; the diff joins on the pair
     key. (Cap added round 13; no block exceeds it at sf<=0.1, so tested
     outputs are unchanged.)"""
-    pairs = _verified_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = _verified_candidate_pairs(_signatures(spark, sf_dir)).select("doc_a", "doc_b")
     docs = load_table(spark, sf_dir, "documents")
     # Same _LCP_CAP window cap as q245 (rides the blocking shuffle): an
     # uncapped boilerplate-prefix block would go quadratic at scale.

@@ -17,6 +17,11 @@ A ``_live_`` query's DataFrame is the batch read-back of its sink, so
 its operator set is that read-back's, not its streaming plan's; live
 queries that share a group need not duplicate each other.
 
+An operator set names operators, not the expressions inside them: every
+window function runs in one ``Window`` operator, every scalar function
+in a ``Project``. Queries that differ only in those expressions share a
+group without duplicating each other's coverage.
+
 Each query runs once at sf0.01 through ``oracle_harness.run_query``.
 Queries with equal fingerprints form one group; groups are numbered in
 registration order, the order of ``load_registry()``.
@@ -168,6 +173,11 @@ def main() -> None:
         "sort), not of its streaming plan. Live queries with different",
         "streaming plans (joins, aggregates, unions) therefore share a group;",
         "for them a shared group is no evidence of duplication.",
+        "",
+        "An operator set names operators, not the expressions inside them:",
+        "every window function runs in one `Window` operator, every scalar",
+        "function in a `Project`. Queries that differ only in those",
+        "expressions share a group without duplicating each other's coverage.",
         "",
         summary + ".",
         "",
