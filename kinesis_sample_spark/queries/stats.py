@@ -107,11 +107,22 @@ WITH base AS (
     FROM events
 )
 SELECT event_id, user_id, observed,
-       LAST_VALUE(observed IGNORE NULLS) OVER (
+       LAST_VALUE(observed IGNORE NULLS) OVER run AS filled,
+       FIRST_VALUE(observed IGNORE NULLS) OVER run AS first_observed,
+       NTH_VALUE(observed, 2) OVER run AS second_observed,
+       LEAD(observed, 1, -1.0) OVER w AS next_observed,
+       LAG(observed, 2) OVER w AS prev2_observed,
+       PERCENT_RANK() OVER w AS pct_rank,
+       CUME_DIST() OVER w AS cume,
+       NTILE(4) OVER w AS quartile,
+       LAST_VALUE(observed) OVER (
            PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-       ) AS filled
+           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
+       ) AS final_observed
 FROM base
+WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
+       run AS (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ORDER BY event_id
 """,
 )
@@ -119,9 +130,14 @@ def q100_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap repair for sensor-style streams: treat `error` events as missing
     readings and carry the last good value forward per user (IGNORE NULLS
     running window). Complements q55's densification — this fills holes in
-    place, q55 manufactures missing rows. Values pass through untouched
-    (no float arithmetic), so parity is exact. Scale: one hash partition
-    by user_id, sorted within — the same shape as any sessionized scan."""
+    place, q55 manufactures missing rows. The same window also carries
+    every window function no other query sends through the oracle: the
+    IGNORE NULLS first_value and nth_value of the running frame, lead with
+    a default, lag at offset 2, percent_rank, cume_dist, ntile and a
+    CURRENT ROW → UNBOUNDED FOLLOWING frame. Values pass through
+    untouched and the rank ratios divide identical integers, so parity is
+    exact. Scale: one hash partition by user_id, sorted within — the same
+    shape as any sessionized scan; every function shares the one sort."""
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         "event_id",
@@ -129,17 +145,23 @@ def q100_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.when(F.col("event_type") != "error", F.col("value")).alias("observed"),
     )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    fwd = w.rowsBetween(W.currentRow, W.unboundedFollowing)
     return (
         base.select(
             "event_id",
             "user_id",
             "observed",
-            F.last("observed", ignorenulls=True).over(w).alias("filled"),
+            F.last("observed", ignorenulls=True).over(run).alias("filled"),
+            F.first("observed", ignorenulls=True).over(run).alias("first_observed"),
+            F.nth_value("observed", 2).over(run).alias("second_observed"),
+            F.lead("observed", 1, -1.0).over(w).alias("next_observed"),
+            F.lag("observed", 2).over(w).alias("prev2_observed"),
+            F.percent_rank().over(w).alias("pct_rank"),
+            F.cume_dist().over(w).alias("cume"),
+            F.ntile(4).over(w).alias("quartile"),
+            F.last("observed").over(fwd).alias("final_observed"),
         )
         .orderBy("event_id")
     )

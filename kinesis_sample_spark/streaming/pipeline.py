@@ -131,11 +131,12 @@ def drain_to_memory(
     return drain_available_now(writer, what=f"memory drain {name}")
 
 
-def last_emission(emissions: DataFrame, key: str, running: str) -> DataFrame:
+def last_emission(emissions: DataFrame, key: str | list[str], running: str) -> DataFrame:
     """Each ``key``'s final row in an update-mode emission log: the row
-    with the largest ``running`` value. Update mode re-emits a key only
-    when new input arrived, so a running count strictly increases over a
-    key's emissions and its maximum marks the last one."""
+    with the largest ``running`` value (``key`` may name several columns).
+    Update mode re-emits a key only when new input arrived, so a running
+    count strictly increases over a key's emissions and its maximum marks
+    the last one."""
     w = Window.partitionBy(key).orderBy(F.col(running).desc())
     return (
         emissions.withColumn("_emission_rank", F.row_number().over(w))

@@ -115,7 +115,7 @@ class Comparison:
 # green across rounds 1-3 are allowed — notably Spark DateType reaches
 # pandas as object(datetime.date) while DuckDB DATE arrives datetime64,
 # an UNPROVEN pair, so date-typed outputs are rejected outright (surface
-# them as midnight timestamps instead; see q166/q167).
+# them as midnight timestamps instead; see q166).
 # ---------------------------------------------------------------------------
 def _spark_kind(dt) -> str:
     from pyspark.sql import types as T

@@ -1,14 +1,17 @@
 """Crash gate for the consumer's replay contract (A13/A14).
 
-A child process drains ``consume_with_dlq`` and SIGKILLs itself and its
+A child process drains an engine pipeline and SIGKILLs itself and its
 JVM after batch K's sinks are written and before Spark commits batch K's
 offsets — the window a lost lease or a host crash leaves. The restart
 from the same checkpoint replays batch K; the sinks must still hold each
-good record once and each poison record once.
+record's output once. Two pipelines are gated: ``consume_with_dlq``
+(stateless) and ``streaming_window_counts`` (window state, whose batch K
+state version is already written when the kill lands).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import signal
 import subprocess
@@ -19,34 +22,43 @@ import pytest
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
+from kinesis_sample_spark.operators.upsert import write_epoch
 from kinesis_sample_spark.sources.files import replay_events_stream, write_stream_fixture
 from kinesis_sample_spark.streaming.envelope import envelope_from_events
-from kinesis_sample_spark.streaming.pipeline import consume_with_dlq
+from kinesis_sample_spark.streaming.pipeline import (
+    consume_with_dlq,
+    drain_available_now,
+    last_emission,
+    streaming_window_counts,
+)
+from tests.test_streaming import batch_window_counts
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# The child wraps the parquet writer: once batch K's DLQ sink (written
-# after the good sink) is on disk, it kills its whole process group — the
-# Python driver and the JVM it launched — before the offset commit.
+# The child wraps the parquet writer: once batch K's last sink (``last``,
+# written after every other sink of the batch) is on disk, it kills its
+# whole process group — the Python process and the JVM it launched —
+# before the offset commit. ``start`` names the function of this module
+# that starts the drain.
 CHILD = """
 import os, signal, sys
 from pyspark.sql import DataFrameWriter
 from kinesis_sample_spark.session import get_spark
-from tests.test_replay_crash import start_consumer
+from tests import test_replay_crash
 
-events_dir, out, kill_at = sys.argv[1], sys.argv[2], int(sys.argv[3])
+start, events_dir, out, kill_at, last = sys.argv[1:6]
 parquet = DataFrameWriter.parquet
-dlq_writes = []
+last_writes = []
 
 def parquet_then_crash(self, path, *args, **kwargs):
     parquet(self, path, *args, **kwargs)
-    if path.startswith(os.path.join(out, "dlq")):
-        dlq_writes.append(path)
-        if len(dlq_writes) == kill_at + 1:
+    if path.startswith(os.path.join(out, last)):
+        last_writes.append(path)
+        if len(last_writes) == int(kill_at) + 1:
             os.killpg(0, signal.SIGKILL)
 
 DataFrameWriter.parquet = parquet_then_crash
-start_consumer(get_spark("crash-child"), events_dir, out)
+getattr(test_replay_crash, start)(get_spark("crash-child"), events_dir, out)
 sys.exit("the drain finished without reaching the kill point")
 """
 
@@ -67,6 +79,23 @@ def start_consumer(spark, events_dir: str, out: str):
     )
 
 
+def start_window_counts(spark, events_dir: str, out: str):
+    """Drain ``streaming_window_counts`` over the replayed events, one
+    file per batch, in update mode into an epoch-per-batch emission log.
+    The watermark is wider than the fixture's event-time span, so no row
+    is late and the final counts are the batch answer."""
+    env = envelope_from_events(replay_events_stream(spark, events_dir))
+    counts = streaming_window_counts(env, watermark="40 days")
+    return drain_available_now(
+        counts.writeStream.foreachBatch(
+            lambda batch_df, epoch_id: write_epoch(batch_df, f"{out}/emissions", epoch_id)
+        )
+        .outputMode("update")
+        .option("checkpointLocation", f"{out}/ckpt"),
+        what="window counts drain",
+    )
+
+
 def _live_members(pgid: int) -> list[int]:
     """Pids in process group ``pgid`` that have not exited (zombies have)."""
     pids = []
@@ -81,12 +110,12 @@ def _live_members(pgid: int) -> list[int]:
     return pids
 
 
-@pytest.mark.parametrize("kill_at", [0, 2])
-def test_consumer_crash_before_commit_replays_once(spark, sf_dir, tmp_path, kill_at):
-    events_dir = write_stream_fixture(spark, sf_dir, str(tmp_path), n_files=4)
-    out = str(tmp_path / "out")
+def _crash_child(start: str, events_dir: str, out: str, kill_at: int, last: str) -> None:
+    """Run ``start`` in a child that is SIGKILLed after batch ``kill_at``'s
+    ``last`` sink write, and check that the kill landed between that
+    batch's planning and its commit, with no process of the child left."""
     child = subprocess.Popen(
-        [sys.executable, "-c", CHILD, events_dir, out, str(kill_at)],
+        [sys.executable, "-c", CHILD, start, events_dir, out, str(kill_at), last],
         cwd=REPO,
         env=dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g"),
         stdout=subprocess.PIPE,
@@ -106,10 +135,16 @@ def test_consumer_crash_before_commit_replays_once(spark, sf_dir, tmp_path, kill
         assert time.monotonic() < deadline, "the child's JVM outlived it by 30 s"
         time.sleep(0.1)
 
-    # the kill landed after batch K was planned and before its commit
     commits = sorted(int(f) for f in os.listdir(f"{out}/ckpt/commits") if f.isdigit())
     assert commits == list(range(kill_at))
     assert os.path.exists(f"{out}/ckpt/offsets/{kill_at}")
+
+
+@pytest.mark.parametrize("kill_at", [0, 2])
+def test_consumer_crash_before_commit_replays_once(spark, sf_dir, tmp_path, kill_at):
+    events_dir = write_stream_fixture(spark, sf_dir, str(tmp_path), n_files=4)
+    out = str(tmp_path / "out")
+    _crash_child("start_consumer", events_dir, out, kill_at, "dlq")
 
     start_consumer(spark, events_dir, out)
 
@@ -118,3 +153,25 @@ def test_consumer_crash_before_commit_replays_once(spark, sf_dir, tmp_path, kill
     assert len(good) == len(set(good)), "a replayed batch was written twice"
     assert set(good) == {i for i in ids if i % 10 != 0}
     assert spark.read.parquet(f"{out}/dlq").count() == sum(i % 10 == 0 for i in ids)
+
+
+def test_window_counts_crash_before_commit_replays_once(spark, sf_dir, tmp_path):
+    """Batch K's state version K+1 is committed inside its sink write, so
+    the kill leaves it on disk with no offset commit. The restart replays
+    batch K against state K, overwrites version K+1, and must emit each
+    running count once and end on the batch answer."""
+    kill_at = 1
+    events_dir = write_stream_fixture(spark, sf_dir, str(tmp_path), n_files=4)
+    out = str(tmp_path / "out")
+    _crash_child("start_window_counts", events_dir, out, kill_at, "emissions")
+    assert glob.glob(f"{out}/ckpt/state/0/*/{kill_at + 1}.delta")
+
+    start_window_counts(spark, events_dir, out)
+
+    emissions = spark.read.parquet(f"{out}/emissions").drop("epoch")
+    rows = emissions.groupBy("w_start", "partitionKey", "n_records").count()
+    assert rows.filter(F.col("count") > 1).count() == 0, "a replayed batch was emitted twice"
+    final = last_emission(emissions, ["w_start", "partitionKey"], "n_records")
+    expected = batch_window_counts(spark, sf_dir)
+    assert final.exceptAll(expected).count() == 0
+    assert expected.exceptAll(final).count() == 0

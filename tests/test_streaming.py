@@ -5,6 +5,7 @@ batch computation.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -66,14 +67,70 @@ def test_windowed_counts_match_batch(spark, events_dir):
     drain_to_memory(agg, "complete", "t_win")
     streamed = spark.sql("SELECT w_start, partitionKey, n_records FROM t_win")
 
-    batch_env = decode_envelope(envelope_from_events(load_table(spark, SF, "events")))
-    expected = (
+    expected = batch_window_counts(spark, SF)
+    assert streamed.exceptAll(expected).count() == 0
+    assert expected.exceptAll(streamed).count() == 0
+
+
+def batch_window_counts(spark, sf_dir: str):
+    """``streaming_window_counts``' answer over every event, as one batch
+    ``groupBy`` (the fixtures hold no poison record)."""
+    batch_env = decode_envelope(envelope_from_events(load_table(spark, sf_dir, "events")))
+    return (
         batch_env.groupBy(F.window("event_ts", "1 hour").alias("w"), "partitionKey")
         .agg(F.count("*").alias("n_records"))
         .select(F.col("w.start").alias("w_start"), "partitionKey", "n_records")
     )
-    assert streamed.exceptAll(expected).count() == 0
-    assert expected.exceptAll(streamed).count() == 0
+
+
+def _checkpoint_file_manager(spark, path: str) -> str:
+    """Class name of the CheckpointFileManager that Spark builds for
+    ``path`` from the session's Hadoop conf. Offset, commit and source
+    logs use it as is; state stores wrap this same manager in
+    ``ChecksumCheckpointFileManager``, which is unwrapped if present."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), conf
+    )
+    if fm.getClass().getSimpleName() == "ChecksumCheckpointFileManager":
+        underlying = fm.getClass().getDeclaredField("underlyingFileMgr")
+        underlying.setAccessible(True)
+        fm = underlying.get(fm)
+    return fm.getClass().getName()
+
+
+def test_checkpoints_write_through_filesystem_manager(spark, tmp_path):
+    """Every engine session writes streaming checkpoints through
+    FileSystem.create + rename, not the FileContext manager, which starts
+    shell processes per write when no native libhadoop is loaded. The
+    files it leaves must still make a restart exact: no temp file is left
+    behind, batch ids continue and the restored state counts on."""
+    ckpt = str(tmp_path / "ckpt")
+    assert _checkpoint_file_manager(spark, ckpt) == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    events = load_table(spark, SF, "events").withColumn("file", F.col("event_id") % 4)
+    src = str(tmp_path / "src")
+    stream = replay_frame(events, src, 4, by="file")
+    held = str(tmp_path / "part-00003.parquet")
+    os.rename(os.path.join(src, "part-00003.parquet"), held)
+    counts = streaming_window_counts(envelope_from_events(stream), watermark="40 days")
+
+    first = drain_to_memory(counts, "complete", "t_fs_ckpt_1", checkpoint=ckpt)
+    assert [p.batchId for p in batch_progress(first)] == [0, 1, 2]
+    left = [f for _, _, files in os.walk(ckpt) for f in files if f.endswith(".tmp")]
+    assert left == []
+
+    os.rename(held, os.path.join(src, "part-00003.parquet"))
+    second = drain_to_memory(counts, "complete", "t_fs_ckpt_2", checkpoint=ckpt)
+    assert [p.batchId for p in batch_progress(second)] == [3]
+    final = spark.table("t_fs_ckpt_2")
+    expected = batch_window_counts(spark, SF)
+    assert final.exceptAll(expected).count() == 0
+    assert expected.exceptAll(final).count() == 0
 
 
 def test_streaming_dedup_collapses_replay(spark, events_dir):
@@ -321,8 +378,6 @@ def test_stateful_checkpoint_resume(spark, tmp_path):
     The last emission per user across both phases must equal the full
     batch count — if state had restarted from zero, users spanning both
     halves would undercount."""
-    import os
-
     d = str(tmp_path / "ev")
     ck = str(tmp_path / "ck")
     os.makedirs(d)
