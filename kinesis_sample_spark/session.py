@@ -21,14 +21,34 @@ One place to own the engine-wide physical-execution posture:
   libhadoop is loaded (a pip-installed PySpark ships none); that was most
   of a live trigger's fixed cost. A cluster keeps its store's default (HDFS) or an object-store
   manager.
+- The local Hadoop layer kept off the live trigger, from ``jvm/``, which
+  goes first on the driver class path. ``jvm/NioLocalFileSystem.java``,
+  compiled once per source hash, becomes ``fs.file.impl``: Hadoop's
+  checksummed local file system with chmod(2) done in process, where the
+  stock class starts a ``chmod`` process for every file, ``.crc`` and
+  directory it creates. With no ``javac`` the stock class stays and one
+  warning is logged. ``jvm/yarn-default.xml`` is empty and shadows the
+  jar's copy, so the Hadoop Configuration that every write task
+  deserializes carries no YARN keys. A cluster replaces ``fs.file.impl``
+  with its store and a YARN deploy drops the shadow.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
 import tempfile
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_LOCAL_FS_SOURCE = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+_LOCAL_FS_CLASS = "kinesis_sample_spark.jvm.NioLocalFileSystem"
+_JVM_CACHE = os.path.join(tempfile.gettempdir(), "kinesis_sample_spark_jvm")
 
 
 def _cpus() -> int:
@@ -39,6 +59,49 @@ def _driver_memory() -> str:
     physical_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     default = f"{max(1024, min(4096, physical_mb // 4))}m"
     return os.environ.get("SPARK_DRIVER_MEMORY") or default
+
+
+def _javac() -> str | None:
+    java_home = os.environ.get("JAVA_HOME")
+    if java_home and os.access(os.path.join(java_home, "bin", "javac"), os.X_OK):
+        return os.path.join(java_home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def _local_hadoop_conf() -> dict[str, str]:
+    """Spark confs that put ``jvm/`` (the YARN shadow) and the compiled
+    local file system first on the driver class path, compiling the
+    source into ``_JVM_CACHE/<source hash>`` on a cache miss. The
+    compiled directory is renamed into place whole, so sessions that
+    start at once never read a half-written one."""
+    with open(_LOCAL_FS_SOURCE, "rb") as f:
+        classes = os.path.join(_JVM_CACHE, hashlib.sha256(f.read()).hexdigest()[:16])
+    if not os.path.isdir(classes):
+        javac = _javac()
+        if javac is None:
+            logging.getLogger(__name__).warning(
+                "no javac found: Hadoop's local file system will start a chmod "
+                "process for every file and directory it creates"
+            )
+            return {"spark.driver.extraClassPath": _JVM_DIR}
+        jars = os.path.join(_find_spark_home(), "jars", "*")
+        os.makedirs(_JVM_CACHE, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=_JVM_CACHE)
+        try:
+            subprocess.run(
+                [javac, "--release", "17", "-cp", jars, "-d", tmp, _LOCAL_FS_SOURCE],
+                check=True,
+            )
+            try:
+                os.rename(tmp, classes)
+            except OSError:  # another session renamed its copy first
+                pass
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return {
+        "spark.driver.extraClassPath": _JVM_DIR + os.pathsep + classes,
+        "spark.hadoop.fs.file.impl": _LOCAL_FS_CLASS,
+    }
 
 
 def get_spark(app_name: str = "kinesis_sample_spark", cpus: int | None = None) -> SparkSession:
@@ -106,6 +169,16 @@ def get_spark(app_name: str = "kinesis_sample_spark", cpus: int | None = None) -
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # --- local Hadoop layer (local; cluster deploys override) ---
+        # Without libhadoop, each file, .crc and directory that the stock
+        # LocalFileSystem creates starts a chmod process: 1,824 in one
+        # live_windows run. The YARN defaults are 520 of the 1,114 entries
+        # of the Hadoop Configuration that each parquet write task
+        # deserializes twice, at a cost per entry. Measured on 4 cores,
+        # the state+write stage per micro-batch: run 72 -> 40 ms per
+        # task, wall 138 -> 90 ms; live_windows emit p50 507 -> 343 ms
+        # (14 alternated pairs).
+        .config(map=_local_hadoop_conf())
         .config("spark.ui.enabled", "false")
         # managed tables (bucketing) land in tmp, never in the repo; static
         # conf — must be set before the session exists

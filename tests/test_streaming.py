@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import os
 import time
+from xml.etree import ElementTree
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from kinesis_sample_spark.catalog import load_table
@@ -131,6 +133,67 @@ def test_checkpoints_write_through_filesystem_manager(spark, tmp_path):
     expected = batch_window_counts(spark, SF)
     assert final.exceptAll(expected).count() == 0
     assert expected.exceptAll(final).count() == 0
+
+
+def test_local_file_system_sets_modes_in_process_and_keeps_checksums(spark, tmp_path):
+    """``file://`` resolves to the engine's checksummed local file system,
+    which sets permissions without starting a ``chmod`` process. Modes,
+    ``.crc`` files and checksum verification must be what Hadoop's stock
+    ``LocalFileSystem`` gives."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    assert fs.getClass().getName() == "kinesis_sample_spark.jvm.NioLocalFileSystem"
+    assert fs.getClass().getSuperclass().getName() == "org.apache.hadoop.fs.LocalFileSystem"
+
+    Path = jvm.org.apache.hadoop.fs.Path
+    FsPermission = jvm.org.apache.hadoop.fs.permission.FsPermission
+    umask = FsPermission.getUMask(conf).toShort()
+    data, sub = tmp_path / "data.bin", tmp_path / "sub"
+    out = fs.create(Path(str(data)), True)
+    out.write(bytearray(range(100)))
+    out.close()
+    fs.mkdirs(Path(str(sub)))
+    assert data.stat().st_mode & 0o7777 == 0o666 & ~umask
+    assert sub.stat().st_mode & 0o7777 == 0o777 & ~umask
+
+    fs.setPermission(Path(str(data)), FsPermission("600"))
+    assert data.stat().st_mode & 0o7777 == 0o600
+    # NIO cannot set the sticky bit, so this mode takes Hadoop's own path.
+    fs.setPermission(Path(str(sub)), FsPermission("1777"))
+    assert sub.stat().st_mode & 0o7777 == 0o1777
+
+    assert (tmp_path / ".data.bin.crc").is_file()
+    with open(data, "r+b") as f:
+        f.seek(10)
+        f.write(b"\xff")
+    stream = fs.open(Path(str(data)))
+    try:
+        with pytest.raises(Py4JJavaError) as exc:
+            stream.readAllBytes()
+    finally:
+        stream.close()
+    assert exc.value.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException"
+
+
+def test_shipped_hadoop_conf_carries_no_yarn_defaults(spark):
+    """The Hadoop Configuration that write tasks deserialize holds no key
+    from ``yarn-default.xml``: the engine's empty copy shadows the jar's.
+    The core and mapred defaults, which the write committers read, stay."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    job_conf = jvm.org.apache.hadoop.mapreduce.Job.getInstance(conf).getConfiguration()
+    xml = jvm.java.io.StringWriter()
+    job_conf.writeXml(xml)
+    source = {
+        prop.findtext("name"): [s.text for s in prop.findall("source")]
+        for prop in ElementTree.fromstring(xml.toString()).iter("property")
+    }
+    assert [k for k, srcs in source.items() if "yarn-default.xml" in srcs] == []
+    # Spark sets algorithm.version itself; task.cleanup.enabled is a
+    # FileOutputCommitter key that only mapred-default.xml supplies.
+    assert source["mapreduce.fileoutputcommitter.task.cleanup.enabled"] == ["mapred-default.xml"]
+    assert source["fs.defaultFS"] == ["core-default.xml"]
 
 
 def test_streaming_dedup_collapses_replay(spark, events_dir):
